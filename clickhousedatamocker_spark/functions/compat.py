@@ -1544,7 +1544,7 @@ def _pm_gate(name: str, recipe: str):
     return rw
 
 
-# vocab batch 14 (probe-driven, tools/probe14.py): date-interval spellings,
+# vocab batch 14 (probe-driven, probe wave 14): date-interval spellings,
 # map merges, array fill/split family, checked casts, misc predicates, and
 # loud gates for the genuinely non-expressible statistics.
 _PARAMETRIC.update(
@@ -8220,7 +8220,7 @@ _PARAMETRIC.update(
 )
 
 # ---------------------------------------------------------------------------
-# vocab batch 29 (round 11, fifth probe wave; tools/probe_wave29.py): 175 of
+# vocab batch 29 (round 11, fifth probe wave, wave 29): 175 of
 # 193 probed spellings were already answered — this batch closes every
 # remaining UNRESOLVED_ROUTINE fall-through (Julian-day OrNull tails,
 # YYYYMMDDToDate32, the URL cut stragglers, IPv4/IPv6 codec tails, the Joda
@@ -8334,7 +8334,7 @@ _PARAMETRIC2.update(
     }
 )
 
-# -- wave 29b (tools/probe_wave29b.py; 71 of 92 probed spellings already
+# -- wave 29b (probe wave 29b; 71 of 92 probed spellings already
 # answered): median sketch aliases, uniqCombined -If, toUUIDOrDefault,
 # the plural quantilesDeterministic, visibleWidth; Lp norms, byte-level
 # string stats, cartesian polygon measures and WKT points land as scalar
@@ -8394,7 +8394,7 @@ _PARAMETRIC2.update(
 )
 
 
-# -- wave 29c (tools/probe_wave29c.py; 61 of 75 probed spellings already
+# -- wave 29c (probe wave 29c; 61 of 75 probed spellings already
 # answered): the functional comparison family, MySQL-alias strings,
 # checked IP/datetime tails, and the arrayElement out-of-bounds fix.
 # and()/or()/not() function forms stay UNregistered deliberately: their

@@ -147,7 +147,7 @@ def _erf_body() -> str:
 
 
 def _round6_probe_entries() -> list[tuple[str, str, str, str]]:
-    """Round-6 probe-driven vocabulary (tools/probe13.py): integer
+    """Round-6 probe-driven vocabulary (probe wave 13): integer
     exponentials, CH rounding ladders, vector norm/distance spellings,
     JSON path predicates, URL/IPv6 helpers, bit distance, and the
     remaining hash-name family (same documented xxhash64 deviation as
@@ -292,7 +292,7 @@ def _round6_probe_entries() -> list[tuple[str, str, str, str]]:
         ("murmurHash3_64", "(s STRING)", "BIGINT", "xxhash64(s)"),
         # hiveHash: Spark's hash() IS Hive-compatible murmur3-32 over rows
         ("hiveHash", "(s STRING)", "INT", "hash(s)"),
-        # -- batch 14 (tools/probe14.py) ----------------------------------
+        # -- batch 14 (probe wave 14) -------------------------------------
         # ISO-year start = Monday of the week containing Jan 4 of the ISO
         # year (weekday(): Monday = 0)
         (

@@ -9,14 +9,21 @@ Ladder of fidelity/cost, all shuffle-disciplined for 100 TB:
 - minhash_lsh_pairs: the scale path. Shingles → k min-hashes → b bands →
   candidates meet only within a band bucket (linear-ish in corpus size),
   then exact Jaccard verification of candidates only.
-- simhash_64: 64-bit fingerprints; near-dups differ in few bits; bucketing
-  on 16-bit chunks finds all pairs within Hamming distance 3 (pigeonhole).
+- simhash_near_pairs: 64-bit fingerprints; near-dups differ in few bits;
+  bucketing on 16-bit chunks finds all pairs within Hamming distance 3
+  (pigeonhole).
 
-All hashing is xxhash64 (JVM-side, whole-stage codegen) — no Python in any
-hot path.
+MinHash and SimHash each have ONE plan body run on two hash backends. The
+production backend is xxhash64 (JVM-side, whole-stage codegen — no Python
+in any hot path). The cross-engine backend, bound by the ``*_xengine``
+names, is a rolling polynomial hash mod a 30-bit prime that DuckDB can
+recompute, so the shared body is graded value-exact against its
+``*_oracle_sql`` twin and a fix to the body lands in both at once.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -134,6 +141,157 @@ def ngram_jaccard_pairs(
     )
 
 
+# -- hash backends ----------------------------------------------------------
+#
+# xxhash64 is the production family, but no ANSI-SQL engine can recompute
+# it. The cross-engine family (the same rolling polynomial primitive
+# text_analysis.fingerprint hash-matches against DuckDB) makes signatures,
+# banding, candidates and verify recomputable by the *_oracle_sql twins;
+# since the body is shared, that oracle grades the production plan too.
+
+_XP = 1_000_000_007  # 30-bit prime; every intermediate fits a long/BIGINT
+_XA = 1_000_003  # Horner multiplier for combining hash values
+
+
+def _poly_hash(c: Column, mult: int = 31) -> Column:
+    """Rolling polynomial hash of a string column mod ``_XP`` — formula-
+    identical to the DuckDB expression in :func:`_o_poly_hash`."""
+    chars = F.filter(F.split(c, ""), lambda ch: ch != "")
+    return F.aggregate(
+        chars,
+        F.lit(0).cast("long"),
+        lambda acc, ch: (acc * mult + F.coalesce(F.ascii(ch), F.lit(0))) % F.lit(_XP),
+    )
+
+
+def _o_poly_hash(expr: str, mult: int = 31) -> str:
+    """DuckDB expression computing :func:`_poly_hash` of ``expr``."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform(string_split({expr}, ''), ch -> CAST(ascii(ch) AS BIGINT))), "
+        f"(acc, x) -> (acc * {mult} + x) % {_XP})"
+    )
+
+
+def _horner(hs: list[Column]) -> Column:
+    """Horner combine of hash values mod ``_XP`` — the cross-engine
+    counterpart of ``xxhash64(h1, ..., hn)``."""
+    acc = hs[0]
+    for h in hs[1:]:
+        acc = (acc * _XA + h) % F.lit(_XP)
+    return acc
+
+
+def _mh_param(i: int) -> tuple[int, int]:
+    """(a_i, b_i) of the affine MinHash family h_i(x) = (a_i*x + b_i) mod
+    _XP (fixed seeds)."""
+    return ((((i + 1) * 2654435761) % _XP) or 1, ((i + 1) * 40503 + 7) % _XP)
+
+
+def _poly_member(i: int, h: Column) -> Column:
+    a, b = _mh_param(i)
+    return (a * h + b) % F.lit(_XP)
+
+
+class _MinHashBackend(NamedTuple):
+    """The four hash columns the MinHash body is parameterized by."""
+
+    token: Callable[[Column], Column]  # token string -> token hash
+    gram: Callable[[list[Column]], Column]  # n token hashes -> n-gram digest
+    member: Callable[[int, Column], Column]  # (i, digest) -> i-th family hash
+    band: Callable[[list[Column]], Column]  # r signature values -> band hash
+
+
+_XXHASH64 = _MinHashBackend(
+    token=lambda t: F.xxhash64(t),
+    gram=lambda hs: F.xxhash64(*hs),
+    member=lambda i, h: F.xxhash64(F.lit(i), h),
+    band=lambda hs: F.xxhash64(*hs),
+)
+_POLY = _MinHashBackend(
+    token=lambda t: _poly_hash(t), gram=_horner, member=_poly_member, band=_horner
+)
+
+
+# -- MinHash: one body, two backends ------------------------------------------
+
+
+def _minhash_signatures(
+    docs: DataFrame,
+    backend: _MinHashBackend,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    n: int,
+) -> DataFrame:
+    # repartition on the id FIRST: (a) shuffles the small pre-explode rows,
+    # not the ~50x larger shingle rows, (b) parallelizes shingling even when
+    # the source is a single file, (c) the groupBy below reuses the hash
+    # partitioning — no second shuffle (one exchange in the whole plan).
+    # Documents shorter than n tokens have no n-gram and are dropped before
+    # any gram is indexed. Each token is hashed ONCE (one string scan per
+    # token), then a shingle's digest combines n token hashes — no
+    # per-shingle string concat — and the k family members are k cheap
+    # hashes of that digest. Token arrays are materialized columns (no CSE
+    # inside lambdas — see shingles_of_tokens).
+    th = (
+        docs.repartition(F.col(id_col))
+        .select(F.col(id_col), tokens(text_col).alias("__tk"))
+        .filter(F.size("__tk") >= n)
+        .select(F.col(id_col), F.transform("__tk", lambda t: backend.token(t)).alias("__th"))
+    )
+    idx = F.sequence(F.lit(1), F.size("__th") - (n - 1))
+    grams = F.transform(
+        idx, lambda i: backend.gram([F.element_at(F.col("__th"), i + j) for j in range(n)])
+    )
+    sh = th.select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("__h0"))
+    # a min over the exploded distinct digests equals array_min over the
+    # digest array, so both backends keep the single-exchange grouped shape
+    aggs = [F.min(backend.member(i, F.col("__h0"))).alias(f"h{i}") for i in range(num_hashes)]
+    sig = sh.groupBy(id_col).agg(*aggs)
+    signature = F.array(*[f"h{i}" for i in range(num_hashes)])
+    return sig.select(F.col(id_col), signature.alias("signature"))
+
+
+def _minhash_pairs(
+    docs: DataFrame,
+    backend: _MinHashBackend,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    n: int,
+    threshold: float,
+    verify: bool = True,
+) -> DataFrame:
+    sig = _minhash_signatures(docs, backend, id_col, text_col, num_hashes, n)
+    buckets = _band_buckets(sig, backend, id_col, num_hashes, bands)
+    a, b = buckets.alias("a"), buckets.alias("b")
+    candidates = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+    if not verify:
+        return candidates
+    candidates, (sga, sgb) = _verify_prefilter(
+        docs.select(F.col(id_col), F.col(text_col)), candidates, id_col, text_col, n
+    )
+    pairs = (
+        candidates.join(sga, "id_a")
+        .join(sgb, "id_b")
+        .select("id_a", "id_b", jaccard(F.col("__sga"), F.col("__sgb")).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+    pairs.verify_cache = candidates
+    return pairs
+
+
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -142,33 +300,13 @@ def minhash_signatures(
     n: int = 3,
 ) -> DataFrame:
     """Per-doc MinHash signature: for each of ``num_hashes`` seeded hash
-    functions, the min xxhash64 over the doc's shingles.
+    functions, the min xxhash64 over the doc's shingles. Documents with
+    fewer than ``n`` tokens have no shingle and get no signature row.
 
     Single explode + one grouped aggregation with ``num_hashes`` min()
     columns — one shuffle on the doc id, no Python.
     """
-    # repartition on the id FIRST: (a) shuffles the small pre-explode rows,
-    # not the ~50x larger shingle rows, (b) parallelizes shingling even when
-    # the source is a single file, (c) the groupBy below reuses the hash
-    # partitioning — no second shuffle (one exchange in the whole plan).
-    # hash each token to a long ONCE (one string scan per token), then a
-    # shingle's digest is one xxhash64 over n longs — no per-shingle string
-    # concat, and the k-member hash family is k cheap long-input hashes of
-    # that digest. Token arrays are materialized columns (no CSE inside
-    # lambdas — see shingles_of_tokens).
-    th = (
-        docs.repartition(F.col(id_col))
-        .select(F.col(id_col), tokens(text_col).alias("__tk"))
-        .select(F.col(id_col), F.transform(F.col("__tk"), lambda t: F.xxhash64(t)).alias("__th"))
-    )
-    idx = F.sequence(F.lit(1), F.greatest(F.size(F.col("__th")) - (n - 1), F.lit(0)))
-    gram_h = lambda i: F.xxhash64(*[F.element_at(F.col("__th"), i + j) for j in range(n)])  # noqa: E731
-    sh = th.select(
-        F.col(id_col), F.explode(F.array_distinct(F.transform(idx, gram_h))).alias("__h0")
-    )
-    aggs = [F.min(F.xxhash64(F.lit(i), F.col("__h0"))).alias(f"h{i}") for i in range(num_hashes)]
-    sig = sh.groupBy(id_col).agg(*aggs)
-    return sig.select(F.col(id_col), F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
+    return _minhash_signatures(docs, _XXHASH64, id_col, text_col, num_hashes, n)
 
 
 def minhash_lsh_pairs(
@@ -189,36 +327,35 @@ def minhash_lsh_pairs(
     (band, band_hash) buckets — linear in corpus + bucket sizes, never a
     full cross join. Skewed buckets (boilerplate shingles) are the known
     hazard: AQE skew-join splits them.
+
+    With ``verify`` the candidate pairs are persisted (see
+    :func:`_verify_prefilter`) and the returned frame carries that cached
+    frame as ``verify_cache``: the caller unpersists it once the pairs'
+    last action has run.
     """
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes, n)
-    buckets = _band_buckets(sig, id_col, num_hashes, bands)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+    return _minhash_pairs(
+        docs, _XXHASH64, id_col, text_col, num_hashes, bands, n, threshold, verify
     )
-    if not verify:
-        return candidates
-    candidates, (sga, sgb) = _verify_prefilter(
-        docs.select(F.col(id_col), F.col(text_col)), candidates, id_col, text_col, n
-    )
-    return (
-        candidates.join(sga, "id_a")
-        .join(sgb, "id_b")
-        .select("id_a", "id_b", jaccard(F.col("__sga"), F.col("__sgb")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+
+
+def minhash_lsh_pairs_xengine(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 32,
+    bands: int = 8,
+    n: int = 3,
+    threshold: float = 0.2,
+) -> DataFrame:
+    """:func:`minhash_lsh_pairs` (verified, same ``verify_cache`` contract)
+    on the cross-engine hash backend — byte-identical to
+    :func:`minhash_xengine_oracle_sql` run in DuckDB."""
+    return _minhash_pairs(docs, _POLY, id_col, text_col, num_hashes, bands, n, threshold)
 
 
 def _verify_prefilter(
     docs: DataFrame, candidates: DataFrame, id_col: str, text_col: str, n: int
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
     """Semi-join prefilter for the exact-Jaccard verify stage (guide §3.2,
     applied as a broadcast semi-join: PySpark has no DataFrame Bloom-filter
     builder, and the exact id set is small enough to broadcast whole).
@@ -229,9 +366,8 @@ def _verify_prefilter(
     honest stats) to meet a candidate set that is orders of magnitude
     smaller. Now the candidate pairs are
     ``persist()``-ed (the first action computes the signature pipeline
-    exactly once; candidate id pairs are tiny and the ContextCleaner
-    reclaims the cache once unreferenced — a lazy localCheckpoint was
-    tried and leaked blocks across repeated runs), and each verify side's
+    exactly once; a lazy localCheckpoint was tried and leaked blocks
+    across repeated runs), and each verify side's
     id projection BROADCAST-semi-joins the doc scan BEFORE shingling, so
     only candidates' shingles are ever computed or moved. No distinct, no
     separate sizing job: left-semi tolerates duplicate build-side ids, and
@@ -248,6 +384,11 @@ def _verify_prefilter(
     Result-identical: every verified pair's both ids are in the candidate
     id set by construction, so dropping non-candidate rows cannot change
     the join output.
+
+    Cache owner: the persisted candidates are returned first; the pair
+    operators hand them to their caller as ``pairs.verify_cache``, and
+    nothing here unpersists them (the cache manager holds a persisted
+    relation until someone does).
     """
     candidates = candidates.persist()
     # ONE shared broadcast of both sides' ids (no .distinct() — a left-semi
@@ -285,12 +426,15 @@ def _verify_prefilter(
 # the index never stores document text.
 
 
-def _band_buckets(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
+def _band_buckets(
+    sig: DataFrame, backend: _MinHashBackend, id_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """(id, band, bh) rows: each signature's ``bands`` band hashes."""
     r = num_hashes // bands
     band_cols = [
         F.struct(
             F.lit(i).alias("band"),
-            F.xxhash64(*[F.col("signature")[i * r + j] for j in range(r)]).alias("bh"),
+            backend.band([F.col("signature")[i * r + j] for j in range(r)]).alias("bh"),
         )
         for i in range(bands)
     ]
@@ -384,10 +528,10 @@ def signature_est_pairs(
     ``self_pairs`` the two inputs are the same table and only ``id_a <
     id_b`` pairs emit (within-batch dedup). ``broadcast_b`` keeps the a
     side un-shuffled (the index-vs-batch shape)."""
-    bk_a = _band_buckets(sig_a, id_col, num_hashes, bands).select(
+    bk_a = _band_buckets(sig_a, _XXHASH64, id_col, num_hashes, bands).select(
         F.col(id_col).alias("id_a"), "band", "bh"
     )
-    bk_b = _band_buckets(sig_b, id_col, num_hashes, bands).select(
+    bk_b = _band_buckets(sig_b, _XXHASH64, id_col, num_hashes, bands).select(
         F.col(id_col).alias("id_b"), "band", "bh"
     )
     if broadcast_b:
@@ -488,147 +632,65 @@ def incremental_dedup_pairs(
     )
 
 
-# -- cross-engine-hash variants (oracle-checkable) -------------------------
-#
-# xxhash64 (above) is the production hash — JVM codegen, 64-bit, fast — but
-# no ANSI-SQL engine can recompute it, so those paths get rows-only external
-# checks. The *_xengine variants below swap the hash family for a rolling
-# polynomial hash mod a 30-bit prime (the same primitive text_analysis.
-# fingerprint already hash-matches against DuckDB), making the ENTIRE
-# LSH/SimHash pipeline recomputable in SQL: candidate generation, banding,
-# and verification all hash-check against an oracle, not just recall-check
-# against a sample. Plan shapes are identical-or-better (signatures become
-# pure narrow column expressions — zero shuffle before the bucket join).
-
-_XP = 1_000_000_007  # 30-bit prime; every intermediate fits a long/BIGINT
-_XA = 1_000_003  # Horner multiplier for combining hash values
+# -- oracle twins of the cross-engine MinHash --------------------------------
 
 
-def _poly_hash(c: Column, mult: int = 31) -> Column:
-    """Rolling polynomial hash of a string column mod ``_XP`` — formula-
-    identical to the DuckDB expression in :func:`_o_poly_hash`."""
-    chars = F.filter(F.split(c, ""), lambda ch: ch != "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * mult + F.coalesce(F.ascii(ch), F.lit(0))) % F.lit(_XP),
-    )
-
-
-def _o_poly_hash(expr: str, mult: int = 31) -> str:
-    """DuckDB expression computing :func:`_poly_hash` of ``expr``."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(string_split({expr}, ''), ch -> CAST(ascii(ch) AS BIGINT))), "
-        f"(acc, x) -> (acc * {mult} + x) % {_XP})"
-    )
-
-
-def _mh_params(num_hashes: int) -> list[tuple[int, int]]:
-    """Affine MinHash family h_i(x) = (a_i*x + b_i) mod _XP (fixed seeds)."""
-    return [
-        ((((i + 1) * 2654435761) % _XP) or 1, ((i + 1) * 40503 + 7) % _XP)
-        for i in range(num_hashes)
-    ]
-
-
-def minhash_lsh_pairs_xengine(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs with the cross-engine hash family —
-    byte-identical to :func:`minhash_xengine_oracle_sql` run in DuckDB.
-
-    Same banding scheme as :func:`minhash_lsh_pairs` (b bands of r rows,
-    candidates meet only inside a band bucket, exact-Jaccard verify of
-    candidates only). Signature computation here is a pure narrow
-    projection (array_min over transform — no explode, no groupBy): the
-    only shuffles in the whole plan are the band-bucket self-join and the
-    final verify joins.
-    """
-    from clickhousedatamocker_spark.operators.parallelism import (
-        ensure_scan_parallelism,
-    )
-
+def _minhash_xengine_ctes(
+    src: str, id_col: str, text_col: str, num_hashes: int, bands: int, n: int, threshold: float
+) -> str:
+    """DuckDB CTEs ``mh_d`` .. ``mh_pairs`` recomputing the MinHash body on
+    the cross-engine backend over table or CTE ``src``; ``mh_pairs`` holds
+    the verified (id_a, id_b, jaccard) rows. Every oracle that grades a
+    MinHash stage composes these, so only this module knows the formula."""
     r = num_hashes // bands
-    params = _mh_params(num_hashes)
-    # per-character rolling hashes over every token are the plan's hottest
-    # map stage; guard against an unsplittable single-file scan running it
-    # on one task (no-op when the input is already split — guide §2.5)
-    docs = ensure_scan_parallelism(docs, key=id_col)
-    # shingles are NOT carried here: the verify stage recomputes them for
-    # candidate ids only (_verify_prefilter below), so the signature branch
-    # stays a narrow (id, digest-array) projection
-    base = (
-        docs.select(F.col(id_col), tokens(text_col).alias("__tk"))
-        .filter(F.size("__tk") >= n)
-        .select(
-            F.col(id_col),
-            F.transform(F.col("__tk"), lambda tok: _poly_hash(tok)).alias("__th"),
-        )
+    gram = " || ' ' || ".join(f"tk[i+{j}]" for j in range(n))
+    digest = "th[i]"
+    for j in range(1, n):
+        digest = f"({digest} * {_XA} + th[i+{j}]) % {_XP}"
+    sig_exprs = ", ".join(
+        f"list_min(list_transform(dg, x -> ({a} * x + {b}) % {_XP})) AS s{i}"
+        for i, (a, b) in enumerate(map(_mh_param, range(num_hashes)))
     )
 
-    def gram_digest(i: Column) -> Column:
-        acc = F.element_at(F.col("__th"), i)
-        for j in range(1, n):
-            acc = (acc * _XA + F.element_at(F.col("__th"), i + j)) % F.lit(_XP)
-        return acc
-
-    idx = F.sequence(F.lit(1), F.size("__th") - (n - 1))
-    dg = base.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(idx, gram_digest)).alias("__dg"),
-    )
-    def affine(a: int, b: int):
-        return lambda x: (a * x + b) % F.lit(_XP)
-
-    sig_cols = [
-        F.array_min(F.transform(F.col("__dg"), affine(a, b))).alias(f"s{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = dg.select(F.col(id_col), *sig_cols)
-
-    def band_hash(j: int) -> Column:
-        acc = F.col(f"s{j * r}")
+    def band_hash(j: int) -> str:
+        acc = f"s{j * r}"
         for l in range(1, r):
-            acc = (acc * _XA + F.col(f"s{j * r + l}")) % F.lit(_XP)
+            acc = f"({acc} * {_XA} + s{j * r + l}) % {_XP}"
         return acc
 
-    band_cols = [
-        F.struct(F.lit(j).alias("band"), band_hash(j).alias("bh")) for j in range(bands)
-    ]
-    buckets = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("b")).select(
-        id_col, F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    band_rows = " UNION ALL ".join(
+        f"SELECT {id_col}, {j} AS band, {band_hash(j)} AS bh FROM mh_sig" for j in range(bands)
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+    jac = (
+        "len(list_intersect(sa.sg, sb.sg)) * 1.0 "
+        "/ (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg)))"
     )
-    # semi-join prefilter (guide §3.2): shingle only the candidate ids —
-    # the full-corpus shingle arrays no longer shuffle into the verify
-    # joins (same rows as the former dg.select(id, __sg) join: every
-    # verified pair's ids are candidates by construction)
-    candidates, (sga, sgb) = _verify_prefilter(
-        docs.select(F.col(id_col), F.col(text_col)), candidates, id_col, text_col, n
-    )
-    return (
-        candidates.join(sga, "id_a")
-        .join(sgb, "id_b")
-        .select("id_a", "id_b", jaccard(F.col("__sga"), F.col("__sgb")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return f"""mh_d AS (
+  SELECT {id_col}, string_split({text_col}, ' ') tk FROM {src}
+), mh_base AS (
+  SELECT {id_col},
+    list_transform(tk, tt -> {_o_poly_hash('tt')}) th,
+    list_distinct(list_transform(generate_series(1, len(tk)-{n - 1}), i -> {gram})) sg
+  FROM mh_d WHERE len(tk) >= {n}
+), mh_dg AS (
+  SELECT {id_col}, sg,
+    list_distinct(list_transform(generate_series(1, len(th)-{n - 1}), i -> {digest})) dg
+  FROM mh_base
+), mh_sig AS (
+  SELECT {id_col}, {sig_exprs} FROM mh_dg
+), mh_buckets AS (
+  {band_rows}
+), mh_cand AS (
+  SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b
+  FROM mh_buckets a JOIN mh_buckets b
+    ON a.band = b.band AND a.bh = b.bh AND a.{id_col} < b.{id_col}
+), mh_pairs AS (
+  SELECT id_a, id_b, {jac} AS jaccard
+  FROM mh_cand
+  JOIN mh_dg sa ON sa.{id_col} = mh_cand.id_a
+  JOIN mh_dg sb ON sb.{id_col} = mh_cand.id_b
+  WHERE {jac} >= {threshold}
+)"""
 
 
 def minhash_xengine_oracle_sql(
@@ -641,177 +703,8 @@ def minhash_xengine_oracle_sql(
     text_col: str = "text",
 ) -> str:
     """DuckDB SQL recomputing :func:`minhash_lsh_pairs_xengine` exactly."""
-    r = num_hashes // bands
-    params = _mh_params(num_hashes)
-    gram = " || ' ' || ".join(f"tk[i+{j}]" for j in range(n))
-    digest = f"th[i]"
-    for j in range(1, n):
-        digest = f"({digest} * {_XA} + th[i+{j}]) % {_XP}"
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(dg, x -> ({a} * x + {b}) % {_XP})) AS s{i}"
-        for i, (a, b) in enumerate(params)
-    )
-
-    def band_hash(j: int) -> str:
-        acc = f"s{j * r}"
-        for l in range(1, r):
-            acc = f"({acc} * {_XA} + s{j * r + l}) % {_XP}"
-        return acc
-
-    band_rows = " UNION ALL ".join(
-        f"SELECT {id_col}, {j} AS band, {band_hash(j)} AS bh FROM sig" for j in range(bands)
-    )
-    return f"""
-WITH dd AS (
-  SELECT {id_col}, string_split({text_col}, ' ') tk FROM {table}
-), base AS (
-  SELECT {id_col},
-    list_transform(tk, t -> {_o_poly_hash('t')}) th,
-    list_distinct(list_transform(generate_series(1, len(tk)-{n - 1}), i -> {gram})) sg
-  FROM dd WHERE len(tk) >= {n}
-), dg AS (
-  SELECT {id_col}, sg,
-    list_distinct(list_transform(generate_series(1, len(th)-{n - 1}), i -> {digest})) dg
-  FROM base
-), sig AS (
-  SELECT {id_col}, {sig_exprs} FROM dg
-), buckets AS (
-  {band_rows}
-), cand AS (
-  SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.bh = b.bh AND a.{id_col} < b.{id_col}
-)
-SELECT id_a, id_b,
-  len(list_intersect(sa.sg, sb.sg)) * 1.0
-    / (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg))) AS jaccard
-FROM cand
-JOIN dg sa ON sa.{id_col} = cand.id_a
-JOIN dg sb ON sb.{id_col} = cand.id_b
-WHERE len(list_intersect(sa.sg, sb.sg)) * 1.0
-    / (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg))) >= {threshold}
-ORDER BY id_a, id_b
-""".strip()
-
-
-_XBITS = 60  # simhash width for the cross-engine variant (2 x 30-bit halves)
-
-
-# affine spreaders applied on top of the rolling hash: a raw poly hash of a
-# SHORT token is a small number (poly('a') = 97), so its high bits are all
-# zero and per-bit votes skew — multiplying by a large constant mod _XP
-# permutes the field and spreads clustered inputs uniformly.
-_XMIX = ((654435761, 789), (973458113, 321))
-
-
-def simhash_xengine_fp(text_col: str | Column) -> Column:
-    """60-bit cross-engine SimHash: token hash = mix1(poly31(t))*2^30 +
-    mix2(poly37(t)), mix_i an affine spreader mod the 30-bit prime; per bit,
-    majority vote over the doc's distinct tokens."""
-    (a1, b1), (a2, b2) = _XMIX
-    ths = F.transform(
-        F.array_distinct(tokens(text_col)),
-        lambda tok: ((_poly_hash(tok, 31) * a1 + b1) % F.lit(_XP)) * F.lit(1 << 30).cast("long")
-        + ((_poly_hash(tok, 37) * a2 + b2) % F.lit(_XP)),
-    )
-    n_tok = F.size(ths)
-
-    def bit_set(bit: int):
-        return lambda h: F.shiftrightunsigned(h, bit).bitwiseAND(F.lit(1)) == 1
-
-    fp = F.lit(0).cast("long")
-    for bit in range(_XBITS):
-        ones = F.size(F.filter(ths, bit_set(bit)))
-        fp = fp.bitwiseOR(
-            F.when(ones * 2 > n_tok, F.lit(1 << bit).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return fp
-
-
-def simhash_near_pairs_xengine(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs with the cross-engine fingerprint — matches
-    :func:`simhash_xengine_oracle_sql` exactly. Pigeonhole chunk bucketing
-    (max_hamming+1 chunks of 60/(max_hamming+1) bits): any pair within the
-    distance agrees on >= 1 full chunk — no quadratic pass. Fingerprints
-    are a pure narrow projection; the chunk-bucket self-join is the only
-    shuffle."""
-    chunks = max_hamming + 1
-    width = _XBITS // chunks
-    fp = docs.select(F.col(id_col), simhash_xengine_fp(text_col).alias("simhash"))
-    chunk_cols = [
-        F.struct(
-            F.lit(i).alias("chunk"),
-            F.shiftrightunsigned(F.col("simhash"), i * width)
-            .bitwiseAND(F.lit((1 << width) - 1).cast("long"))
-            .alias("cv"),
-        )
-        for i in range(chunks)
-    ]
-    buckets = fp.select(id_col, "simhash", F.explode(F.array(*chunk_cols)).alias("c")).select(
-        id_col, "simhash", F.col("c.chunk").alias("chunk"), F.col("c.cv").alias("cv")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_xengine_oracle_sql(
-    max_hamming: int = 3,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB SQL recomputing :func:`simhash_near_pairs_xengine` exactly."""
-    chunks = max_hamming + 1
-    width = _XBITS // chunks
-    fp_terms = " + ".join(
-        f"CASE WHEN 2 * len(list_filter(th, h -> (h >> {bit}) & 1 = 1)) > len(th) "
-        f"THEN CAST({1 << bit} AS BIGINT) ELSE 0 END"
-        for bit in range(_XBITS)
-    )
-    chunk_rows = " UNION ALL ".join(
-        f"SELECT {id_col}, simhash, {i} AS chunk, (simhash >> {i * width}) & {(1 << width) - 1} AS cv FROM fp"
-        for i in range(chunks)
-    )
-    (a1, b1), (a2, b2) = _XMIX
-    return f"""
-WITH th AS (
-  SELECT {id_col},
-    list_transform(list_distinct(string_split({text_col}, ' ')),
-                   t -> (({_o_poly_hash('t', 31)} * {a1} + {b1}) % {_XP}) * 1073741824
-                        + (({_o_poly_hash('t', 37)} * {a2} + {b2}) % {_XP})) th
-  FROM {table}
-), fp AS (
-  SELECT {id_col}, {fp_terms} AS simhash FROM th
-), buckets AS (
-  {chunk_rows}
-)
-SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b,
-  bit_count(xor(a.simhash, b.simhash)) AS hamming
-FROM buckets a JOIN buckets b
-  ON a.chunk = b.chunk AND a.cv = b.cv AND a.{id_col} < b.{id_col}
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-ORDER BY id_a, id_b
-""".strip()
+    ctes = _minhash_xengine_ctes(table, id_col, text_col, num_hashes, bands, n, threshold)
+    return f"WITH {ctes}\nSELECT id_a, id_b, jaccard FROM mh_pairs ORDER BY id_a, id_b"
 
 
 def connected_components(
@@ -1009,6 +902,9 @@ def fuzzy_dedup_canonical(
     return docs.join(losers, id_col, "left_anti")
 
 
+# -- SimHash: one chunk join, two fingerprints ------------------------------
+
+
 def _bit(i: int):
     """Bit-i mask as a signed long literal (bit 63 is the sign bit)."""
     return F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
@@ -1038,21 +934,18 @@ def simhash_64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     return voted.select(F.col(id_col), fp.alias("simhash"))
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs within Hamming distance ``max_hamming`` of their SimHashes.
+def _simhash_pairs(fp: DataFrame, id_col: str, max_hamming: int, bits: int) -> DataFrame:
+    """Pairs of (id, simhash) rows within Hamming distance ``max_hamming``
+    of their ``bits``-bit fingerprints — the SimHash body both backends
+    share.
 
-    Pigeonhole bucketing: split 64 bits into max_hamming+1 chunks; any pair
-    within the distance agrees on >=1 full chunk, so candidates only meet
-    inside a chunk-value bucket — no quadratic pass.
+    Pigeonhole bucketing: split the bits into max_hamming+1 chunks; any
+    pair within the distance agrees on >=1 full chunk, so candidates only
+    meet inside a chunk-value bucket — no quadratic pass. The chunk-bucket
+    self-join is the only shuffle after the fingerprints.
     """
     chunks = max_hamming + 1
-    width = 64 // chunks
-    fp = simhash_64(docs, id_col, text_col)
+    width = bits // chunks
     chunk_cols = [
         F.struct(
             F.lit(i).alias("chunk"),
@@ -1082,3 +975,102 @@ def simhash_near_pairs(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
+
+
+def simhash_near_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Pairs within Hamming distance ``max_hamming`` of their 64-bit
+    :func:`simhash_64` fingerprints (chunk bucketing: :func:`_simhash_pairs`)."""
+    return _simhash_pairs(simhash_64(docs, id_col, text_col), id_col, max_hamming, 64)
+
+
+_XBITS = 60  # simhash width for the cross-engine variant (2 x 30-bit halves)
+
+
+# affine spreaders applied on top of the rolling hash: a raw poly hash of a
+# SHORT token is a small number (poly('a') = 97), so its high bits are all
+# zero and per-bit votes skew — multiplying by a large constant mod _XP
+# permutes the field and spreads clustered inputs uniformly.
+_XMIX = ((654435761, 789), (973458113, 321))
+
+
+def simhash_xengine_fp(text_col: str | Column) -> Column:
+    """60-bit cross-engine SimHash: token hash = mix1(poly31(t))*2^30 +
+    mix2(poly37(t)), mix_i an affine spreader mod the 30-bit prime; per bit,
+    majority vote over the doc's distinct tokens."""
+    (a1, b1), (a2, b2) = _XMIX
+    ths = F.transform(
+        F.array_distinct(tokens(text_col)),
+        lambda tok: ((_poly_hash(tok, 31) * a1 + b1) % F.lit(_XP)) * F.lit(1 << 30).cast("long")
+        + ((_poly_hash(tok, 37) * a2 + b2) % F.lit(_XP)),
+    )
+    n_tok = F.size(ths)
+
+    def bit_set(bit: int):
+        return lambda h: F.shiftrightunsigned(h, bit).bitwiseAND(F.lit(1)) == 1
+
+    fp = F.lit(0).cast("long")
+    for bit in range(_XBITS):
+        ones = F.size(F.filter(ths, bit_set(bit)))
+        fp = fp.bitwiseOR(
+            F.when(ones * 2 > n_tok, F.lit(1 << bit).cast("long")).otherwise(F.lit(0).cast("long"))
+        )
+    return fp
+
+
+def simhash_near_pairs_xengine(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """:func:`simhash_near_pairs` on the 60-bit cross-engine fingerprint —
+    matches :func:`simhash_xengine_oracle_sql` exactly. Fingerprints are a
+    pure narrow projection; the chunk-bucket self-join is the only
+    shuffle."""
+    fp = docs.select(F.col(id_col), simhash_xengine_fp(text_col).alias("simhash"))
+    return _simhash_pairs(fp, id_col, max_hamming, _XBITS)
+
+
+def simhash_xengine_oracle_sql(
+    max_hamming: int = 3,
+    table: str = "documents",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> str:
+    """DuckDB SQL recomputing :func:`simhash_near_pairs_xengine` exactly."""
+    chunks = max_hamming + 1
+    width = _XBITS // chunks
+    fp_terms = " + ".join(
+        f"CASE WHEN 2 * len(list_filter(th, h -> (h >> {bit}) & 1 = 1)) > len(th) "
+        f"THEN CAST({1 << bit} AS BIGINT) ELSE 0 END"
+        for bit in range(_XBITS)
+    )
+    chunk_rows = " UNION ALL ".join(
+        f"SELECT {id_col}, simhash, {i} AS chunk, (simhash >> {i * width}) & {(1 << width) - 1} AS cv FROM fp"
+        for i in range(chunks)
+    )
+    (a1, b1), (a2, b2) = _XMIX
+    return f"""
+WITH th AS (
+  SELECT {id_col},
+    list_transform(list_distinct(string_split({text_col}, ' ')),
+                   t -> (({_o_poly_hash('t', 31)} * {a1} + {b1}) % {_XP}) * 1073741824
+                        + (({_o_poly_hash('t', 37)} * {a2} + {b2}) % {_XP})) th
+  FROM {table}
+), fp AS (
+  SELECT {id_col}, {fp_terms} AS simhash FROM th
+), buckets AS (
+  {chunk_rows}
+)
+SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b,
+  bit_count(xor(a.simhash, b.simhash)) AS hamming
+FROM buckets a JOIN buckets b
+  ON a.chunk = b.chunk AND a.cv = b.cv AND a.{id_col} < b.{id_col}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+ORDER BY id_a, id_b
+""".strip()

@@ -416,8 +416,8 @@ def dedup_fuzzy_clusters(spark, sf_dir):
     "dedup_minhash_lsh_pairs",
     minhash_xengine_oracle_sql(num_hashes=32, bands=8, n=3, threshold=0.2),
     description="MinHash-LSH near-dup candidates (32 hashes, 8 bands) verified "
-    "by exact Jaccard >= 0.2. The 100TB dedup path: narrow signature "
-    "projection -> band bucket self-join; never a cross join. Hash family is "
+    "by exact Jaccard >= 0.2. The 100TB dedup path: one-shuffle grouped "
+    "signatures -> band bucket self-join; never a cross join. Hash family is "
     "the cross-engine rolling-poly-hash (operators/dedup.py *_xengine), so "
     "the WHOLE pipeline — banding, candidates, verify — hash-checks against "
     "the DuckDB oracle; the xxhash64 production default is recall-asserted "
@@ -1569,7 +1569,7 @@ def pipeline_select_dedup_pack(spark, sf_dir):
         )
         .orderBy("shard")
     )
-    return _materialize_small(report, selected)
+    return _materialize_small(report, selected, pairs.verify_cache)
 
 
 # -------------------------------------------------------------------------
@@ -1594,68 +1594,15 @@ def _pipeline_xengine_oracle_sql(
     floor(T/seq_len)) — no explode needed oracle-side. Shards come from
     the portable Lehmer hash."""
     from clickhousedatamocker_spark.operators.corpus import sample_key_int_oracle_sql
-    from clickhousedatamocker_spark.operators.dedup import _XA, _XP, _mh_params, _o_poly_hash
+    from clickhousedatamocker_spark.operators.dedup import _minhash_xengine_ctes
 
-    r = num_hashes // bands
-    params = _mh_params(num_hashes)
-    gram = " || ' ' || ".join(f"tk[i+{j}]" for j in range(n))
-    digest = "th[i]"
-    for j in range(1, n):
-        digest = f"({digest} * {_XA} + th[i+{j}]) % {_XP}"
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(dgl, x -> ({a} * x + {b}) % {_XP})) AS s{i}"
-        for i, (a, b) in enumerate(params)
-    )
-
-    def band_hash(j: int) -> str:
-        acc = f"s{j * r}"
-        for k in range(1, r):
-            acc = f"({acc} * {_XA} + s{j * r + k}) % {_XP}"
-        return acc
-
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band, {band_hash(j)} AS bh FROM mh_sig"
-        for j in range(bands)
-    )
-    jac = (
-        "len(list_intersect(sa.sg, sb.sg)) * 1.0 "
-        "/ (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg)))"
-    )
     shard = f"({sample_key_int_oracle_sql('doc_id')} % {n_shards})"
     return f"""
 WITH RECURSIVE {_dsir_kept_ctes(num_buckets, keep_fraction)},
 sel AS (
   SELECT dd.doc_id, dd.text FROM documents dd JOIN kept USING (doc_id)
 ),
-mh_d AS (SELECT doc_id, string_split(text, ' ') tk FROM sel),
-mh_base AS (
-  SELECT doc_id,
-    list_transform(tk, tt -> {_o_poly_hash('tt')}) th,
-    list_distinct(list_transform(generate_series(1, len(tk)-{n - 1}), i -> {gram})) sg
-  FROM mh_d WHERE len(tk) >= {n}
-),
-mh_dg AS (
-  SELECT doc_id, sg,
-    list_distinct(list_transform(generate_series(1, len(th)-{n - 1}), i -> {digest})) dgl
-  FROM mh_base
-),
-mh_sig AS (
-  SELECT doc_id, {sig_exprs} FROM mh_dg
-),
-mh_buckets AS (
-  {band_rows}
-),
-mh_cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM mh_buckets a JOIN mh_buckets b
-    ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-),
-mh_pairs AS (
-  SELECT id_a, id_b FROM mh_cand
-  JOIN mh_dg sa ON sa.doc_id = mh_cand.id_a
-  JOIN mh_dg sb ON sb.doc_id = mh_cand.id_b
-  WHERE {jac} >= {threshold}
-),
+{_minhash_xengine_ctes("sel", "doc_id", "text", num_hashes, bands, n, threshold)},
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM mh_pairs
   UNION SELECT id_b, id_a FROM mh_pairs
@@ -1752,7 +1699,7 @@ def pipeline_select_dedup_pack_xengine(spark, sf_dir):
         )
         .orderBy("shard")
     )
-    return _materialize_small(report, selected)
+    return _materialize_small(report, selected, pairs.verify_cache)
 
 
 # -------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Dialect batch 13 (probe-driven, tools/probe13.py): integer exponentials,
+"""Dialect batch 13 (probe-driven, probe wave 13): integer exponentials,
 CH rounding ladders, numeric trunc, vector norms/distances, SQL/JSON path
 predicates, URL/IPv6 helpers, bit distance, the remaining hash-name family,
 and server introspection. Values are goldens from the CH docs / math, not

@@ -1,4 +1,4 @@
-"""Dialect batch 14 (probe-driven, tools/probe14.py): date-interval
+"""Dialect batch 14 (probe-driven, probe wave 14): date-interval
 spellings, map merges, array fill/substr family, range-guarded checked
 casts, misc predicates, mortonDecode(dims, code), and loud gates for the
 non-expressible statistics. Values are goldens from CH docs / math."""

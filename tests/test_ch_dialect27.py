@@ -1,4 +1,4 @@
-"""Dialect batch 27 (round 10, probe wave 27 — tools/probe_wave27.py):
+"""Dialect batch 27 (round 10, probe wave 27):
 every UNRESOLVED_ROUTINE fall-through the wave surfaced, closed as a real
 rewrite or a loud gate. 159 of 190 probed spellings already answered; the
 31 failures triaged here.

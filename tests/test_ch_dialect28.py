@@ -1,4 +1,4 @@
-"""Dialect batch 28 (round 11, probe wave 28 — tools/probe_wave28.py):
+"""Dialect batch 28 (round 11, probe wave 28):
 the -ArgMin/-ArgMax combinator family, port(), the remaining
 hasSubsequence spellings, tupleNames gate — plus goldens pinning
 already-answered wave-28 probes against their public CH docs examples

@@ -1,4 +1,4 @@
-"""Dialect batch 29 (round 11, fifth probe wave — tools/probe_wave29.py):
+"""Dialect batch 29 (round 11, fifth probe wave, wave 29):
 closes the wave's UNRESOLVED_ROUTINE fall-throughs (Julian-day OrNull
 tails, YYYYMMDDToDate32, cutToFirstSignificantSubdomainWithWWW,
 cutURLParameter, IPv4/IPv6 codec tails, the Joda parse family,
@@ -182,7 +182,7 @@ def test_wave29_already_answered_goldens(eng):
     assert r["d"] == [2, 3, 4, 1]
 
 
-# ---- wave 29b (tools/probe_wave29b.py) ------------------------------------
+# ---- probe wave 29b --------------------------------------------------------
 
 
 def test_median_sketch_aliases(eng):
@@ -295,7 +295,7 @@ def test_multi_fuzzy_match_gate(eng):
         eng.sql("SELECT multiFuzzyMatchAny('hello', 1, array('helo')) AS a").collect()
 
 
-# ---- wave 29c (tools/probe_wave29c.py) ------------------------------------
+# ---- probe wave 29c --------------------------------------------------------
 
 
 def test_array_element_out_of_bounds(eng):
@@ -374,7 +374,7 @@ def test_array_join_multiplies_rows(eng):
     assert sorted((r["a"], r["n"]) for r in rows) == [(1, "x"), (2, "x")]
 
 
-# ---- wave 30 (tools/probe_wave30.py) --------------------------------------
+# ---- probe wave 30 ---------------------------------------------------------
 
 
 def test_asof_join_unsupported_form_refuses_loudly(eng):

@@ -532,11 +532,14 @@ def test_pipeline_select_dedup_pack_conserves_tokens(spark):
     ).agg(F.sum("n")).first()[0]
     assert packed_tokens == doc_tokens
 
-    # the registered profile runs and agrees on the totals
+    # the registered profile runs and agrees on the totals, and releases
+    # every relation it cached (the verify stage's candidate pairs too)
+    spark.catalog.clearCache()
     prof = REGISTRY["pipeline_select_dedup_pack"].fn(spark, sf_dir)
     rows = prof.collect()
     assert sum(r["n_tokens"] for r in rows) == doc_tokens
     assert set(prof.columns) == {"shard", "n_sequences", "n_tokens", "n_full"}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ---------------------------------------------------------------------------

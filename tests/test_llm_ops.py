@@ -3,14 +3,19 @@ plumbing, embedding dedup — on fixtures plus injected near-duplicates
 (the random fixture has no true dups; injection makes the checks non-vacuous).
 """
 
+import duckdb
 import pyspark.sql.functions as F
 import pytest
 
 from clickhousedatamocker_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_xengine,
+    minhash_xengine_oracle_sql,
     ngram_jaccard_pairs,
     simhash_near_pairs,
+    simhash_near_pairs_xengine,
+    simhash_xengine_oracle_sql,
 )
 from clickhousedatamocker_spark.operators.multimodal import (
     attach_fake_media,
@@ -37,6 +42,20 @@ def docs_with_dups(spark):
         .withColumn("text", F.concat(F.col("text"), F.lit(" perturbed")))
     )
     return docs.unionByName(dups).cache()
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
+    return con
+
+
+# the production (xxhash64) and cross-engine MinHash twins: one body, two
+# hash backends, so every contract below holds for both
+MINHASH_TWINS = pytest.mark.parametrize(
+    "pairs_fn", [minhash_lsh_pairs, minhash_lsh_pairs_xengine], ids=lambda f: f.__name__
+)
 
 
 def test_exact_dedup_deterministic(spark):
@@ -79,6 +98,55 @@ def test_simhash_finds_injected_dups(spark, docs_with_dups):
     injected = {(r["id_a"], r["id_b"]) for r in pairs if r["id_b"] - r["id_a"] == 100000}
     assert len(injected) >= 15
     assert all(r["hamming"] <= 7 for r in pairs)
+
+
+@MINHASH_TWINS
+def test_minhash_skips_documents_shorter_than_n(spark, pairs_fn):
+    """A document with fewer than n tokens has no n-gram. Both twins drop it
+    before indexing grams (the production twin used to fail on it with
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT) and return exactly the pairs of the
+    corpus without it."""
+    text = "the quick brown fox jumps over the lazy dog"
+    rows = [
+        (1, text),
+        (2, text + " again"),
+        (3, text),
+        (4, "an unrelated sentence about parquet files and spark jobs"),
+    ]
+    short = [(5, "two tokens"), (6, "")]
+    schema = "doc_id long, text string"
+
+    def pairs(data):
+        out = pairs_fn(spark.createDataFrame(data, schema), threshold=0.5)
+        return sorted(tuple(r) for r in out.collect())
+
+    got = pairs(rows + short)
+    assert got == pairs(rows)
+    assert (1, 3, 1.0) in got
+
+
+def test_minhash_xengine_matches_duckdb(spark, duck):
+    """The MinHash body on the cross-engine backend equals its DuckDB twin,
+    pair for pair and Jaccard for Jaccard."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    got = sorted(
+        (r["id_a"], r["id_b"], round(r["jaccard"], 12))
+        for r in minhash_lsh_pairs_xengine(docs).collect()
+    )
+    oracle = duck.execute(minhash_xengine_oracle_sql()).fetchall()
+    want = [(a, b, round(float(j), 12)) for a, b, j in oracle]
+    assert got == want
+    assert len(got) == 28
+
+
+def test_simhash_xengine_matches_duckdb(spark, duck):
+    """The SimHash chunk join on the 60-bit cross-engine fingerprint equals
+    its DuckDB twin."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    got = sorted(tuple(r) for r in simhash_near_pairs_xengine(docs, max_hamming=3).collect())
+    want = [tuple(r) for r in duck.execute(simhash_xengine_oracle_sql(3)).fetchall()]
+    assert got == want
+    assert len(got) == 1205
 
 
 def test_ann_recall_vs_bruteforce(spark):
@@ -1122,18 +1190,36 @@ def test_remove_duplicated_spans_plan_is_scalable(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_minhash_verify_prefilters_before_shingling(spark, docs_with_dups):
+def _plan_nodes(node):
+    """Every node of a JVM physical plan, descending into adaptive plans."""
+    out, stack = [], [node]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@MINHASH_TWINS
+def test_minhash_verify_prefilters_before_shingling(spark, docs_with_dups, pairs_fn):
     """r12: the exact-Jaccard verify stage must semi-join the doc scan by
     candidate ids BEFORE computing/shuffling shingle arrays (the corpus's
     heaviest payload). Plan pin: a LeftSemi join exists, and no Exchange
     sits between the parquet/input scan and that semi-join."""
-    plan = (
-        minhash_lsh_pairs(docs_with_dups, threshold=0.5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "LeftSemi" in plan
+    plan = pairs_fn(docs_with_dups, threshold=0.5)._jdf.queryExecution().executedPlan()
+    semis = [
+        n
+        for n in _plan_nodes(plan)
+        if "Join" in n.nodeName() and n.joinType().toString() == "LeftSemi"
+    ]
+    assert semis
+    for semi in semis:
+        probe = [n.nodeName() for n in _plan_nodes(semi.left())]
+        assert any("Scan" in name for name in probe), probe
+        assert not any("Exchange" in name for name in probe), probe
 
 
 def test_ngram_jaccard_length_bucketing_lossless(spark):
