@@ -31,10 +31,14 @@ bit-for-bit; pinned in tests/test_bq.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from clickhousedatamocker_spark.operators.similarity import as_double
+from clickhousedatamocker_spark.operators.similarity import (
+    as_double,
+    exact_rerank,
+    topk_per_query,
+)
 
 
 def bq_train(emb: DataFrame, vec_col: str = "embedding") -> dict:
@@ -132,11 +136,8 @@ def bq_topk(
     ).select(
         "query_id", "neighbor_id", hamming(F.col("qc"), F.col("cc")).alias("hamming")
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "hamming")
+    return topk_per_query(scored, F.col("hamming"), k).select(
+        "query_id", "rank", "neighbor_id", "hamming"
     )
 
 
@@ -155,31 +156,14 @@ def bq_topk_rerank(
     the corpus encode and once more for shortlist × queries rows — at
     scale the codes live in their own (re-usable) table and the first
     read disappears."""
-    from clickhousedatamocker_spark.operators.similarity import cosine
-
     codes = bq_encode(emb, model, id_col, vec_col)
     qcodes = bq_encode(queries, model, id_col, vec_col)
     short = bq_topk(codes, qcodes, id_col=id_col, k=shortlist)
     qv = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
     )
-    cv = emb.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    rescored = (
-        short.select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    cands = short.select("query_id", "neighbor_id").join(F.broadcast(qv), "query_id")
+    return exact_rerank(cands, emb, k, id_col, vec_col, out="cosine")
 
 
 def bq_xengine_oracle_sql(

@@ -41,8 +41,11 @@ def shingles_of_tokens(tk: Column, n: int = 3) -> Column:
     Catalyst does no common-subexpression elimination inside lambda
     functions, so an inline split would be re-evaluated for every
     ``element_at`` — O(tokens²) per row.
+
+    A document with fewer than ``n`` tokens has no shingles (``sequence``
+    would count DOWN from 1 and index past the array's end).
     """
-    idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - (n - 1), F.lit(0)))
+    idx = F.when(F.size(tk) >= n, F.sequence(F.lit(1), F.size(tk) - (n - 1))).otherwise(F.array())
     gram = lambda i: F.concat_ws(" ", *[F.element_at(tk, i + j) for j in range(n)])  # noqa: E731
     return F.array_distinct(F.transform(idx, gram))
 

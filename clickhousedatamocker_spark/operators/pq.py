@@ -13,11 +13,12 @@ table (ADC: asymmetric distance computation), never the vectors.
 
 Scale discipline (the 100 TB story):
 - Training runs on a deterministic hash sample (``train_sample_mod``) —
-  codebook quality needs a sample, not the corpus. One shuffle per Lloyd
-  iteration for ALL m subspaces together (sub is just a grouping column).
+  codebook quality needs a sample, not the corpus. It is the shared Lloyd
+  loop (similarity._lloyd): one shuffle per iteration for ALL m subspaces
+  together (sub is just a grouping column).
 - Encoding is row-local (Arrow ``mapInPandas`` over a broadcast numpy
-  codebook — plan size O(1) in m*ksub, matching the IVF assignment path's
-  auto-selection rationale at similarity.py:226-236). Zero shuffle.
+  codebook — plan size O(1) in m*ksub, the rationale of the IVF
+  assignment's ``_LITERAL_CODEBOOK_MAX`` auto-selection). Zero shuffle.
 - ADC scoring is pure JVM column math: the per-query LUT (m x ksub
   doubles) travels as DATA on the broadcast query side, and the corpus
   side folds ``sum_m LUT[m][code_m]`` with zip_with/element_at inside
@@ -33,11 +34,31 @@ approximate cosine — same contract as the rest of the similarity stack.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from clickhousedatamocker_spark.operators.similarity import as_double, cosine, dot
+from clickhousedatamocker_spark.operators.similarity import (
+    _INT_LLOYD,
+    _O_COSINE,
+    _centroid_array,
+    _float_backend,
+    _float_train_rows,
+    _ivf_xengine_ctes,
+    _lloyd,
+    _nearest_cid,
+    _probe_cids,
+    _scored_cids,
+    as_double,
+    dot,
+    exact_rerank,
+    ivf_codebook_xengine,
+    materialize_col,
+    quantize_vec,
+    topk_per_query,
+    with_nearest_cid,
+    with_probe_cids,
+)
 
 
 def l2_normalize(vec: Column) -> Column:
@@ -67,74 +88,25 @@ def pq_train(
     (ksub centroids each) over the m subvector slices of the L2-normalized
     corpus.
 
-    All m subspaces train in ONE set of jobs: rows explode to
-    (sub, subvec) and ``sub`` is just a grouping column, so each Lloyd
-    iteration costs one Arrow assignment pass + one (sub, code, pos)
-    grouped-mean shuffle regardless of m. Init is the ksub
-    smallest-xxhash64 rows per subspace (seeded sample, stable across
-    partitionings — same discipline as ivf_train at similarity.py:253).
+    All m subspaces train in ONE set of jobs — the shared Lloyd loop
+    (similarity._lloyd) on the float backend: rows explode to (sub, subvec)
+    and ``sub`` is just a grouping column, so each Lloyd iteration costs
+    one Arrow assignment pass + one (sub, code, pos) grouped-mean shuffle
+    regardless of m. Init is the ksub ids with smallest
+    (xxhash64(id, seed), id), sliced per subspace — the same seed rule as
+    :func:`~clickhousedatamocker_spark.operators.similarity.ivf_train`.
+    Null vectors are skipped; fewer than ksub vectors raises ValueError.
 
     Returns ``codebooks[sub][code] -> subvector`` (m x ksub x dim/m
     doubles on the driver; bounded model state, like the IVF codebook).
     """
     dsub = _check_dims(dim, m)
-    vecs = corpus.select(F.col(id_col).alias("__id"), l2_normalize(as_double(vec_col)).alias("v"))
-    if train_sample_mod is not None:
-        vecs = vecs.filter(
-            F.pmod(F.xxhash64(F.col("__id"), F.lit(seed + 1)), F.lit(train_sample_mod)) == 0
-        )
-    subs = vecs.select(
-        "__id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    F.slice("v", s * dsub + 1, dsub).alias("sv"),
-                )
-                for s in range(m)
-            ])
-        ).alias("e"),
-    ).select("__id", F.col("e.sub").alias("sub"), F.col("e.sv").alias("sv"))
-
-    w = Window.partitionBy("sub").orderBy(F.xxhash64(F.col("__id"), F.lit(seed)), F.col("__id"))
-    init = (
-        subs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= ksub)
-        .select("sub", "__rn", "sv")
-        .collect()
-    )
-    books: list[list[list[float]]] = [[] for _ in range(m)]
-    for r in sorted(init, key=lambda r: (r["sub"], r["__rn"])):
-        books[r["sub"]].append(list(r["sv"]))
-    for s in range(m):
-        if len(books[s]) < ksub:
-            raise ValueError(
-                f"PQ training needs >= ksub rows: subspace {s} saw {len(books[s])} < {ksub}"
-            )
-
-    for _ in range(n_iters):
-        assigned = _assign_codes_subrows(subs, books)
-        means = (
-            assigned.select("sub", "code", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.avg("x").alias("mval"))
-            .collect()
-        )
-        acc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            acc.setdefault((r["sub"], r["code"]), {})[r["pos"]] = r["mval"]
-        books = [
-            [
-                [acc[(s, c)][p] for p in sorted(acc[(s, c)])] if (s, c) in acc else books[s][c]
-                for c in range(ksub)
-            ]
-            for s in range(m)
-        ]
-    return books
+    rows = _float_train_rows(corpus, id_col, l2_normalize(as_double(vec_col)), seed, train_sample_mod)
+    return _lloyd(rows, ksub, n_iters, _float_backend(seed, _assign_codes_subrows), "ksub", m, dsub)
 
 
 def _assign_codes_subrows(subs: DataFrame, books: list[list[list[float]]]) -> DataFrame:
-    """Nearest-code assignment for exploded (sub, sv) rows — Arrow batch,
+    """Nearest-code assignment for exploded (sub, v) rows — Arrow batch,
     broadcast codebooks, squared-L2 with ties to the smaller code (numpy
     argmin picks the first minimum). Row-local, zero shuffle."""
     import numpy as np
@@ -155,7 +127,7 @@ def _assign_codes_subrows(subs: DataFrame, books: list[list[list[float]]]) -> Da
                 continue
             codes = np.zeros(len(pdf), dtype="int32")
             subs_arr = pdf["sub"].to_numpy()
-            SV = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["sv"]])
+            SV = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
             for s in np.unique(subs_arr):
                 mask = subs_arr == s
                 score = halfs[s] - SV[mask] @ BOOKS[s].T
@@ -179,9 +151,10 @@ def pq_encode(
 
     Row-local Arrow pass over a broadcast numpy codebook: one
     (batch x ksub) matmul per subspace, plan size O(1) in the model
-    (the similarity.py:226 rationale — a literal-folded codebook would put
-    m*ksub*dsub doubles in the expression tree). Zero shuffle; the output
-    is the original row + codes, so it composes with any partitioning."""
+    (the ``_LITERAL_CODEBOOK_MAX`` rationale in similarity.py — a
+    literal-folded codebook would put m*ksub*dsub doubles in the
+    expression tree). Zero shuffle; the output is the original row +
+    codes, so it composes with any partitioning."""
     import numpy as np
     import pandas as pd
 
@@ -267,6 +240,26 @@ def _adc_score(codes: Column, lut: Column) -> Column:
     )
 
 
+def _adc_topk(
+    scored: DataFrame,
+    corpus: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    rerank_depth: int,
+) -> DataFrame:
+    """Top-k of ADC-scored (query_id, neighbor_id, qv, adc) rows: the raw
+    ADC scores rounded to 6 places, or — with ``rerank_depth`` > 0 and a
+    ``corpus`` — the exact rerank of the top max(k, rerank_depth). Output:
+    (query_id, rank, neighbor_id, score)."""
+    top = topk_per_query(scored, F.desc("adc"), max(k, rerank_depth))
+    if rerank_depth <= 0 or corpus is None:
+        return top.filter(F.col("rank") <= k).select(
+            "query_id", "rank", "neighbor_id", F.round("adc", 6).alias("score")
+        )
+    return exact_rerank(top, corpus, k, id_col, vec_col)
+
+
 def pq_adc_topk(
     corpus_codes: DataFrame,
     queries: DataFrame,
@@ -307,25 +300,7 @@ def pq_adc_topk(
             _adc_score(F.col("__codes"), F.col("__lut")).alias("adc"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("neighbor_id"))
-    depth = max(k, rerank_depth)
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= depth)
-    if rerank_depth <= 0 or corpus is None:
-        return top.filter(F.col("rank") <= k).select(
-            "query_id", "rank", "neighbor_id", F.round("adc", 6).alias("score")
-        )
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    exact = top.select("query_id", "neighbor_id", "qv").join(cv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("score"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _adc_topk(scored, corpus, id_col, vec_col, k, rerank_depth)
 
 
 def fixed_pq_codebooks(dim: int = 64, m: int = 8, ksub: int = 8) -> list[list[list[float]]]:
@@ -390,8 +365,6 @@ def pq_topk_xengine(
     def normed(col: Column) -> Column:
         nrm = F.sqrt(dot(col, col))
         return F.when(nrm == 0.0, col).otherwise(F.transform(col, lambda x: x / nrm))
-
-    from clickhousedatamocker_spark.operators.similarity import materialize_col
 
     # Generate barriers (materialize_col) between every corpus-side stage:
     # without them CollapseProject inlines (a) the interpreted norm fold
@@ -458,12 +431,7 @@ def pq_topk_xengine(
     scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
         "query_id", "neighbor_id", F.round(dot(F.col("qn"), F.col("__r")), 6).alias("adc")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc")
-    )
+    return topk_per_query(scored, F.desc("adc"), k).select("query_id", "rank", "neighbor_id", "adc")
 
 
 def pq_xengine_oracle_sql(
@@ -555,11 +523,6 @@ def ivfpq_topk(
     restores recall. At 100 TB: queries touch nprobe/n_centroids of the
     corpus, and of that, read only m-byte codes until the final
     R-candidate rerank."""
-    from clickhousedatamocker_spark.operators.similarity import (
-        with_nearest_cid,
-        with_probe_cids,
-    )
-
     c = corpus.select(F.col(id_col), as_double(vec_col).alias("__v"))
     c = with_nearest_cid(c, "__v", centroids, "bucket")
     c = pq_encode(c, codebooks, id_col=id_col, vec_col="__v", out_col="__codes")
@@ -580,21 +543,8 @@ def ivfpq_topk(
             _adc_score(F.col("__codes"), F.col("__lut")).alias("adc"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("neighbor_id"))
-    depth = max(k, rerank_depth)
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= depth)
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    exact = top.select("query_id", "neighbor_id", "qv").join(cv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("score"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    top = topk_per_query(scored, F.desc("adc"), max(k, rerank_depth))
+    return exact_rerank(top, corpus, k, id_col, vec_col)
 
 
 def build_pq_index(
@@ -621,8 +571,6 @@ def build_pq_index(
     like the other serving paths)."""
     import json
     import os
-
-    from clickhousedatamocker_spark.operators.similarity import with_nearest_cid
 
     sidecar = os.path.join(path, "_pq_meta.json")
     meta = {"centroids": centroids, "codebooks": codebooks, "id_col": id_col}
@@ -667,7 +615,6 @@ def pq_query_indexed(
         exclude_tombstoned,
         recover_index,
     )
-    from clickhousedatamocker_spark.operators.similarity import with_probe_cids
 
     recover_index(spark, path)
     with open(os.path.join(path, "_pq_meta.json")) as fh:
@@ -697,46 +644,36 @@ def pq_query_indexed(
             _adc_score(F.col("__codes"), F.col("__lut")).alias("adc"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("neighbor_id"))
-    depth = max(k, rerank_depth)
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= depth)
-    if rerank_depth <= 0 or corpus is None:
-        return top.filter(F.col("rank") <= k).select(
-            "query_id", "rank", "neighbor_id", F.round("adc", 6).alias("score")
-        )
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    exact = top.select("query_id", "neighbor_id", "qv").join(cv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("score"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _adc_topk(scored, corpus, id_col, vec_col, k, rerank_depth)
 
 
 # ---------------------------------------------------------------------------
-# Cross-engine TRAINED IVF-PQ (round-10: grades the trained-codebook path)
+# Cross-engine TRAINED IVF-PQ
 #
 # fixed_pq_codebooks made the PQ *operator* gradable; this makes the PQ
-# *training* gradable. The device is INTEGER k-means: subvectors are
-# quantized to ints (floor(u·1e6) of the L2-normalized vector — sqrt and
-# divide are correctly-rounded IEEE ops, so both engines produce the same
-# doubles and therefore the same ints), centroids stay integer vectors
-# (Lloyd means rounded half-up to ints — a 1e-6 relative perturbation,
-# nothing for codebook quality), and assignment is exact integer L2
-# argmin with first-minimum ties. Every training step is integer
-# arithmetic → a DuckDB CTE chain replays the whole trajectory
-# bit-identically, epoch by epoch, like the classifier's exact trainer.
-#
-# Scale shape: training is n_iters bounded rounds over the (id, s, sub)
-# relation — one argmin projection + ONE (s, c, j) aggregation collected
-# as m·ksub·dsub rows (the codebook, driver-bounded); encode/ADC/rerank
-# reuse the graded pq_topk_xengine discipline (codes in the scan
-# projection, broadcast query side, bucketed candidates, no cartesian).
+# *training* gradable. pq_train and pq_train_xengine are ONE trainer (the
+# shared Lloyd loop, similarity._lloyd) on two backends. The integer
+# backend quantizes subvectors to ints (floor(u·1e6) of the L2-normalized
+# vector — sqrt and divide are correctly-rounded IEEE ops, so both engines
+# produce the same doubles and therefore the same ints), keeps centroids
+# integer (Lloyd means rounded half-up — a 1e-6 relative perturbation,
+# nothing for codebook quality) and assigns by exact integer L2 argmin
+# with first-minimum ties. Every training step is integer arithmetic, so a
+# DuckDB CTE chain replays the whole trajectory bit-identically, epoch by
+# epoch. Encode, ADC and rerank reuse the graded pq_topk_xengine
+# discipline (codes in the scan projection, broadcast query side,
+# bucketed candidates, no cartesian).
+
+
+def _quantized_unit(df: DataFrame, vec: str, out: str, keep: list[str]) -> DataFrame:
+    """Add ``out`` = floor(1e6 * vec/||vec||) (the zero vector stays zero),
+    keeping ``keep``. Generate barriers (materialize_col) make the norm
+    fold run once per row instead of once per element."""
+    df = materialize_col(df, F.sqrt(dot(F.col(vec), F.col(vec))), "__n", keep=keep + [vec])
+    unit = F.when(F.col("__n") == 0.0, F.col(vec)).otherwise(
+        F.transform(F.col(vec), lambda x: x / F.col("__n"))
+    )
+    return materialize_col(df, quantize_vec(unit), out, keep=keep)
 
 
 def pq_train_xengine(
@@ -749,123 +686,16 @@ def pq_train_xengine(
     dim: int = 64,
 ) -> list[list[list[int]]]:
     """Integer Lloyd k-means per subspace over quantized normalized
-    subvectors; returns ``codebooks[s][c] = dsub ints`` (quantized space,
-    scale 1e6) — the values :func:`ivfpq_xengine_oracle_sql` recomputes.
-    Init = the ksub corpus rows with smallest (h(id), id) (the IVF
-    sample-codebook hash); empty clusters keep their previous centroid."""
-    import math
-
-    from clickhousedatamocker_spark.operators.similarity import (
-        _IVF_HA,
-        _IVF_HB,
-        _IVF_HP,
-        materialize_col,
-        quantize_vec,
-    )
-
+    subvectors — the shared Lloyd loop on the integer backend; returns
+    ``codebooks[s][c] = dsub ints`` (quantized space, scale 1e6) — the
+    values :func:`ivfpq_xengine_oracle_sql` recomputes. Init = the ksub
+    non-null corpus rows with smallest (h(id), id) (the IVF sample-codebook
+    hash); empty clusters keep their previous centroid; fewer than ksub
+    vectors raises ValueError."""
     dsub = _check_dims(dim, m)
-    e = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("__id"), as_double(vec_col).alias("__v")
-    )
-    e = materialize_col(e, F.sqrt(dot(F.col("__v"), F.col("__v"))), "__n", keep=["__id", "__v"])
-    e = materialize_col(
-        e,
-        quantize_vec(
-            F.when(F.col("__n") == 0.0, F.col("__v")).otherwise(
-                F.transform(F.col("__v"), lambda x: x / F.col("__n"))
-            )
-        ),
-        "__qu",
-        keep=["__id"],
-    )
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("s"),
-                F.slice(F.col("__qu"), s * dsub + 1, dsub).alias("sub"),
-            )
-            for s in range(m)
-        ]
-    )
-    # persist + explicit unpersist: the driver-side Lloyd loop runs one
-    # action per epoch plus the seed pass over this relation; caching
-    # evaluates the normalize->quantize->explode lineage exactly once.
-    # (A lazy localCheckpoint was tried for plan truncation per the r11
-    # verdict and leaked executor-local blocks across repeated runs —
-    # persist has the clean lifecycle here because training is
-    # self-contained.) All trainer arithmetic is integer and the
-    # partitioning is unchanged, so the codebooks are bit-identical.
-    sub = (
-        e.select("__id", F.explode(subs).alias("x"))
-        .select("__id", F.col("x.s").alias("s"), F.col("x.sub").alias("sub"))
-        .persist()
-    )
-    try:
-        h = (F.lit(_IVF_HA) * F.col("__id") + F.lit(_IVF_HB)) % F.lit(_IVF_HP)
-        # ONE fused seed pass (r12; was two collects, one of which re-ran
-        # the whole e lineage): rows sort by (h, id, s), so the first
-        # ksub*m rows are exactly the m sub-rows of each of the ksub
-        # smallest-(h, id) seed ids — same seeds as the former
-        # orderBy(h, id).limit(ksub) over the one-row-per-id relation.
-        seed = (
-            sub.withColumn("__h", h)
-            .orderBy("__h", "__id", "s")
-            .limit(ksub * m)
-            .collect()
-        )
-        if len(seed) < ksub * m:
-            raise ValueError(f"pq_train_xengine: corpus smaller than ksub={ksub}")
-        seed_ids = []
-        for r in seed:
-            if r["__id"] not in seed_ids:
-                seed_ids.append(r["__id"])
-        seed_rows = {(r["s"], r["__id"]): list(r["sub"]) for r in seed}
-        books = [
-            [[int(x) for x in seed_rows[(s, vid)]] for vid in seed_ids]
-            for s in range(m)
-        ]
-        for _ in range(n_iters):
-            b_lit = F.array(
-                *[
-                    F.array(*[F.lit([int(x) for x in books[s][c]]).cast("array<bigint>") for c in range(ksub)])
-                    for s in range(m)
-                ]
-            )
-            d2 = lambda cv: F.aggregate(  # noqa: E731
-                F.zip_with(F.col("sub"), cv, lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            )
-            scores = F.transform(
-                F.sequence(F.lit(0), F.lit(ksub - 1)),
-                lambda c: F.struct(
-                    d2(
-                        F.element_at(
-                            F.element_at(b_lit, (F.col("s") + 1).cast("int")),
-                            (c + 1).cast("int"),
-                        )
-                    ).alias("d"),
-                    c.cast("int").alias("c"),
-                ),
-            )
-            stats = (
-                sub.withColumn("c", F.array_min(scores)["c"])
-                .select("s", "c", F.posexplode("sub").alias("j", "x"))
-                .groupBy("s", "c", "j")
-                .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-            new_books = [[list(books[s][c]) for c in range(ksub)] for s in range(m)]
-            for r in stats:
-                # floor(double(sum)/count + 0.5): the same IEEE chain the
-                # oracle emits — sums fit a double exactly (≤ ~5e9)
-                new_books[r["s"]][r["c"]][r["j"]] = int(
-                    math.floor(float(r["sx"]) / r["cnt"] + 0.5)
-                )
-            books = new_books
-        return books
-    finally:
-        sub.unpersist()
+    rows = corpus.select(F.col(id_col).alias("__id"), as_double(vec_col).alias("__f"))
+    rows = _quantized_unit(rows, "__f", "__v", keep=["__id"])
+    return _lloyd(rows, ksub, n_iters, _INT_LLOYD, "ksub", m, dsub)
 
 
 def ivfpq_topk_xengine(
@@ -889,69 +719,23 @@ def ivfpq_topk_xengine(
     exact cosine rerank of the top ``rerank_depth``. Same plan shape as
     the production :func:`ivfpq_topk`: codes in the scan projection,
     broadcast query side, bucketed equi-join, never a cartesian."""
-    from clickhousedatamocker_spark.operators.similarity import (
-        _int_probe_cids,
-        ivf_codebook_xengine,
-        materialize_col,
-        quantize_vec,
-    )
-
     dsub = _check_dims(dim, m)
     # null embeddings drop BEFORE codebook seed selection: the oracle's
     # e CTE filters them, so the (h(id), id)-smallest seed rows must be
     # chosen from the same filtered set
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     centroids = ivf_codebook_xengine(corpus, id_col, vec_col, n_centroids)
-    books = pq_train_xengine(corpus, id_col, vec_col, m, ksub, n_iters, dim)
-    b_lit = F.array(
-        *[
-            F.array(*[F.lit([int(x) for x in books[s][c]]).cast("array<bigint>") for c in range(ksub)])
-            for s in range(m)
-        ]
+    books = F.array(
+        *[_centroid_array(b) for b in pq_train_xengine(corpus, id_col, vec_col, m, ksub, n_iters, dim)]
     )
 
-    base = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("__v")
-    )
-    base = base.withColumn(
-        "bucket", F.element_at(_int_probe_cids(quantize_vec(F.col("__v")), centroids, 1), 1)
-    )
-    base = materialize_col(
-        base,
-        F.sqrt(dot(F.col("__v"), F.col("__v"))),
-        "__n",
-        keep=["neighbor_id", "bucket", "__v"],
-    )
-    c = materialize_col(
-        base,
-        quantize_vec(
-            F.when(F.col("__n") == 0.0, F.col("__v")).otherwise(
-                F.transform(F.col("__v"), lambda x: x / F.col("__n"))
-            )
-        ),
-        "__qu",
-        keep=["neighbor_id", "bucket"],
-    )
+    base = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("__v"))
+    base = base.withColumn("bucket", _nearest_cid(quantize_vec(F.col("__v")), centroids))
+    c = _quantized_unit(base, "__v", "__qu", keep=["neighbor_id", "bucket"])
 
     def per_subspace_code(s: Column) -> Column:
         sv = F.slice(F.col("__qu"), s.cast("int") * dsub + 1, dsub)
-        d2 = lambda cv: F.aggregate(  # noqa: E731
-            F.zip_with(sv, cv, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        scores = F.transform(
-            F.sequence(F.lit(0), F.lit(ksub - 1)),
-            lambda cc: F.struct(
-                d2(
-                    F.element_at(
-                        F.element_at(b_lit, (s + 1).cast("int")), (cc + 1).cast("int")
-                    )
-                ).alias("d"),
-                cc.cast("int").alias("c"),
-            ),
-        )
-        return F.array_min(scores)["c"]
+        return F.array_min(_scored_cids(sv, F.element_at(books, (s + 1).cast("int")), True))["cid"]
 
     c = materialize_col(
         c,
@@ -964,9 +748,9 @@ def ivfpq_topk_xengine(
             F.sequence(F.lit(0), F.lit(m - 1)),
             lambda s: F.transform(
                 F.element_at(
-                    F.element_at(b_lit, (s + 1).cast("int")),
+                    F.element_at(books, (s + 1).cast("int")),
                     (F.element_at(F.col("__codes"), (s + 1).cast("int")) + 1).cast("int"),
-                ),
+                )["cv"],
                 lambda x: x.cast("double") / F.lit(1000000.0),
             ),
         )
@@ -983,7 +767,7 @@ def ivfpq_topk_xengine(
             F.transform(F.col("qv"), lambda x: x / qn)
         ),
     ).withColumn(
-        "bucket", F.explode(_int_probe_cids(quantize_vec(F.col("qv")), centroids, nprobe))
+        "bucket", F.explode(_probe_cids(quantize_vec(F.col("qv")), centroids, nprobe))
     )
     scored = (
         c.join(F.broadcast(q), "bucket")
@@ -993,23 +777,8 @@ def ivfpq_topk_xengine(
             F.round(dot(F.col("qn"), F.col("__r")), 6).alias("adc"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("neighbor_id"))
-    depth = max(k, rerank_depth)
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= depth)
-    cv = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv")
-    )
-    exact = top.select("query_id", "neighbor_id", "qv").join(cv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("score"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    top = topk_per_query(scored, F.desc("adc"), max(k, rerank_depth))
+    return exact_rerank(top, corpus, k, id_col, vec_col)
 
 
 def ivfpq_xengine_oracle_sql(
@@ -1028,15 +797,9 @@ def ivfpq_xengine_oracle_sql(
     k-means TRAINING (c0 → c{n_iters} chained CTEs), the coarse sample-
     codebook assignment, encode, ADC and the exact rerank. Keep every
     step in lockstep with the Spark operator."""
-    from clickhousedatamocker_spark.operators.similarity import (
-        _IVF_HA,
-        _IVF_HB,
-        _IVF_HP,
-        _QSCALE,
-    )
+    from clickhousedatamocker_spark.operators.similarity import _QSCALE
 
     dsub = dim // m
-    hid = f"({_IVF_HA} * vec_id + {_IVF_HB}) % {_IVF_HP}"
     d2_pq = (
         f"list_sum(list_transform(generate_series(1, {dsub}), "
         "j -> (sub.sub[j] - c.cv[j]) * (sub.sub[j] - c.cv[j])))"
@@ -1045,16 +808,8 @@ def ivfpq_xengine_oracle_sql(
         f"list_sum(list_transform(generate_series(1, {dim}), "
         "j -> CAST(e.qv[j] - ccb.cv[j] AS DOUBLE) * CAST(e.qv[j] - ccb.cv[j] AS DOUBLE)))"
     )
-    cos = (
-        "round(list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}) "
-        "* list_dot_product({b}, {b})), 6)"
-    )
     parts = [
-        f"""e AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * {_QSCALE}) AS BIGINT)) AS qv
-  FROM {table} WHERE embedding IS NOT NULL
-), n AS MATERIALIZED (
+        f"""{_ivf_xengine_ctes(max(ksub, n_centroids), table)}, n AS MATERIALIZED (
   SELECT vec_id, v,
     list_transform(
       CASE WHEN list_dot_product(v, v) = 0 THEN v
@@ -1064,11 +819,9 @@ def ivfpq_xengine_oracle_sql(
 ), sub AS MATERIALIZED (
   SELECT vec_id, s, qu[((s-1)*{dsub}+1):((s-1)*{dsub}+{dsub})] AS sub
   FROM n CROSS JOIN (SELECT unnest(generate_series(1, {m})) AS s)
-), seed AS MATERIALIZED (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS c
-  FROM e QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {ksub}
 ), c0 AS MATERIALIZED (
-  SELECT sub.s, seed.c, sub.sub AS cv FROM seed JOIN sub USING (vec_id)
+  SELECT sub.s, cb.cid AS c, sub.sub AS cv
+  FROM cb JOIN sub USING (vec_id) WHERE cb.cid < {ksub}
 )"""
     ]
     for it in range(n_iters):
@@ -1105,8 +858,7 @@ def ivfpq_xengine_oracle_sql(
   FROM codes JOIN {cf} cb ON cb.s = codes.s AND cb.c = codes.c
   GROUP BY codes.vec_id
 ), ccb AS MATERIALIZED (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS cid, qv AS cv
-  FROM e QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {n_centroids}
+  SELECT cid, cv FROM cb WHERE cid < {n_centroids}
 ), cad AS MATERIALIZED (
   SELECT e.vec_id, ccb.cid, {d2_coarse} AS d2 FROM e CROSS JOIN ccb
 ), cassign AS MATERIALIZED (
@@ -1132,7 +884,7 @@ def ivfpq_xengine_oracle_sql(
   QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc DESC, neighbor_id)
           <= {max(k, rerank_depth)}
 ), rer AS (
-  SELECT t.query_id, t.neighbor_id, {cos.format(a='qe.v', b='ce.v')} AS score
+  SELECT t.query_id, t.neighbor_id, {_O_COSINE.format(a='qe.v', b='ce.v', places=6)} AS score
   FROM top t
   JOIN e qe ON qe.vec_id = t.query_id
   JOIN e ce ON ce.vec_id = t.neighbor_id

@@ -6,12 +6,34 @@
 - lsh_ann_topk: the scale path — random-hyperplane LSH buckets shrink the
   candidate set to (roughly) corpus/2^planes per probe, then exact rerank.
   Deterministic: hyperplanes derive from a seeded hash, not RNG state.
+- ivf_topk: data-adaptive buckets — each corpus vector lives in its nearest
+  k-means centroid's bucket, each query probes its ``nprobe`` nearest, then
+  exact rerank. build_ann_index / ann_query_indexed persist the buckets as
+  Hive partitions so repeated queries read only the probed ones.
+
+Every k-means codebook of the vector stack — ivf_train and
+ivf_train_xengine here, pq_train and pq_train_xengine in operators/pq.py —
+is trained by ONE Lloyd loop (:func:`_lloyd`) on one of two backends:
+
+- float (the production trainers): xxhash64(id, seed) seeds, squared-L2
+  assignment in doubles, ``avg`` means;
+- integer (the cross-engine ``*_xengine`` trainers): the poly id hash
+  ``_IVF_H*`` for seeds, vectors quantized to floor(x * 1e6), exact integer
+  argmin, ``floor(sum/count + 0.5)`` means — every step is integer
+  arithmetic a DuckDB oracle replays bit-identically, so the graded
+  ``*_oracle_sql`` twins check the training itself.
+
+Every search ends in the same per-query rank window (:func:`topk_per_query`)
+and, where candidates are approximate scores, the same exact-cosine rerank
+(:func:`exact_rerank`).
 
 All vector math is JVM-side (zip_with/aggregate over array<double>); Python
 never touches row data.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +51,61 @@ def dot(a: Column, b: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
+
+
+def topk_per_query(scored: DataFrame, order: Column, k: int) -> DataFrame:
+    """The rank window every search ends in: adds ``rank`` = row_number per
+    ``query_id`` by ``order`` then ``neighbor_id`` (the deterministic
+    tiebreak) and keeps rank <= k. Shuffles only the scored rows."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def exact_rerank(
+    cands: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    out: str = "score",
+) -> DataFrame:
+    """Exact-cosine top-k over approximate candidates: (query_id,
+    neighbor_id, qv) rows join back to the corpus vectors — only the
+    candidates' raw vectors are read — and rank by cosine rounded to 6
+    places. Output: (query_id, rank, neighbor_id, ``out``)."""
+    cv = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
+    exact = cands.select("query_id", "neighbor_id", "qv").join(cv, "neighbor_id").select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias(out),
+    )
+    return topk_per_query(exact, F.desc(out), k).select("query_id", "rank", "neighbor_id", out)
+
+
+def _bucket_topk(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Top-k of the bucketed ANN paths: corpus rows (neighbor_id, cv,
+    bucket) meet the broadcast query rows (query_id, qv, bucket) in one
+    equi-join on ``bucket`` — never a cartesian — and rank by exact cosine.
+    Output: (query_id, rank, neighbor_id, cosine)."""
+    scored = (
+        c.join(F.broadcast(q), "bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"))
+    )
+    return topk_per_query(scored, F.desc("cosine"), k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
+    )
+
+
+def _prefixed(top: DataFrame, prefix: str) -> DataFrame:
+    """(query_id, rank, <prefix>neighbor_id, <prefix>cosine) — the column
+    names the cross-engine ANN twins are joined under."""
+    return top.select(
+        "query_id",
+        "rank",
+        F.col("neighbor_id").alias(f"{prefix}neighbor_id"),
+        F.col("cosine").alias(f"{prefix}cosine"),
+    )
 
 
 def materialize_col(df: DataFrame, expr: Column, name: str, keep: list[str] | None = None) -> DataFrame:
@@ -64,11 +141,8 @@ def brute_force_topk(
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return topk_per_query(scored, F.desc("cosine"), k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 
@@ -132,34 +206,43 @@ def lsh_ann_topk(
             F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(num_planes)
         ]
         q = q.withColumn("bucket", F.explode(F.array(*flips)))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _bucket_topk(c, q, k)
 
 
-def _centroid_array(centroids: list[list[float]]) -> Column:
+def _centroid_array(centroids: list[list]) -> Column:
     """Centroid set as a literal array<struct<cid,cv>> column — the
     SMALL-k path only (k <= _LITERAL_CODEBOOK_MAX): plan size grows with
     k, so large codebooks go through the Arrow broadcast path instead
     (with_probe_cids / with_nearest_cid auto-select). Each centroid vector
-    is ONE array literal — see lsh_bucket."""
+    is ONE array literal — see lsh_bucket. An integer codebook (the
+    quantized cross-engine one) stays array<bigint>."""
+    if _is_int_book(centroids):
+        vec = lambda c: F.lit([int(x) for x in c]).cast("array<bigint>")  # noqa: E731
+    else:
+        vec = lambda c: F.lit([float(x) for x in c])  # noqa: E731
     return F.array(
-        *[
-            F.struct(F.lit(i).alias("cid"), F.lit([float(x) for x in c]).alias("cv"))
-            for i, c in enumerate(centroids)
-        ]
+        *[F.struct(F.lit(i).alias("cid"), vec(c).alias("cv")) for i, c in enumerate(centroids)]
     )
 
 
-def _nearest_cid(vec: Column, centroids: list[list[float]]) -> Column:
+def _is_int_book(centroids: list[list]) -> bool:
+    return isinstance(centroids[0][0], int)
+
+
+def _scored_cids(vec: Column, book: Column, exact_int: bool) -> Column:
+    """(d, cid) struct per centroid of ``book`` (an array<struct<cid,cv>>
+    column), d = squared L2 to ``vec``: a double fold, or an exact long
+    fold for quantized vectors against an integer codebook (magnitudes keep
+    every sum below 2^63). Sorting the structs orders by (d, cid), the
+    first-minimum tie rule both engines share."""
+    zero = F.lit(0).cast("long") if exact_int else F.lit(0.0)
+    d2 = lambda c: F.aggregate(  # noqa: E731
+        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)), zero, lambda a, x: a + x
+    )
+    return F.transform(book, lambda c: F.struct(d2(c["cv"]).alias("d"), c["cid"].alias("cid")))
+
+
+def _nearest_cid(vec: Column, centroids: list[list]) -> Column:
     """Index of the nearest centroid (squared L2) — pure fold over the
     literal codebook, zero shuffle, zero Python; d2 evaluated ONCE per
     centroid (sort of (d, cid) structs), not twice as a compare-and-keep
@@ -167,16 +250,10 @@ def _nearest_cid(vec: Column, centroids: list[list[float]]) -> Column:
     return F.element_at(_probe_cids(vec, centroids, 1), 1)
 
 
-def _probe_cids(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
+def _probe_cids(vec: Column, centroids: list[list], nprobe: int) -> Column:
     """The ``nprobe`` nearest centroid ids, as an array (for multi-bucket
     probing on the query side)."""
-    d2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda a, x: a + x
-    )
-    scored = F.transform(
-        _centroid_array(centroids),
-        lambda c: F.struct(d2(c["cv"]).alias("d"), c["cid"].alias("cid")),
-    )
+    scored = _scored_cids(vec, _centroid_array(centroids), _is_int_book(centroids))
     return F.transform(F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["cid"])
 
 
@@ -264,6 +341,90 @@ def with_nearest_cid(
     )
 
 
+class _LloydBackend(NamedTuple):
+    """The three steps the float and integer k-means trainers differ in."""
+
+    init_hash: Callable[[Column], Column]  # id -> seed order key (ties by id)
+    assign: Callable[[DataFrame, list], DataFrame]  # (sub, v) rows, books -> + "code"
+    mean: Callable[[Column], Column]  # component values of one cluster -> centroid value
+
+
+def _lloyd(
+    rows: DataFrame,
+    k: int,
+    n_iters: int,
+    backend: _LloydBackend,
+    k_name: str,
+    m: int = 1,
+    dsub: int | None = None,
+) -> list[list[list]]:
+    """The Lloyd loop behind every trainer: ``m`` independent k-means with
+    ``k`` centroids each, over the ``dsub``-wide slices of the (__id, __v)
+    training ``rows`` (IVF is the one-subspace case, whole vectors).
+    Returns ``books[sub][code] -> centroid`` on the driver (m x k x dsub
+    values — bounded model state; the data never concentrates).
+
+    - Null vectors drop; the training relation is persisted once for the
+      1 + n_iters driver actions and unpersisted on every exit (a lazy
+      localCheckpoint leaked executor-local blocks across repeated runs).
+      Persisting keeps the source partitioning, so the float means
+      accumulate in the same order and the codebooks are bit-identical
+      run to run.
+    - Seeds: the ``k`` ids with the smallest (init_hash(id), id), sliced
+      per subspace on the driver — a seeded sample, stable across
+      partitionings. Fewer than ``k`` vectors is a ValueError.
+    - Each epoch: assign every (sub, v) slice a code (row-local, zero
+      shuffle), posexplode, then ONE grouped mean over (sub, code, pos) —
+      the only shuffle, for all m subspaces at once. A cluster left empty
+      keeps its previous centroid.
+    """
+    rows = rows.filter(F.col("__v").isNotNull()).persist()
+    try:
+        ordered = rows.withColumn("__h", backend.init_hash(F.col("__id"))).orderBy("__h", "__id")
+        seeds = [r["__v"] for r in ordered.limit(k).select("__v").collect()]
+        if len(seeds) < k:
+            raise ValueError(
+                f"training corpus smaller than {k_name}={k}: {len(seeds)} non-null vectors"
+            )
+        dsub = dsub or len(seeds[0])
+        books = [[list(v[s * dsub : (s + 1) * dsub]) for v in seeds] for s in range(m)]
+        slices = [
+            F.struct(F.lit(s).alias("sub"), F.slice("__v", s * dsub + 1, dsub).alias("v"))
+            for s in range(m)
+        ]
+        subs = rows.select(F.explode(F.array(*slices)).alias("__s")).select("__s.sub", "__s.v")
+        for _ in range(n_iters):
+            stats = (
+                backend.assign(subs, books)
+                .select("sub", "code", F.posexplode("v").alias("pos", "x"))
+                .groupBy("sub", "code", "pos")
+                .agg(backend.mean(F.col("x")).alias("mean"))
+                .collect()
+            )
+            for r in stats:
+                books[r["sub"]][r["code"]][r["pos"]] = r["mean"]
+        return books
+    finally:
+        rows.unpersist()
+
+
+def _float_backend(seed: int, assign: Callable[[DataFrame, list], DataFrame]) -> _LloydBackend:
+    return _LloydBackend(lambda i: F.xxhash64(i, F.lit(seed)), assign, F.avg)
+
+
+def _float_train_rows(
+    corpus: DataFrame, id_col: str, vec: Column, seed: int, train_sample_mod: int | None
+) -> DataFrame:
+    """(__id, __v) rows of the float trainers, optionally the deterministic
+    1/``train_sample_mod`` hash sample."""
+    rows = corpus.select(F.col(id_col).alias("__id"), vec.alias("__v"))
+    if train_sample_mod is None:
+        return rows
+    return rows.filter(
+        F.pmod(F.xxhash64(F.col("__id"), F.lit(seed + 1)), F.lit(train_sample_mod)) == 0
+    )
+
+
 def ivf_train(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -273,14 +434,14 @@ def ivf_train(
     seed: int = 42,
     train_sample_mod: int | None = None,
 ) -> list[list[float]]:
-    """Deterministic distributed k-means codebook (the IVF 'train' step).
+    """Deterministic distributed k-means codebook (the IVF 'train' step):
+    :func:`_lloyd` on the float backend over whole vectors.
 
-    Init: the ``n_centroids`` rows with smallest xxhash64(id, seed) — a
-    seeded pseudo-random sample, stable across partitionings. Each Lloyd
-    iteration: assignment is a zero-shuffle projection against the literal
-    codebook; the update is one (cid, dim) grouped mean — the only shuffle,
-    over posexploded (cid, pos, x) rows. Centroids (k x dim doubles) live on
-    the driver: at 100 TB the data never concentrates anywhere.
+    Init: the ``n_centroids`` rows with smallest (xxhash64(id, seed), id).
+    Each Lloyd iteration: assignment is a zero-shuffle projection against
+    the literal codebook (:func:`with_nearest_cid`); the update is one
+    grouped mean — the only shuffle. Null vectors are skipped; a corpus
+    with fewer than ``n_centroids`` vectors raises ValueError.
 
     ``train_sample_mod``: at scale, train on the deterministic 1/mod hash
     sample of the corpus (``xxhash64(id, seed) % mod == 0``) — codebook
@@ -288,49 +449,9 @@ def ivf_train(
     (k-means on a 100 TB corpus is pointless and slow; on a 1/10^4 sample
     it is neither). ``None`` trains on everything.
     """
-    vecs = corpus.select(F.col(id_col), as_double(vec_col).alias("v"))
-    if train_sample_mod is not None:
-        vecs = vecs.filter(
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed + 1)), F.lit(train_sample_mod)) == 0
-        )
-    # materialize the (id, double-vector) training set ONCE: every Lloyd
-    # iteration plus the init otherwise re-scans the source and re-converts
-    # the vectors (n_iters+1 passes). Partitioning is unchanged, so the
-    # grouped-mean float accumulation order — and therefore the codebook —
-    # is bit-identical. persist(), not localCheckpoint (r12): lazy like
-    # the checkpoint was NOT (plan-only consumers no longer trigger a
-    # training job at construction — the ADVICE item), with an explicit
-    # unpersist at the end of the training loop (repeated runs of the
-    # checkpoint variant accumulated executor-local blocks; persist has a
-    # clean lifecycle here because training is self-contained).
-    vecs = vecs.persist()
-    try:
-        init = (
-            vecs.withColumn("__r", F.xxhash64(F.col(id_col), F.lit(seed)))
-            .orderBy("__r")
-            .limit(n_centroids)
-            .select("v")
-            .collect()
-        )
-        centroids = [list(r["v"]) for r in init]
-        for _ in range(n_iters):
-            assigned = with_nearest_cid(vecs, "v", centroids, "cid").select("cid", "v")
-            means = (
-                assigned.select("cid", F.posexplode("v").alias("pos", "x"))
-                .groupBy("cid", "pos")
-                .agg(F.avg("x").alias("m"))
-                .collect()
-            )
-            by_cid: dict[int, dict[int, float]] = {}
-            for r in means:
-                by_cid.setdefault(r["cid"], {})[r["pos"]] = r["m"]
-            centroids = [
-                [by_cid[i][p] for p in sorted(by_cid[i])] if i in by_cid else centroids[i]
-                for i in range(n_centroids)
-            ]
-        return centroids
-    finally:
-        vecs.unpersist()
+    rows = _float_train_rows(corpus, id_col, as_double(vec_col), seed, train_sample_mod)
+    assign = lambda subs, books: with_nearest_cid(subs, "v", books[0], "code")  # noqa: E731
+    return _lloyd(rows, n_centroids, n_iters, _float_backend(seed, assign), "n_centroids")[0]
 
 
 def ivf_topk(
@@ -362,17 +483,7 @@ def ivf_topk(
     q = with_probe_cids(q, "qv", centroids, nprobe, "__probes").withColumn(
         "bucket", F.explode("__probes")
     ).drop("__probes")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _bucket_topk(c, q, k)
 
 
 def embedding_near_dup_pairs(
@@ -503,19 +614,7 @@ def ann_query_indexed(
         spark.read.parquet(path).filter(F.col("bucket").isin(probed)),
         id_col,
     ).select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"), "bucket")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _bucket_topk(c, q, k)
 
 
 # ---------------------------------------------------------------------------
@@ -526,13 +625,18 @@ def ann_query_indexed(
 # bit-for-bit. These twins quantize every vector to integers
 # (floor(x * 1e6) as 64-bit int — exact for any IEEE double in both
 # engines) and do ALL bucketing math in integer arithmetic, so a DuckDB
-# oracle can recompute the WHOLE pipeline — hyperplane buckets / codebook
-# selection, candidate equi-joins, exact cosine rerank — hash-exactly.
+# oracle can recompute the WHOLE pipeline — hyperplane buckets, k-means
+# training, candidate equi-joins, exact cosine rerank — hash-exactly.
 # Magnitudes: |q| <= ~2^21 for unit-ish embeddings, so every intermediate
 # (projections ~1e10, squared distances ~1e14) is exactly representable
-# even where an engine promotes to double. The plan SHAPE is identical to
-# the production paths: bucketed equi-join + broadcast query side, never a
-# cross join.
+# even where an engine promotes to double.
+#
+# Training is the production trainer's own loop (_lloyd) on the integer
+# backend (_INT_LLOYD); the sample codebook is that trainer with no epoch.
+# The search is the production plan shape: bucketed equi-join + broadcast
+# query side, never a cross join. On the DuckDB side every IVF oracle
+# composes _ivf_xengine_ctes, so the quantization and seed rule are spelled
+# once per engine.
 
 
 def _int_hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[int]]:
@@ -599,24 +703,7 @@ def lsh_ann_topk_xengine(
             F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(num_planes)
         ]
         q = q.withColumn("bucket", F.explode(F.array(*flips)))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            F.col("neighbor_id").alias(f"{out_prefix}neighbor_id"),
-            F.col("cosine").alias(f"{out_prefix}cosine"),
-        )
-    )
+    return _prefixed(_bucket_topk(c, q, k), out_prefix)
 
 
 # deterministic integer id-hash for codebook row selection (both engines can
@@ -624,47 +711,84 @@ def lsh_ann_topk_xengine(
 _IVF_HA, _IVF_HB, _IVF_HP = 48271, 11, 1_000_003
 
 
+def _assign_int(subs: DataFrame, books: list[list[list[int]]]) -> DataFrame:
+    """The integer trainers' assignment: each (sub, v) row's code is the
+    exact integer L2 argmin over its subspace's codebook, first minimum
+    (smallest code) on ties."""
+    book = F.element_at(F.array(*[_centroid_array(b) for b in books]), F.col("sub") + 1)
+    return subs.withColumn("code", F.array_min(_scored_cids(F.col("v"), book, True))["cid"])
+
+
+# seeds by (h(id), id); means floor(double(sum)/count + 0.5) — one fixed
+# IEEE op chain both engines evaluate identically (sums stay far below 2^53)
+_INT_LLOYD = _LloydBackend(
+    lambda i: (F.lit(_IVF_HA) * i + F.lit(_IVF_HB)) % F.lit(_IVF_HP),
+    _assign_int,
+    lambda x: F.floor(F.sum(x).cast("double") / F.count(F.lit(1)) + F.lit(0.5)),
+)
+
+
+def ivf_train_xengine(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_centroids: int = 8,
+    n_iters: int = 2,
+) -> list[list[int]]:
+    """INTEGER Lloyd k-means over the full quantized vectors: :func:`_lloyd`
+    on the integer backend, so the TRAINED coarse codebook itself is
+    cross-engine replayable (:func:`ivf_trained_oracle_sql`). Centroids
+    stay integer vectors (floor(x*1e6) quantization of the raw doubles; no
+    normalization needed — the raw parquet doubles are already identical
+    in both engines), assignment is exact integer L2 argmin with
+    first-minimum (cid) ties, and the Lloyd mean is floor(double(sum)/count
+    + 0.5). Init = the n_centroids non-null corpus rows with smallest
+    (h(id), id); empty clusters keep their previous centroid; a corpus
+    smaller than n_centroids raises ValueError.
+
+    Scale shape: per epoch ONE bounded (cid, j) aggregation over the
+    corpus (k*dim rows collected — driver state is the codebook, never
+    data); assignment is a zero-shuffle map against broadcast literals."""
+    rows = corpus.select(F.col(id_col).alias("__id"), as_double(vec_col).alias("__f"))
+    rows = materialize_col(rows, quantize_vec(F.col("__f")), "__v", keep=["__id"])
+    return _lloyd(rows, n_centroids, n_iters, _INT_LLOYD, "n_centroids")[0]
+
+
 def ivf_codebook_xengine(
     corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", n_centroids: int = 8
 ) -> list[list[int]]:
-    """Sample-codebook IVF 'train': the ``n_centroids`` corpus rows with
-    smallest (h(id), id), quantized. Driver state is k x dim ints — at 100 TB
-    the selection is one TakeOrdered, nothing else concentrates."""
-    h = (F.lit(_IVF_HA) * F.col(id_col) + F.lit(_IVF_HB)) % F.lit(_IVF_HP)
-    rows = (
-        corpus.select(F.col(id_col), quantize_vec(as_double(vec_col)).alias("qv"), h.alias("h"))
-        .orderBy("h", id_col)
-        .limit(n_centroids)
-        .collect()
-    )
-    return [list(r["qv"]) for r in rows]
+    """Sample-codebook IVF 'train': :func:`ivf_train_xengine` with no Lloyd
+    epoch — the ``n_centroids`` non-null corpus rows with smallest
+    (h(id), id), quantized."""
+    return ivf_train_xengine(corpus, id_col, vec_col, n_centroids, n_iters=0)
 
 
-def _int_centroid_array(centroids: list[list[int]]) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cid"),
-                F.lit([int(x) for x in c]).cast("array<bigint>").alias("cv"),
-            )
-            for i, c in enumerate(centroids)
-        ]
+def ivf_topk_trained_xengine(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    n_centroids: int = 8,
+    nprobe: int = 3,
+    n_iters: int = 2,
+) -> DataFrame:
+    """IVF ANN under a TRAINED integer-k-means codebook
+    (:func:`ivf_train_xengine`), cross-engine exact end to end. Same join
+    discipline as the production :func:`ivf_topk`: broadcast query side,
+    bucketed equi-join, exact cosine rerank rounded to 6 places, never a
+    cartesian. Output: (query_id, rank, neighbor_id, cosine)."""
+    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    centroids = ivf_train_xengine(corpus, id_col, vec_col, n_centroids, n_iters)
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
+    c = c.withColumn("bucket", _nearest_cid(quantize_vec(F.col("cv")), centroids))
+    q = queries.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
     )
-
-
-def _int_probe_cids(qvec: Column, centroids: list[list[int]], nprobe: int) -> Column:
-    """The nprobe nearest centroid ids by exact integer squared L2, ties by
-    cid — array of ints."""
-    d2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(qvec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
+    q = q.withColumn(
+        "bucket", F.explode(_probe_cids(quantize_vec(F.col("qv")), centroids, nprobe))
     )
-    scored = F.transform(
-        _int_centroid_array(centroids),
-        lambda c: F.struct(d2(c["cv"]).alias("d"), c["cid"].alias("cid")),
-    )
-    return F.transform(F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["cid"])
+    return _bucket_topk(c, q, k)
 
 
 def ivf_topk_xengine(
@@ -677,34 +801,37 @@ def ivf_topk_xengine(
     nprobe: int = 3,
     out_prefix: str = "ivf_",
 ) -> DataFrame:
-    """IVF ANN with the integer sample codebook; same join discipline as
-    :func:`ivf_topk`. Output: (query_id, rank, <prefix>neighbor_id,
+    """IVF ANN with the integer sample codebook: :func:`ivf_topk_trained_xengine`
+    with no Lloyd epoch. Output: (query_id, rank, <prefix>neighbor_id,
     <prefix>cosine)."""
-    centroids = ivf_codebook_xengine(corpus, id_col, vec_col, n_centroids)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    c = c.withColumn(
-        "bucket", F.element_at(_int_probe_cids(quantize_vec(F.col("cv")), centroids, 1), 1)
+    top = ivf_topk_trained_xengine(
+        corpus, queries, id_col, vec_col, k, n_centroids, nprobe, n_iters=0
     )
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"))
-    q = q.withColumn("bucket", F.explode(_int_probe_cids(quantize_vec(F.col("qv")), centroids, nprobe)))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            F.col("neighbor_id").alias(f"{out_prefix}neighbor_id"),
-            F.col("cosine").alias(f"{out_prefix}cosine"),
-        )
-    )
+    return _prefixed(top, out_prefix)
+
+
+def _ivf_xengine_ctes(n_seeds: int, table: str = "embeddings") -> str:
+    """DuckDB CTEs ``e`` (vec_id, v, qv) — the non-null embeddings and
+    their floor(x*1e6) quantization — and ``cb`` (cid, vec_id, cv) — the
+    integer trainer's seeds: the ``n_seeds`` rows with smallest
+    (h(id), id), cid = rank from 0. Every IVF oracle composes these (a
+    k-seed codebook is ``cb WHERE cid < k``), so only this module knows
+    the quantization and the seed rule."""
+    hid = f"({_IVF_HA} * vec_id + {_IVF_HB}) % {_IVF_HP}"
+    return f"""e AS MATERIALIZED (
+  SELECT vec_id, embedding::DOUBLE[] AS v,
+         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * {_QSCALE}) AS BIGINT)) AS qv
+  FROM {table} WHERE embedding IS NOT NULL
+), cb AS MATERIALIZED (
+  SELECT CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS cid, vec_id, qv AS cv
+  FROM e QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {n_seeds}
+)"""
+
+
+_O_COSINE = (
+    "round(list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}) "
+    "* list_dot_product({b}, {b})), {places})"
+)
 
 
 def ann_xengine_oracle_sql(
@@ -736,21 +863,13 @@ def ann_xengine_oracle_sql(
     probes = "[CAST(bucket AS BIGINT)" + "".join(
         f", xor(CAST(bucket AS BIGINT), {1 << i})" for i in range(num_planes)
     ) + "]"
-    cos = (
-        "round(list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}) "
-        "* list_dot_product({b}, {b})), 6)"
-    )
+    cos = lambda a, b: _O_COSINE.format(a=a, b=b, places=6)  # noqa: E731
     d2 = (
         f"list_sum(list_transform(generate_series(1, {dim}), "
         "j -> CAST(e.qv[j] - cb.cv[j] AS DOUBLE) * CAST(e.qv[j] - cb.cv[j] AS DOUBLE)))"
     )
-    hid = f"({_IVF_HA} * vec_id + {_IVF_HB}) % {_IVF_HP}"
     return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * {_QSCALE}) AS BIGINT)) AS qv
-  FROM embeddings
-),
+WITH {_ivf_xengine_ctes(n_centroids)},
 lb AS (SELECT vec_id, v, {bucket_expr('qv')} AS bucket FROM e),
 lq AS (
   SELECT vec_id, v, unnest({probes}) AS bucket FROM lb WHERE {query_pred}
@@ -761,15 +880,10 @@ lsh_topk AS (
          neighbor_id, cosine
   FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {cos.format(a='q.v', b='c.v')} AS cosine
+           {cos('q.v', 'c.v')} AS cosine
     FROM lq q JOIN lb c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
   )
   QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) <= {k}
-),
-cb AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS cid, qv AS cv
-  FROM e
-  QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {n_centroids}
 ),
 ad AS (
   SELECT e.vec_id, cb.cid, {d2} AS d2 FROM e CROSS JOIN cb
@@ -788,7 +902,7 @@ ivf_topk AS (
          neighbor_id, cosine
   FROM (
     SELECT q.vec_id AS query_id, ca.vec_id AS neighbor_id,
-           {cos.format(a='qe.v', b='ce.v')} AS cosine
+           {cos('qe.v', 'ce.v')} AS cosine
     FROM iq q
     JOIN e qe ON qe.vec_id = q.vec_id
     JOIN assign ca ON ca.bucket = q.bucket AND ca.vec_id <> q.vec_id
@@ -802,118 +916,6 @@ SELECT l.query_id, l.rank,
 FROM lsh_topk l JOIN ivf_topk i ON i.query_id = l.query_id AND i.rank = l.rank
 ORDER BY l.query_id, l.rank
 """.strip()
-
-
-def ivf_train_xengine(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    n_iters: int = 2,
-) -> list[list[int]]:
-    """INTEGER Lloyd k-means over the full quantized vectors — the r10
-    exact-trainer device (operators/pq.py pq_train_xengine) generalized to
-    the IVF coarse quantizer, so the TRAINED coarse codebook itself is
-    cross-engine replayable: centroids stay integer vectors (floor(x*1e6)
-    quantization of the raw doubles; no normalization needed — the raw
-    parquet doubles are already identical in both engines), assignment is
-    exact integer L2 argmin with first-minimum (cid) ties, and the Lloyd
-    mean is floor(double(sum)/count + 0.5) — one fixed IEEE op chain both
-    engines evaluate identically (component sums stay far below 2^53).
-    Init = the n_centroids corpus rows with smallest (h(id), id); empty
-    clusters keep their previous centroid.
-
-    Scale shape: per epoch ONE bounded (cid, j) aggregation over the
-    corpus (k*dim rows collected — driver state is the codebook, never
-    data); assignment is a zero-shuffle map against broadcast literals."""
-    import math
-
-    e = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("__id"), as_double(vec_col).alias("__v")
-    )
-    # persist + explicit unpersist: each of the 1 + n_iters driver actions
-    # otherwise re-evaluates the scan→cast→quantize lineage. (A lazy
-    # localCheckpoint was tried per the r11 verdict and leaked
-    # executor-local blocks across repeated runs — persist has the clean
-    # lifecycle here because training is self-contained.) Partitioning is
-    # unchanged and the trainer arithmetic is integer, so the codebook is
-    # bit-identical.
-    e = materialize_col(e, quantize_vec(F.col("__v")), "__qv", keep=["__id"]).persist()
-    try:
-        h = (F.lit(_IVF_HA) * F.col("__id") + F.lit(_IVF_HB)) % F.lit(_IVF_HP)
-        seed_rows = (
-            e.select("__id", "__qv").withColumn("__h", h)
-            .orderBy("__h", "__id").limit(n_centroids).collect()
-        )
-        if len(seed_rows) < n_centroids:
-            raise ValueError(
-                f"ivf_train_xengine: corpus smaller than n_centroids={n_centroids}"
-            )
-        centroids = [[int(x) for x in r["__qv"]] for r in seed_rows]
-        for _ in range(n_iters):
-            cid = F.element_at(_int_probe_cids(F.col("__qv"), centroids, 1), 1)
-            stats = (
-                e.withColumn("__c", cid)
-                .select("__c", F.posexplode("__qv").alias("__j", "__x"))
-                .groupBy("__c", "__j")
-                .agg(F.sum("__x").alias("sx"), F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-            new_centroids = [list(c) for c in centroids]
-            for r in stats:
-                # floor(double(sum)/count + 0.5) — the exact chain the
-                # oracle's u{it} CTE emits
-                new_centroids[r["__c"]][r["__j"]] = int(
-                    math.floor(float(r["sx"]) / r["cnt"] + 0.5)
-                )
-            centroids = new_centroids
-        return centroids
-    finally:
-        e.unpersist()
-
-
-def ivf_topk_trained_xengine(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_centroids: int = 8,
-    nprobe: int = 3,
-    n_iters: int = 2,
-) -> DataFrame:
-    """IVF ANN under a TRAINED integer-k-means codebook
-    (:func:`ivf_train_xengine`), cross-engine exact end to end — the last
-    trained path without a graded sibling (r10 verdict task). Same join
-    discipline as the production :func:`ivf_topk`: broadcast query side,
-    bucketed equi-join, exact cosine rerank rounded to 6 places, never a
-    cartesian. Output: (query_id, rank, neighbor_id, cosine)."""
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    centroids = ivf_train_xengine(corpus, id_col, vec_col, n_centroids, n_iters)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    c = c.withColumn(
-        "bucket", F.element_at(_int_probe_cids(quantize_vec(F.col("cv")), centroids, 1), 1)
-    )
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
-    )
-    q = q.withColumn(
-        "bucket", F.explode(_int_probe_cids(quantize_vec(F.col("qv")), centroids, nprobe))
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
 
 
 def ivf_trained_oracle_sql(
@@ -930,28 +932,16 @@ def ivf_trained_oracle_sql(
     MATERIALIZED CTEs), the final argmin assignment, the nprobe query
     probes, and the exact cosine rerank. Keep in lockstep with the Spark
     operator."""
-    hid = f"({_IVF_HA} * vec_id + {_IVF_HB}) % {_IVF_HP}"
     # exact integer squared-L2 (diffs ≤ ~2e7 → squares < 2^53, so the
     # Spark long fold and DuckDB's widened arithmetic agree exactly)
     d2 = (
         f"list_sum(list_transform(generate_series(1, {dim}), "
         "j -> (e.qv[j] - c.cv[j]) * (e.qv[j] - c.cv[j])))"
     )
-    cos = (
-        "round(list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}) "
-        "* list_dot_product({b}, {b})), 6)"
-    )
+    cos = _O_COSINE.format(a="qe.v", b="ce.v", places=6)
     parts = [
-        f"""e AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * {_QSCALE}) AS BIGINT)) AS qv
-  FROM {table} WHERE embedding IS NOT NULL
-), seed AS MATERIALIZED (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS c
-  FROM e QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {n_centroids}
-), c0 AS MATERIALIZED (
-  SELECT seed.c, e.qv AS cv FROM seed JOIN e USING (vec_id)
-)"""
+        _ivf_xengine_ctes(n_centroids, table),
+        "c0 AS MATERIALIZED (SELECT cid AS c, cv FROM cb)",
     ]
     for it in range(n_iters):
         parts.append(
@@ -989,10 +979,10 @@ def ivf_trained_oracle_sql(
 SELECT query_id, rank, neighbor_id, cosine FROM (
   SELECT q.query_id,
          CAST(ROW_NUMBER() OVER (
-           PARTITION BY q.query_id ORDER BY {cos.format(a='qe.v', b='ce.v')} DESC,
+           PARTITION BY q.query_id ORDER BY {cos} DESC,
            ca.vec_id) AS INT) AS rank,
          ca.vec_id AS neighbor_id,
-         {cos.format(a='qe.v', b='ce.v')} AS cosine
+         {cos} AS cosine
   FROM ciq q
   JOIN e qe ON qe.vec_id = q.query_id
   JOIN cassign ca ON ca.bucket = q.bucket AND ca.vec_id <> q.query_id

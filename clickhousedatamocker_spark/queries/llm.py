@@ -978,33 +978,14 @@ def _semantic_xengine_oracle_sql(threshold: float = 0.5, n_centroids: int = 8) -
     discipline), connected components via recursive CTE, and the
     keeper-count identity n_dropped = members - components (loser COUNTS
     are keeper-choice-independent, so no float-order hazard)."""
-    from clickhousedatamocker_spark.operators.similarity import (
-        _IVF_HA,
-        _IVF_HB,
-        _IVF_HP,
-        _QSCALE,
-    )
+    from clickhousedatamocker_spark.operators.similarity import _O_COSINE, _ivf_xengine_ctes
 
-    hid = f"({_IVF_HA} * vec_id + {_IVF_HB}) % {_IVF_HP}"
     d2 = (
         "list_sum(list_transform(generate_series(1, 64), "
         "j -> CAST(e.qv[j] - cb.cv[j] AS DOUBLE) * CAST(e.qv[j] - cb.cv[j] AS DOUBLE)))"
     )
-    cos = (
-        "round(list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}) "
-        "* list_dot_product({b}, {b})), 9)"
-    )
     return f"""
-WITH RECURSIVE e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * {_QSCALE}) AS BIGINT)) AS qv
-  FROM embeddings
-),
-cb AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS cid, qv AS cv
-  FROM e
-  QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {n_centroids}
-),
+WITH RECURSIVE {_ivf_xengine_ctes(n_centroids)},
 ad AS (SELECT e.vec_id, cb.cid, {d2} AS d2 FROM e CROSS JOIN cb),
 assign AS (
   SELECT vec_id, cid FROM ad
@@ -1013,7 +994,7 @@ assign AS (
 pairs AS (
   SELECT id_a, id_b, cid, cosine FROM (
     SELECT aa.vec_id AS id_a, ab.vec_id AS id_b, aa.cid,
-           {cos.format(a='a.v', b='b.v')} AS cosine
+           {_O_COSINE.format(a='a.v', b='b.v', places=9)} AS cosine
     FROM assign aa JOIN assign ab ON ab.cid = aa.cid AND aa.vec_id < ab.vec_id
     JOIN e a ON a.vec_id = aa.vec_id
     JOIN e b ON b.vec_id = ab.vec_id
@@ -1063,16 +1044,18 @@ def dedup_semantic_profile(spark, sf_dir):
     from clickhousedatamocker_spark.operators.dedup import connected_components
     from clickhousedatamocker_spark.operators.similarity import (
         _all_pairs_within,
-        _int_probe_cids,
+        _nearest_cid,
         as_double,
         ivf_codebook_xengine,
         quantize_vec,
     )
 
-    emb = t(spark, sf_dir, "embeddings")
+    # null embeddings have no cluster: the trainer and the oracle's e CTE
+    # both drop them
+    emb = t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     cb = ivf_codebook_xengine(emb, n_centroids=8)
     e = emb.select("vec_id", as_double("embedding").alias("v")).withColumn(
-        "cid", F.element_at(_int_probe_cids(quantize_vec(F.col("v")), cb, 1), 1)
+        "cid", _nearest_cid(quantize_vec(F.col("v")), cb)
     )
     # the intra-cluster join is the expensive stage: persist it so the pair
     # stats AND the component derivation evaluate it exactly once (the sf1
@@ -1714,30 +1697,15 @@ def _stratified_xengine_oracle_sql(
     kept-id sum/min make the result RANK-dependent, so the oracle verifies
     WHICH rows were kept, not just how many."""
     from clickhousedatamocker_spark.operators.corpus import sample_key_int_oracle_sql
-    from clickhousedatamocker_spark.operators.similarity import (
-        _IVF_HA,
-        _IVF_HB,
-        _IVF_HP,
-        _QSCALE,
-    )
+    from clickhousedatamocker_spark.operators.similarity import _ivf_xengine_ctes
 
-    hid = f"({_IVF_HA} * vec_id + {_IVF_HB}) % {_IVF_HP}"
     d2 = (
         "list_sum(list_transform(generate_series(1, 64), "
         "j -> CAST(e.qv[j] - cb.cv[j] AS DOUBLE) * CAST(e.qv[j] - cb.cv[j] AS DOUBLE)))"
     )
     key = sample_key_int_oracle_sql(f"(vec_id + {seed})")
     return f"""
-WITH e AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * {_QSCALE}) AS BIGINT)) AS qv
-  FROM embeddings
-),
-cb AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) AS INT) - 1 AS cid, qv AS cv
-  FROM e
-  QUALIFY ROW_NUMBER() OVER (ORDER BY {hid}, vec_id) <= {n_centroids}
-),
+WITH {_ivf_xengine_ctes(n_centroids)},
 ad AS (SELECT e.vec_id, cb.cid, {d2} AS d2 FROM e CROSS JOIN cb),
 assign AS (
   SELECT vec_id, cid FROM ad
@@ -1779,20 +1747,20 @@ ORDER BY a.cid
 )
 def sample_cluster_stratified_profile(spark, sf_dir):
     from clickhousedatamocker_spark.operators.similarity import (
-        _int_probe_cids,
+        _nearest_cid,
         as_double,
         cluster_stratified_sample,
         ivf_codebook_xengine,
         quantize_vec,
     )
 
-    emb = t(spark, sf_dir, "embeddings")
+    # null embeddings have no cluster: the trainer and the oracle's e CTE
+    # both drop them
+    emb = t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     cb = ivf_codebook_xengine(emb, n_centroids=8)
     assigned = (
         emb.select("vec_id", as_double("embedding").alias("__v"))
-        .withColumn(
-            "cid", F.element_at(_int_probe_cids(quantize_vec(F.col("__v")), cb, 1), 1)
-        )
+        .withColumn("cid", _nearest_cid(quantize_vec(F.col("__v")), cb))
         .select("vec_id", "cid")
     )
     kept = cluster_stratified_sample(

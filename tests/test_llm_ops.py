@@ -100,10 +100,15 @@ def test_simhash_finds_injected_dups(spark, docs_with_dups):
     assert all(r["hamming"] <= 7 for r in pairs)
 
 
-@MINHASH_TWINS
+@pytest.mark.parametrize(
+    "pairs_fn",
+    [minhash_lsh_pairs, minhash_lsh_pairs_xengine, ngram_jaccard_pairs],
+    ids=lambda f: f.__name__,
+)
 def test_minhash_skips_documents_shorter_than_n(spark, pairs_fn):
-    """A document with fewer than n tokens has no n-gram. Both twins drop it
-    before indexing grams (the production twin used to fail on it with
+    """A document with fewer than n tokens has no n-gram. Both MinHash twins
+    and the exact shingle verifier drop it before indexing grams (the
+    production twin and shingles_of_tokens used to fail on it with
     INVALID_ARRAY_INDEX_IN_ELEMENT_AT) and return exactly the pairs of the
     corpus without it."""
     text = "the quick brown fox jumps over the lazy dog"

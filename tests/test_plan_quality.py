@@ -345,7 +345,7 @@ def test_semantic_profile_plan_is_hash_equijoin(spark):
     pin the plan of the same pair stage the profile builds."""
     from clickhousedatamocker_spark.operators.similarity import (
         _all_pairs_within,
-        _int_probe_cids,
+        _nearest_cid,
         as_double,
         ivf_codebook_xengine,
         quantize_vec,
@@ -355,7 +355,7 @@ def test_semantic_profile_plan_is_hash_equijoin(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cb = ivf_codebook_xengine(emb, n_centroids=8)
     e = emb.select("vec_id", as_double("embedding").alias("v")).withColumn(
-        "cid", F.element_at(_int_probe_cids(quantize_vec(F.col("v")), cb, 1), 1)
+        "cid", _nearest_cid(quantize_vec(F.col("v")), cb)
     )
     plan = plan_of(_all_pairs_within(e, "vec_id", ["cid"], threshold=0.3))
     assert "CartesianProduct" not in plan

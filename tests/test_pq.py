@@ -24,6 +24,15 @@ def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
+@pytest.fixture(autouse=True)
+def no_leaked_cache(spark):
+    """The trainers and search paths own every relation they persist:
+    nothing stays cached after a test."""
+    spark.catalog.clearCache()
+    yield
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.fixture(scope="module")
 def books(emb):
     return pq_train(emb, dim=DIM, m=M, ksub=KSUB, n_iters=2, seed=7)

@@ -137,7 +137,7 @@ def test_all_pairs_blas_matches_expr(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cb = S.ivf_codebook_xengine(emb, n_centroids=8)
     e = emb.select("vec_id", S.as_double("embedding").alias("v")).withColumn(
-        "cid", F.element_at(S._int_probe_cids(S.quantize_vec(F.col("v")), cb, 1), 1)
+        "cid", S._nearest_cid(S.quantize_vec(F.col("v")), cb)
     )
 
     def rows(method):

@@ -11,7 +11,9 @@
 The registry-level parity (Spark query vs DuckDB oracle under a bare
 session) is pinned by test_driver_contract.py's round-10 probe; this file
 pins the operator-level laws: learning quality, tie/guard behavior, and
-recall of the trained codebooks against brute force.
+recall of the trained codebooks against brute force — plus the edge
+contract every k-means trainer shares (one Lloyd loop, two backends) and
+fast DuckDB parity for the graded ANN and PQ registry queries.
 """
 
 import os
@@ -19,6 +21,9 @@ import os
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+
+from clickhousedatamocker_spark.operators import pq as P
+from clickhousedatamocker_spark.operators import similarity as S
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -29,6 +34,15 @@ def duck():
     for t in ["documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_cache(spark):
+    """Every trainer owns the one relation it persists: nothing stays
+    cached after a test."""
+    spark.catalog.clearCache()
+    yield
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ---------------------------------------------------------------------------
@@ -175,8 +189,6 @@ def test_pq_train_xengine_guards(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     with pytest.raises(ValueError, match="divisible"):
         pq_train_xengine(emb, m=7)
-    with pytest.raises(ValueError, match="smaller than ksub"):
-        pq_train_xengine(emb.filter(F.col("vec_id") < 3), ksub=16)
 
 
 # ---------------------------------------------------------------------------
@@ -255,9 +267,102 @@ def test_ivf_trained_improves_on_seed_codebook(spark):
     assert trained != seeds
 
 
-def test_ivf_train_xengine_guards(spark):
-    from clickhousedatamocker_spark.operators.similarity import ivf_train_xengine
+# ---------------------------------------------------------------------------
+# the edge contract of the shared Lloyd loop, on every trainer binding
+
+# name -> (trainer, its k parameter, its backend's seed order)
+_TRAINERS = {
+    "ivf_train": (S.ivf_train, "n_centroids", "float"),
+    "pq_train": (P.pq_train, "ksub", "float"),
+    "ivf_train_xengine": (S.ivf_train_xengine, "n_centroids", "int"),
+    "pq_train_xengine": (P.pq_train_xengine, "ksub", "int"),
+    "ivf_codebook_xengine": (S.ivf_codebook_xengine, "n_centroids", "int"),
+}
+
+
+@pytest.mark.parametrize("trainer", list(_TRAINERS))
+def test_trainer_edge_contract(spark, trainer):
+    """A null embedding is skipped even where it would be the first seed
+    (the codebook equals the one trained without that row), and a corpus
+    smaller than k raises ValueError instead of an IndexError or a short
+    codebook."""
+    train_fn, k_name, backend = _TRAINERS[trainer]
+
+    def train(df, k):
+        return train_fn(df, **{k_name: k})
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    with pytest.raises(ValueError, match="smaller than n_centroids"):
-        ivf_train_xengine(emb.filter(F.col("vec_id") < 3), n_centroids=8)
+    if backend == "float":
+        key = F.xxhash64(F.col("vec_id"), F.lit(42))  # the trainers' default seed
+    else:
+        key = (F.lit(S._IVF_HA) * F.col("vec_id") + F.lit(S._IVF_HB)) % F.lit(S._IVF_HP)
+    first_seed = emb.select("vec_id", key.alias("h")).orderBy("h", "vec_id").first()["vec_id"]
+    with_null = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == first_seed, F.lit(None)).otherwise(F.col("embedding")),
+    )
+    without = emb.filter(F.col("vec_id") != first_seed)
+    assert train(with_null, 8) == train(without, 8)
+
+    with pytest.raises(ValueError, match=f"smaller than {k_name}=8"):
+        train(emb.filter(F.col("vec_id") < 3), 8)
+
+
+# ---------------------------------------------------------------------------
+# fast DuckDB parity for the graded ANN and PQ registry queries
+
+
+@pytest.mark.parametrize(
+    "name", ["similarity_ann_lsh_ivf", "similarity_topk_pq"]
+)
+def test_vector_registry_query_matches_duckdb(spark, duck, name):
+    from clickhousedatamocker_spark.operators.pq import (
+        fixed_pq_codebooks,
+        pq_xengine_oracle_sql,
+    )
+    from clickhousedatamocker_spark.operators.similarity import ann_xengine_oracle_sql
+    from clickhousedatamocker_spark.queries import REGISTRY
+
+    oracle = {
+        "similarity_ann_lsh_ivf": ann_xengine_oracle_sql(
+            k=10, num_planes=3, n_centroids=8, nprobe=3
+        ),
+        "similarity_topk_pq": pq_xengine_oracle_sql(fixed_pq_codebooks(64, 8, 8), k=10),
+    }[name]
+    sdf = REGISTRY[name].fn(spark, SF_DIR)
+    rel = duck.sql(oracle)
+    assert sdf.columns == list(rel.columns)
+    srows = sorted(tuple(r) for r in sdf.collect())
+    assert srows == sorted(rel.fetchall())
+    assert srows
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["similarity_ann_lsh_ivf", "dedup_semantic_profile", "sample_cluster_stratified_profile"],
+)
+def test_ivf_registry_query_matches_duckdb_with_null_embeddings(spark, tmp_path, name):
+    """A null embedding has no vector and no cluster: the registry query and
+    its oracle (whose quantized ``e`` CTE drops nulls, the trainer's rule)
+    still agree row for row."""
+    from clickhousedatamocker_spark.queries import REGISTRY
+
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT vec_id, CASE WHEN vec_id IN (3, 77) THEN NULL ELSE embedding END "
+        f"AS embedding FROM '{SF_DIR}/embeddings.parquet') "
+        f"TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+
+    def rows(cols, data):
+        order = sorted(range(len(cols)), key=lambda i: cols[i])
+        return sorted(
+            tuple(round(r[i], 9) if isinstance(r[i], float) else r[i] for i in order)
+            for r in data
+        )
+
+    sdf = REGISTRY[name].fn(spark, str(tmp_path))
+    rel = con.sql(REGISTRY[name].oracle)
+    assert sorted(sdf.columns) == sorted(rel.columns)
+    assert rows(sdf.columns, sdf.collect()) == rows(list(rel.columns), rel.fetchall())
