@@ -10,7 +10,11 @@ the monitoring surface is two registered temp views queried via
 
 from __future__ import annotations
 
+import functools
+import itertools
 import os
+import re
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +38,23 @@ from clickhousedatamocker_spark.plans.flow_control import FlowController
 from clickhousedatamocker_spark.plans.ingest import InsertResult, Writer
 from clickhousedatamocker_spark.plans.metrics import MetricsStore
 from clickhousedatamocker_spark.plans.parts import PartsInventory
-from clickhousedatamocker_spark.schema import TableSpec
+from clickhousedatamocker_spark.schema import TableSpec, local_view
+
+# Temp views belong to the whole SparkSession, not to one Engine: per
+# session, view name -> (serial of the Engine that registered it, the source
+# key it was built from). A view is current for an Engine only when that
+# Engine registered it, so two Engines on one session never serve each
+# other's views.
+_SESSION_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_ENGINE_SERIALS = itertools.count(1)
+
+# the views that change with every statement (each Engine.sql appends to the
+# query log; free disk space is live): registered only for statements that
+# read them, under either the ClickHouse (system.x) or the view (system_x) name
+_LIVE_VIEWS = {
+    "system_query_log": re.compile(r"\bsystem[._]query_log\b", re.IGNORECASE),
+    "system_disks": re.compile(r"\bsystem[._]disks\b", re.IGNORECASE),
+}
 
 
 @dataclass
@@ -63,7 +83,8 @@ class Engine:
         self.parts = PartsInventory(database)
         self.flow = FlowController(metrics=self.metrics)
         self.writer = Writer(self.parts, self.flow, metrics=self.metrics)
-        self._registered_versions: dict[str, object] = {}
+        self._serial = next(_ENGINE_SERIALS)
+        self._view_keys: dict[str, tuple] = _SESSION_VIEWS.setdefault(spark, {})
         self._materialized_views: dict[str, dict] = {}
         # plain CREATE VIEW: saved select texts, re-registered every refresh
         # so they always read the CURRENT table state (a captured temp-view
@@ -81,11 +102,8 @@ class Engine:
         # semantics)
         self._session_settings: dict[str, str] = {}
         self._query_log_version = 0
-        self._query_log_registered_version = -1
         self._detached_version = 0
-        self._detached_registered_version = -1
         self._catalog_version = 0
-        self._introspection_version = -1
         # in-flight background merges (plans/merges.py) -> system.merges
         self.running_merges: dict[object, dict] = {}
         self._merges_lock = __import__("threading").Lock()
@@ -97,7 +115,6 @@ class Engine:
         # (all synchronous here, so every entry lands is_done=1)
         self._mutations: list[tuple] = []
         self._mutations_version = 0
-        self._mutations_registered_version = -1
         # views + MV triggers persist in the warehouse: a second process
         # (e.g. another CLI invocation) must keep maintaining projections
         # and MVs, or persisted materialized state silently goes stale
@@ -158,15 +175,46 @@ class Engine:
             del self._query_log[: -self._QUERY_LOG_CAP]
         self._query_log_version += 1
 
-    def _register_detached_parts_view(self, tables: dict[str, str]) -> None:
+    # -- session-wide temp view registry ----------------------------------
+    def _register_view(self, name: str, key, build) -> None:
+        """Register temp view ``name`` as ``build()`` unless this Engine
+        last registered it under an equal ``key``. The key names the state
+        the view was built from — a version counter, or for the small
+        in-memory views the rows themselves — so an unchanged source costs
+        no rebuild."""
+        owned = (self._serial, key)
+        if self._view_keys.get(name) == owned:
+            return
+        build().createOrReplaceTempView(name)
+        self._view_keys[name] = owned
+
+    def _register_rows_view(self, name: str, rows: list[tuple], schema: str) -> None:
+        """A small in-memory view, keyed on its rows themselves."""
+        self._register_view(
+            name, tuple(rows), functools.partial(local_view, self.spark, rows, schema)
+        )
+
+    def _forget_view(self, name: str) -> None:
+        """The next refresh re-registers ``name`` (its schema or data
+        location changed under an unchanged key)."""
+        self._view_keys.pop(name, None)
+
+    def _live_views_read_by(self, statement: str | None) -> list[str]:
+        """The per-statement views ``statement`` reads, directly or through
+        the saved SELECTs of the plain views it names; all of them for
+        ``None``."""
+        if statement is None:
+            return list(_LIVE_VIEWS)
+        text, pending = statement, dict(self._views)
+        while named := [v for v in pending if re.search(rf"\b{re.escape(v)}\b", text, re.I)]:
+            text += "\n" + "\n".join(pending.pop(v) for v in named)
+        return [name for name, pattern in _LIVE_VIEWS.items() if pattern.search(text)]
+
+    def _detached_parts_rows(self, tables: dict[str, str]) -> list[tuple]:
         """``system.detached_parts`` analog: one row per parquet file under
         each table's ``<path>.detached/`` area (populated by
         detach_partition, consumed by ATTACH). Metadata-sized — a directory
-        listing, no data read. Version-gated on detach/attach activity and
-        built on ONE slice, like the other metadata views: this runs inside
-        the 1 Hz monitoring refresh and is almost always empty/unchanged."""
-        if self._detached_registered_version == self._detached_version:
-            return
+        listing, no data read."""
         rows = []
         for table, path in tables.items():
             droot = f"{path}.detached"
@@ -180,33 +228,17 @@ class Engine:
                 for fname in sorted(os.listdir(full)):
                     if fname.endswith(".parquet"):
                         rows.append((self.catalog.database, table, pval, f"{pdir}/{fname}"))
-        schema = "database string, table string, partition string, name string"
-        self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1) if rows else [], schema
-        ).createOrReplaceTempView("system_detached_parts")
-        self._detached_registered_version = self._detached_version
+        return rows
 
-    def _register_query_log_view(self) -> None:
-        # version-gated like _register_introspection_views: the monitoring
-        # pair runs once per second, and an ungated rebuild of a full ring
-        # buffer (10k tuples) per statement would eat into that envelope
-        if self._query_log_registered_version == self._query_log_version:
-            return
-        self.spark.createDataFrame(
-            self._query_log or [],
-            "event_time timestamp, query string, query_kind string, duration_ms double",
-        ).createOrReplaceTempView("system_query_log")
-        self._query_log_registered_version = self._query_log_version
-
-    def _register_merges_view(self) -> None:
+    def _merges_rows(self) -> list[tuple]:
         """``system.merges`` analog: one row per merge currently executing
         in a MergeScheduler (plans/merges.py registers in-flight entries in
-        ``self.running_merges``). Tiny and volatile — rebuilt every refresh
-        like the metrics view."""
+        ``self.running_merges``). ``elapsed`` is live, so as a view key
+        these rows change on every refresh while any merge runs."""
         import time as _t
 
         with self._merges_lock:
-            rows = [
+            return [
                 (
                     self.catalog.database,
                     m["table"],
@@ -217,13 +249,6 @@ class Engine:
                 )
                 for m in self.running_merges.values()
             ]
-        schema = (
-            "database string, table string, partition string, "
-            "num_parts int, rows_read bigint, elapsed double"
-        )
-        self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1) if rows else [], schema
-        ).createOrReplaceTempView("system_merges")
 
     # -- DDL --------------------------------------------------------------
     def create_table(self, spec: TableSpec, if_not_exists: bool = True) -> TableHandle:
@@ -257,7 +282,7 @@ class Engine:
             raise ValueError(f"projection {pname!r} already exists on {name!r}")
         spec = parse_projection_select(select_sql)
         hidden = f"__proj_{name}_{pname}"
-        self.refresh_system_views()
+        self.refresh_system_views(select_sql)
         self.create_materialized_view(
             hidden, name, render_projection_mv_select(spec, name),
             order_columns=list(spec["order"]),
@@ -368,7 +393,7 @@ class Engine:
         # name: evict both so a re-CREATE of the same name starts clean
         # instead of inheriting phantom active-part counts / a stale view
         self.parts.evict(name)
-        self._registered_versions.pop(name, None)
+        self._forget_view(name)
         try:
             self.spark.catalog.dropTempView(name)
         except Exception:
@@ -389,7 +414,7 @@ class Engine:
         os.rename(meta, meta + ".detached")
         self._catalog_version += 1
         self.parts.evict(name)
-        self._registered_versions.pop(name, None)
+        self._forget_view(name)
         try:
             self.spark.catalog.dropTempView(name)
         except Exception:
@@ -659,16 +684,6 @@ class Engine:
         if len(self._mutations) > 1000:
             self._mutations = self._mutations[-1000:]
         self._mutations_version += 1
-
-    def _register_mutations_view(self) -> None:
-        if self._mutations_registered_version == self._mutations_version:
-            return
-        self._mutations_registered_version = self._mutations_version
-        rows = self._mutations or [(0, "", "", "", 0)]
-        self.spark.createDataFrame(
-            rows,
-            "mutation_id long, table string, command string, create_time string, is_done int",
-        ).filter(F.col("table") != "").createOrReplaceTempView("system_mutations")
 
     def delete_where(self, table: str, predicate: str) -> int:
         """``ALTER TABLE … DELETE WHERE predicate`` (synchronous mutation:
@@ -980,11 +995,11 @@ class Engine:
         shutil.copy(src_meta, self.catalog._meta_path(table))
         self.parts.evict(table)  # force reload from the restored manifest
         self._catalog_version += 1
-        self._registered_versions.pop(table, None)
+        self._forget_view(table)
 
     # -- schema evolution (ALTER ADD/DROP/MODIFY COLUMN) -------------------
     def _invalidate_reads(self, name: str) -> None:
-        self._registered_versions.pop(name, None)
+        self._forget_view(name)
         self._catalog_version += 1
 
     def add_column(
@@ -1301,96 +1316,141 @@ class Engine:
         )
 
     # -- introspection ----------------------------------------------------
-    def refresh_system_views(self) -> None:
-        """(Re)register system_metrics / system_parts temp views + data tables.
+    def refresh_system_views(self, statement: str | None = None) -> None:
+        """Bring the system views and the data-table views up to date
+        before ``statement`` runs.
 
-        The system views are rebuilt every call (their contents are the
-        engine's live counters — tiny single-slice DataFrames). Data-table
-        views re-register only when the table's part inventory changed since
-        the last registration: a parquet re-read costs a file listing, and
-        the reference runs this monitoring pair once per second alongside
-        ingest (monitor_metrics.sh per-iteration envelope)."""
+        A view is rebuilt only when its source changed since this Engine
+        registered it: the metrics-store and part-inventory versions, the
+        catalog, mutation, detach and query-log counters, or, for the small
+        in-memory views (merges, settings, functions, databases, processes,
+        disks), the rows themselves. A data-table view re-registers when its table's
+        part inventory changed (a parquet re-read costs a file listing). The
+        reference runs the monitoring pair once per second alongside ingest
+        (monitor_metrics.sh per-iteration envelope), so a poll rebuilds only
+        what moved.
+
+        ``system_query_log`` and ``system_disks`` change with every
+        statement, so they are registered only when ``statement`` reads
+        them (see ``_live_views_read_by``); ``statement=None`` registers
+        them too."""
         tables = {
             name: self.catalog.table_path(name)
             for name in self.catalog.list_tables()
             if self.catalog.get(name).alias_of is None
         }
-        self.parts.to_df(self.spark, tables).createOrReplaceTempView("system_parts")
-        self.metrics.to_df(self.spark).createOrReplaceTempView("system_metrics")
-        self._register_detached_parts_view(tables)
-        self._register_query_log_view()
+        self._register_view(
+            "system_parts",
+            tuple((t, path, self.parts.inventory_version(t)) for t, path in tables.items()),
+            lambda: self.parts.to_df(self.spark, tables),
+        )
+        self._register_view(
+            "system_metrics", self.metrics.version, lambda: self.metrics.to_df(self.spark)
+        )
+        self._register_view(
+            "system_detached_parts",
+            self._detached_version,
+            lambda: local_view(
+                self.spark,
+                self._detached_parts_rows(tables),
+                "database string, table string, partition string, name string",
+            ),
+        )
         self._register_introspection_views()
-        self._register_merges_view()
-        self._register_mutations_view()
-        self.spark.createDataFrame(
+        self._register_view(
+            "system_mutations",
+            self._mutations_version,
+            lambda: local_view(
+                self.spark,
+                self._mutations,
+                "mutation_id long, table string, command string, create_time string, is_done int",
+            ),
+        )
+        self._register_rows_view(
+            "system_merges",
+            self._merges_rows(),
+            "database string, table string, partition string, "
+            "num_parts int, rows_read bigint, elapsed double",
+        )
+        self._register_rows_view(
+            "system_settings",
             [(k, v, 1) for k, v in sorted(self._session_settings.items())],
             "name string, value string, changed int",
-        ).createOrReplaceTempView("system_settings")
+        )
         # CREATE FUNCTION macros, CH's system.functions shape for the
         # user-defined rows (builtins are Spark's own catalog)
-        self.spark.createDataFrame(
+        self._register_rows_view(
+            "system_functions",
             [
-                (
-                    name,
-                    "SQLUserDefined",
-                    f"({', '.join(spec['params'])}) -> {spec['body']}",
-                )
+                (name, "SQLUserDefined", f"({', '.join(spec['params'])}) -> {spec['body']}")
                 for name, spec in sorted(self._sql_functions.items())
             ],
             "name string, origin string, create_query string",
-        ).createOrReplaceTempView("system_functions")
+        )
         # CH system.databases / system.processes / system.disks analogues.
         # processes is empty by construction (single-process engine: the
         # only query running is the one reading the view); disks reports
-        # the warehouse volume with LIVE free space per refresh.
-        self.spark.createDataFrame(
+        # the warehouse volume with LIVE free space.
+        self._register_rows_view(
+            "system_databases",
             [(d, "Atomic") for d in sorted(self._databases)],
             "name string, engine string",
-        ).createOrReplaceTempView("system_databases")
-        self.spark.createDataFrame(
-            [], "query string, elapsed double, user string"
-        ).createOrReplaceTempView("system_processes")
-        import shutil as _shutil
+        )
+        self._register_rows_view(
+            "system_processes", [], "query string, elapsed double, user string"
+        )
+        live = self._live_views_read_by(statement)
+        if "system_disks" in live:
+            import shutil as _shutil
 
-        du = _shutil.disk_usage(self.catalog.warehouse_dir)
-        self.spark.createDataFrame(
-            [("default", self.catalog.warehouse_dir, du.free, du.total)],
-            "name string, path string, free_space bigint, total_space bigint",
-        ).createOrReplaceTempView("system_disks")
+            du = _shutil.disk_usage(self.catalog.warehouse_dir)
+            self._register_rows_view(
+                "system_disks",
+                [("default", self.catalog.warehouse_dir, du.free, du.total)],
+                "name string, path string, free_space bigint, total_space bigint",
+            )
+        if "system_query_log" in live:
+            self._register_view(
+                "system_query_log",
+                self._query_log_version,
+                lambda: local_view(
+                    self.spark,
+                    self._query_log,
+                    "event_time timestamp, query string, query_kind string, duration_ms double",
+                ),
+            )
         for name in self.catalog.list_tables():
             if self._distributed_spec(name) is not None:
                 version = tuple(self.parts.inventory_version(s) for s in self.shard_tables(name))
-                if self._registered_versions.get(name) != version:
-                    self.read_table(name).createOrReplaceTempView(name)
-                    self._registered_versions[name] = version
+                self._register_view(name, version, functools.partial(self.read_table, name))
                 continue
             handle = self.catalog.get(self.catalog.resolve(name))
-            version = self.parts.inventory_version(handle.name)
-            if self._registered_versions.get(name) == version:
-                continue
-            if os.path.isdir(handle.path) and any(
-                True for _ in os.scandir(handle.path) if _.name.endswith(".parquet") or "=" in _.name
-            ):
-                self._apply_alias_columns(
-                    self._apply_column_defaults(
-                        self.spark.read.schema(_schema_with_partition(handle)).parquet(handle.path),
-                        handle,
-                    ),
-                    handle,
-                ).createOrReplaceTempView(name)
-            else:
-                # empty table: a typed empty view, so SELECTs work like CH
-                # (also shadows any stale view a DROP + re-CREATE left)
-                self._apply_alias_columns(
-                    self.spark.createDataFrame([], _schema_with_partition(handle)), handle
-                ).createOrReplaceTempView(name)
-            self._registered_versions[name] = version
+            self._register_view(
+                name,
+                self.parts.inventory_version(handle.name),
+                functools.partial(self._table_view, handle),
+            )
         # plain views LAST: their plans reference the table views above, so
         # re-deriving them here keeps them reading the current table state
         from clickhousedatamocker_spark.functions.compat import translate_ch_sql as _tr
 
         for vname, vsql in self._views.items():
             self.spark.sql(_tr(vsql)).createOrReplaceTempView(vname)
+
+    def _table_view(self, handle: TableHandle) -> DataFrame:
+        """A data table's registered view: its parquet files, or a typed
+        empty frame for a table with none (so SELECTs work like CH; it also
+        shadows any stale view a DROP + re-CREATE left)."""
+        if os.path.isdir(handle.path) and any(
+            True for _ in os.scandir(handle.path) if _.name.endswith(".parquet") or "=" in _.name
+        ):
+            df = self._apply_column_defaults(
+                self.spark.read.schema(_schema_with_partition(handle)).parquet(handle.path),
+                handle,
+            )
+        else:
+            df = self.spark.createDataFrame([], _schema_with_partition(handle))
+        return self._apply_alias_columns(df, handle)
 
     def _route_query_settings(self, query: str, settings: dict[str, str]) -> str:
         """Apply the RESULT-CHANGING members of a per-query ``SETTINGS``
@@ -1512,7 +1572,7 @@ class Engine:
             family = (handle.engine or {}).get("family", "MergeTree")
             if family in PLAIN_APPEND_FAMILIES:
                 return f"FROM {name}"
-            self.refresh_system_views()
+            self.refresh_system_views(query)
             view = f"{name}__final"
             _merge_collapse(self.read_table(name), handle, family).createOrReplaceTempView(view)
             return f"FROM {view}"
@@ -2320,46 +2380,52 @@ class Engine:
         return _re.sub(r"\bFROM\s+(\w+)\s+SAMPLE\s+(0?\.\d+)", sub, query, flags=_re.IGNORECASE)
 
     def _register_introspection_views(self) -> None:
-        """system.tables / system.columns analogues (CH's catalog
-        introspection surface) — tiny driver-built frames over the catalog.
-        Rebuilt only when the catalog changed: the reference polls the
-        system views at 1 Hz alongside ingest, and two createDataFrame
-        round-trips per poll would eat into that envelope."""
-        if self._introspection_version == self._catalog_version:
-            return
-        self._introspection_version = self._catalog_version
-        trows, crows = [], []
-        for name in self.catalog.list_tables():
-            h = self.catalog.get(name)
-            fam = (h.engine or {}).get("family")
-            kind = "MaterializedView" if name in self._materialized_views else (
-                ("Buffer" if fam == "Buffer" else "Distributed") if h.alias_of
-                else (fam or "MergeTree")
+        """system.tables / system.columns / system.projections analogues
+        (CH's catalog introspection surface) — tiny in-process frames over
+        the catalog, rebuilt only when the catalog changed."""
+        db = self.catalog.database
+
+        def tables():
+            rows = []
+            for name in self.catalog.list_tables():
+                h = self.catalog.get(name)
+                fam = (h.engine or {}).get("family")
+                kind = "MaterializedView" if name in self._materialized_views else (
+                    ("Buffer" if fam == "Buffer" else "Distributed") if h.alias_of
+                    else (fam or "MergeTree")
+                )
+                rows.append((db, name, kind, h.alias_of, h.partition_column,
+                             ",".join(h.order_columns or [])))
+            return rows
+
+        def columns():
+            return [
+                (db, name, f.name, f.dataType.simpleString(), pos)
+                for name in self.catalog.list_tables()
+                for pos, f in enumerate(self.catalog.get(self.catalog.resolve(name)).schema.fields)
+            ]
+
+        def projections():
+            return [
+                (db, name, pname, p["spec"]["kind"], p["select"],
+                 bool(p.get("materialized")), p["hidden"])
+                for name in self.catalog.list_tables()
+                for pname, p in self.catalog.get_projections(name).items()
+            ]
+
+        for view, rows, schema in (
+            ("system_tables", tables, "database string, name string, engine string, "
+             "alias_of string, partition_key string, sorting_key string"),
+            ("system_columns", columns,
+             "database string, table string, name string, type string, position int"),
+            ("system_projections", projections, "database string, table string, name string, "
+             "type string, query string, materialized boolean, backing_table string"),
+        ):
+            self._register_view(
+                view,
+                self._catalog_version,
+                lambda rows=rows, schema=schema: local_view(self.spark, rows(), schema),
             )
-            trows.append((self.catalog.database, name, kind, h.alias_of,
-                          h.partition_column, ",".join(h.order_columns or [])))
-            base = self.catalog.get(self.catalog.resolve(name))
-            for pos, f in enumerate(base.schema.fields):
-                crows.append((self.catalog.database, name, f.name, f.dataType.simpleString(), pos))
-        self.spark.createDataFrame(
-            trows or [(self.catalog.database, "", "", None, None, "")],
-            "database string, name string, engine string, alias_of string, partition_key string, sorting_key string",
-        ).filter(F.col("name") != "").createOrReplaceTempView("system_tables")
-        self.spark.createDataFrame(
-            crows or [(self.catalog.database, "", "", "", 0)],
-            "database string, table string, name string, type string, position int",
-        ).filter(F.col("table") != "").createOrReplaceTempView("system_columns")
-        prows = [
-            (self.catalog.database, name, pname, p["spec"]["kind"], p["select"],
-             bool(p.get("materialized")), p["hidden"])
-            for name in self.catalog.list_tables()
-            for pname, p in self.catalog.get_projections(name).items()
-        ] or [("", "", "", "", "", False, "")]
-        self.spark.createDataFrame(
-            prows,
-            "database string, table string, name string, type string, "
-            "query string, materialized boolean, backing_table string",
-        ).filter(F.col("table") != "").createOrReplaceTempView("system_projections")
 
     def system_metrics(self) -> DataFrame:
         return self.metrics.to_df(self.spark)
@@ -2438,7 +2504,7 @@ class Engine:
             if mode == "SYNTAX":
                 lines = translated.splitlines() or [translated]
             else:
-                self.refresh_system_views()
+                self.refresh_system_views(translated)
                 qe = self.spark.sql(translated)._jdf.queryExecution()
                 if mode == "AST":
                     txt = qe.logical().toString()
@@ -2584,7 +2650,7 @@ class Engine:
         if mfmt is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
             from clickhousedatamocker_spark.sources.formats import write_format
 
-            self.refresh_system_views()
+            self.refresh_system_views(query)
             inner = self._apply_read_rewrites(query[: mfmt.start()])
             df = self.spark.sql(translate_ch_sql(inner))
             out = mfmt.group(1) or data
@@ -2677,7 +2743,7 @@ class Engine:
                         cut = i
                         break
                 cond, tail = rest[:cut].rstrip(), rest[cut:].strip()
-                self.refresh_system_views()
+                self.refresh_system_views(query)
                 # the condition is computed as a projected column so window
                 # functions INSIDE the QUALIFY expression stay legal (a
                 # plain WHERE may not contain one)
@@ -2722,7 +2788,7 @@ class Engine:
                     cut = i
                     break
             inner, tail = rest[:cut].rstrip(), rest[cut:].strip()
-            self.refresh_system_views()
+            self.refresh_system_views(query)
             return self.spark.sql(
                 translate_ch_sql(
                     f"SELECT {items} FROM (SELECT *, row_number() OVER "
@@ -2741,7 +2807,7 @@ class Engine:
         if mwt is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
             order, nties = mwt.group(2).strip(), int(mwt.group(3))
             inner = translate_ch_sql(mwt.group(1))
-            self.refresh_system_views()
+            self.refresh_system_views(query)
             return self.spark.sql(
                 f"SELECT * EXCEPT (__rk) FROM (SELECT *, rank() OVER "
                 f"(ORDER BY {order}) AS __rk FROM ({inner})) "
@@ -2773,7 +2839,7 @@ class Engine:
                 off, n = 0, int(mlby.group(3))
             outer = f" LIMIT {mlby.group(7)}" if mlby.group(7) else ""
             inner = translate_ch_sql(mlby.group(1))
-            self.refresh_system_views()
+            self.refresh_system_views(query)
             # final ORDER BY = the query's own (CH applies LIMIT BY to the
             # sorted stream and keeps that order in the result); a trailing
             # LIMIT after the BY list is CH's outer row cap on that stream
@@ -2852,7 +2918,7 @@ class Engine:
             a, op, b = masof.group(8), masof.group(9), masof.group(10)
             lq, rq = (a, b) if op == ">=" else (b, a)
             lts, rts = col(lq), col(rq)
-            self.refresh_system_views()
+            self.refresh_system_views(query)
             read = lambda t: (  # noqa: E731
                 self.read_table(t) if self.catalog.exists(t) else self.spark.table(t)
             )
@@ -2939,7 +3005,7 @@ class Engine:
                     self._catalog_version += 1
             elif ddl["op"] == "ctas":
                 if not (ddl["if_not_exists"] and self.catalog.exists(ddl["name"])):
-                    self.refresh_system_views()
+                    self.refresh_system_views(query)
                     df = self.spark.sql(translate_ch_sql(self._apply_read_rewrites(ddl["select"])))
                     self.create_table(
                         TableSpec(name=ddl["name"], schema=df.schema),
@@ -2947,7 +3013,7 @@ class Engine:
                     )
                     self.insert(ddl["name"], df)
             elif ddl["op"] == "insert_select":
-                self.refresh_system_views()
+                self.refresh_system_views(query)
                 df = self.spark.sql(translate_ch_sql(self._apply_read_rewrites(ddl["select"])))
                 base = self.catalog.get(self.catalog.resolve(ddl["name"]))
                 if ddl["columns"]:
@@ -3008,7 +3074,7 @@ class Engine:
                     [], "query string, elapsed double, user string"
                 )
             elif ddl["op"] == "show_settings":
-                self.refresh_system_views()
+                self.refresh_system_views(query)
                 w = (
                     f" WHERE name LIKE '{ddl['like']}'"
                     if ddl.get("like") is not None
@@ -3113,7 +3179,7 @@ class Engine:
                     )
                 self.catalog.rename_table(ddl["name"], ddl["to"])
                 self._catalog_version += 1
-                self._registered_versions.pop(ddl["name"], None)
+                self._forget_view(ddl["name"])
                 # in-memory parts state is keyed by name: evict BOTH names so
                 # each reloads from the (moved) on-disk manifest log
                 self.parts.evict(ddl["name"])
@@ -3144,7 +3210,7 @@ class Engine:
                 self._catalog_version += 1
                 self._detached_version += 1
                 for name in (a, b):
-                    self._registered_versions.pop(name, None)
+                    self._forget_view(name)
                     try:
                         self.spark.catalog.dropTempView(name)
                     except Exception:
@@ -3211,10 +3277,10 @@ class Engine:
                 # single-directory catalog: USE validates and is otherwise a
                 # no-op (currentDatabase() stays 'default'; documented)
             elif ddl["op"] == "show_tables":
-                self.refresh_system_views()
+                self.refresh_system_views(query)
                 return self.spark.sql("SELECT name FROM system_tables ORDER BY name")
             elif ddl["op"] == "describe":
-                self.refresh_system_views()
+                self.refresh_system_views(query)
                 return self.spark.sql(
                     f"SELECT name, type FROM system_columns WHERE table = '{ddl['name']}' ORDER BY position"
                 )
@@ -3253,7 +3319,7 @@ class Engine:
                         raise ValueError(f"table {ddl['name']!r} already exists")
                     self._views[ddl["name"]] = ddl["select"]
                     self._save_view_registry()
-                    self.refresh_system_views()
+                    self.refresh_system_views(query)
             elif ddl["op"] == "mv":
                 if not (ddl["if_not_exists"] and ddl["name"] in self._materialized_views):
                     self.create_materialized_view(
@@ -3271,8 +3337,9 @@ class Engine:
                 self.alter_setting(ddl["name"], **ddl["settings"])
             return self.spark.createDataFrame([], "result string")
 
-        self.refresh_system_views()
-        return self.spark.sql(translate_ch_sql(query))
+        translated = translate_ch_sql(query)
+        self.refresh_system_views(translated)
+        return self.spark.sql(translated)
 
     def _render_create_ddl(self, name: str) -> str:
         """SHOW CREATE TABLE: reconstruct ClickHouse-dialect DDL from the

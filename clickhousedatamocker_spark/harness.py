@@ -201,7 +201,6 @@ def run_harness(
             merge_sched.stop()
 
     # 6. final full report (setup.sh:160-162 → monitor_metrics.sh:114-126)
-    engine.refresh_system_views()
     metrics_df = engine.sql(QUERY_METRICS_SQL)
     parts_df = engine.sql(QUERY_PARTS_SQL.format(database=cfg.database, table=cfg.table))
     if show_reports:

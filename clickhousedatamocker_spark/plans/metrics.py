@@ -12,7 +12,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhousedatamocker_spark.schema import SYSTEM_METRICS_SCHEMA
+from clickhousedatamocker_spark.schema import SYSTEM_METRICS_SCHEMA, local_view
 
 # name -> description; the 10 canonical names (query_metrics.sql:8-17) + 2
 # from the CLAUDE.md variant (CLAUDE.md:233-234).
@@ -39,14 +39,19 @@ class MetricsStore:
     def __init__(self) -> None:
         self._lock = threading.Lock()
         self._values: dict[str, int] = {name: 0 for name in METRIC_CATALOG}
+        # bumped on every write — the system_metrics view is rebuilt only
+        # when it moved
+        self.version = 0
 
     def incr(self, metric: str, by: int = 1) -> None:
         with self._lock:
             self._values[metric] = self._values.get(metric, 0) + by
+            self.version += 1
 
     def set(self, metric: str, value: int) -> None:
         with self._lock:
             self._values[metric] = value
+            self.version += 1
 
     def get(self, metric: str) -> int:
         with self._lock:
@@ -58,6 +63,4 @@ class MetricsStore:
                 (name, int(self._values.get(name, 0)), METRIC_CATALOG.get(name, ""))
                 for name in sorted(set(METRIC_CATALOG) | set(self._values))
             ]
-        # tiny driver-local table: build on ONE slice — the default 32-slice
-        # layout costs a Python-worker spin-up per slice on every query
-        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), SYSTEM_METRICS_SCHEMA)
+        return local_view(spark, rows, SYSTEM_METRICS_SCHEMA)

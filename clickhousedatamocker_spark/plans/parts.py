@@ -35,7 +35,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhousedatamocker_spark.schema import SYSTEM_PARTS_SCHEMA
+from clickhousedatamocker_spark.schema import SYSTEM_PARTS_SCHEMA, local_view
 
 # re-walk slack below the watermark: filesystem mtime and time.time_ns()
 # are the same realtime clock on one host, and the committer moves files
@@ -243,9 +243,7 @@ class PartsInventory:
                         datetime.strptime(p["modification_time"], "%Y-%m-%d %H:%M:%S"),
                     )
                 )
-        # metadata-sized table (one row per part file): build on ONE slice —
-        # avoids a Python-worker spin-up per default slice on every query
-        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), SYSTEM_PARTS_SCHEMA)
+        return local_view(spark, rows, SYSTEM_PARTS_SCHEMA)
 
 
 def _walk_parquet(table_path: str, since_ns: int | None = None):

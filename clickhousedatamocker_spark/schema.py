@@ -57,6 +57,34 @@ SYSTEM_PARTS_SCHEMA = T.StructType(
 )
 
 
+def local_view(spark, rows: list[tuple], schema: T.StructType | str):
+    """A table built in Python (the system views) as a one-partition DataFrame.
+
+    The rows go to the JVM as one Arrow table, which plans as a
+    ``LocalRelation``: reading it starts no Python worker. ``coalesce(1)``
+    gives the scan a single partition, which already satisfies any sort or
+    grouping, so an ORDER BY or GROUP BY over the view plans no exchange.
+    ``schema`` is a StructType or a DDL string; the view keeps it exactly,
+    nullability included. Timestamps convert as ``createDataFrame`` converts
+    Python rows: a naive datetime is process-local time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [() for _ in schema.fields]
+    arrays = []
+    for col, field, afield in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, T.TimestampType):
+            micros = [field.dataType.toInternal(v) for v in col]
+            arrays.append(pa.array(micros, pa.int64()).cast(afield.type))
+        else:
+            arrays.append(pa.array(col, afield.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
 @dataclass
 class TableSpec:
     """Catalog entry: schema + physical layout + mutable settings."""

@@ -1,4 +1,6 @@
+import contextlib
 import os
+import types
 
 import pytest
 
@@ -86,6 +88,22 @@ def spark():
 
     spark = get_spark(app_name="tests", shuffle_partitions=8)
     yield spark
+
+
+@contextlib.contextmanager
+def job_window(spark):
+    """Count the Spark jobs submitted inside the ``with`` block.
+
+    The count is the window of the DAG scheduler's next job id, as
+    ``perfbench/tracing.py`` takes it, so it sees jobs from every thread and
+    needs no listener. ``window.jobs`` is set when the block exits."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    window = types.SimpleNamespace(jobs=None)
+    first = int(dag.nextJobId())
+    try:
+        yield window
+    finally:
+        window.jobs = int(dag.nextJobId()) - first
 
 
 @pytest.fixture()

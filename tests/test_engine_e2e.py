@@ -1,6 +1,7 @@
 """M1 acceptance + miniature harness run (SURVEY §5.2(2), §7 M1)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from clickhousedatamocker_spark.config import HarnessConfig
 from clickhousedatamocker_spark.engine import Engine
@@ -251,3 +252,171 @@ def test_manifest_log_survives_reload(spark, tmp_warehouse):
     fresh.load("test_local", handle.path)
     assert fresh.active_parts_count("test_local", handle.path) == want_active == 24
     assert len(fresh._manifest["test_local"]) == want_total
+
+
+def test_engines_sharing_a_session_never_serve_each_others_views(spark, tmp_path):
+    """Temp views belong to the whole SparkSession: two Engines on one
+    session, alternating, each read their own catalog, parts, metrics and
+    same-named data table, however the other last registered them."""
+    a = Engine(spark, str(tmp_path / "a"))
+    b = Engine(spark, str(tmp_path / "b"))
+    for engine, n, own in ((a, 1, "ta"), (b, 2, "tb")):
+        engine.sql("CREATE TABLE t (k UInt32) ENGINE = MergeTree ORDER BY (k)")
+        engine.sql(f"CREATE TABLE {own} (k UInt32) ENGINE = MergeTree ORDER BY (k)")
+        engine.sql(f"INSERT INTO t VALUES {', '.join(f'({i})' for i in range(n))}")
+    for _ in range(2):
+        for engine, n, own in ((a, 1, "ta"), (b, 2, "tb")):
+            names = [r[0] for r in engine.sql("SELECT name FROM system.tables ORDER BY name").collect()]
+            assert names == sorted(["t", own])
+            assert engine.sql("SELECT count() FROM t").first()[0] == n
+            parts = engine.sql(
+                "SELECT count() FROM system.parts WHERE table = 't' AND active"
+            ).first()[0]
+            assert parts == engine.flow_status("t").active_parts
+            inserted = engine.sql(
+                "SELECT value FROM system.metrics WHERE metric = 'InsertedRows'"
+            ).first()[0]
+            assert inserted == n
+
+
+# (type, nullable) of every system view: the row-built views' shapes,
+# which the Arrow-backed local views keep
+_SYSTEM_VIEW_SCHEMAS = {
+    "parts": ("struct<database:string,table:string,partition:string,name:string,"
+              "rows:bigint,bytes_on_disk:bigint,active:boolean,modification_time:timestamp>", False),
+    "metrics": ("struct<metric:string,value:bigint,description:string>", False),
+    "detached_parts": ("struct<database:string,table:string,partition:string,name:string>", True),
+    "query_log": ("struct<event_time:timestamp,query:string,query_kind:string,"
+                  "duration_ms:double>", True),
+    "tables": ("struct<database:string,name:string,engine:string,alias_of:string,"
+               "partition_key:string,sorting_key:string>", True),
+    "columns": ("struct<database:string,table:string,name:string,type:string,position:int>", True),
+    "projections": ("struct<database:string,table:string,name:string,type:string,query:string,"
+                    "materialized:boolean,backing_table:string>", True),
+    "merges": ("struct<database:string,table:string,partition:string,num_parts:int,"
+               "rows_read:bigint,elapsed:double>", True),
+    "mutations": ("struct<mutation_id:bigint,table:string,command:string,create_time:string,"
+                  "is_done:int>", True),
+    "settings": ("struct<name:string,value:string,changed:int>", True),
+    "functions": ("struct<name:string,origin:string,create_query:string>", True),
+    "databases": ("struct<name:string,engine:string>", True),
+    "processes": ("struct<query:string,elapsed:double,user:string>", True),
+    "disks": ("struct<name:string,path:string,free_space:bigint,total_space:bigint>", True),
+}
+
+
+def _insert_moves_parts_and_metrics(engine, spark):
+    """Also pins system_parts.modification_time under a session time zone
+    other than the process one: the view converts the manifest's naive
+    datetime as createDataFrame converts a Python row (process-local)."""
+    import datetime
+    import json
+    import os
+    import time
+
+    def read():
+        parts = engine.sql("SELECT count() FROM system.parts WHERE table = 't' AND active")
+        rows = engine.sql("SELECT value FROM system.metrics WHERE metric = 'InsertedRows'")
+        return parts.first()[0], rows.first()[0]
+
+    parts0, rows0 = read()
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set(
+        "spark.sql.session.timeZone", "UTC" if time.strftime("%z") == "+0530" else "Asia/Kolkata"
+    )
+    try:
+        engine.sql("INSERT INTO t VALUES (2)")
+        parts1, rows1 = read()
+        got = dict(engine.sql("SELECT name, modification_time FROM system.parts").collect())
+        with open(os.path.join(engine.catalog.table_path("t"), "_parts_manifest.jsonl")) as f:
+            stamps = {r["name"]: r["modification_time"] for r in map(json.loads, f) if "rows" in r}
+        rows = [
+            (name, datetime.datetime.strptime(s, "%Y-%m-%d %H:%M:%S"))
+            for name, s in sorted(stamps.items())
+        ]
+        expected = dict(spark.createDataFrame(rows, "name string, t timestamp").collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert parts1 > parts0 and rows1 == rows0 + 1
+    assert got == expected
+
+
+def _set_moves_settings(engine, spark):
+    read = "SELECT value FROM system.settings WHERE name = 'max_threads'"
+    assert engine.sql(read).collect() == []
+    engine.sql("SET max_threads = 3")
+    assert [r[0] for r in engine.sql(read).collect()] == ["3"]
+
+
+def _create_function_moves_functions(engine, spark):
+    read = "SELECT name FROM system.functions"
+    assert engine.sql(read).collect() == []
+    engine.sql("CREATE FUNCTION plus1 AS (x) -> x + 1")
+    assert [r[0] for r in engine.sql(read).collect()] == ["plus1"]
+
+
+def _running_merge_moves_merges(engine, spark):
+    import time
+
+    read = "SELECT partition, elapsed FROM system.merges"
+    assert engine.sql(read).collect() == []
+    with engine._merges_lock:
+        engine.running_merges["m"] = {
+            "table": "t", "partition": "all", "num_parts": 3, "rows_read": 3,
+            "started": time.monotonic(),
+        }
+    first = engine.sql(read).first()
+    time.sleep(0.05)
+    second = engine.sql(read).first()
+    assert first["partition"] == "all" and second["elapsed"] > first["elapsed"]
+    with engine._merges_lock:
+        engine.running_merges.clear()
+    assert engine.sql(read).collect() == []
+
+
+def _statement_moves_query_log(engine, spark):
+    read = "SELECT query FROM system.query_log"
+    engine.sql("SELECT 41")
+    assert engine.sql(read).collect()[-1][0] == "SELECT 41"
+    assert engine.sql(read).collect()[-1][0] == read
+    # through a plain view that names the log
+    engine.sql("CREATE VIEW recent AS SELECT query FROM system.query_log")
+    engine.sql("SELECT 42")
+    assert engine.sql("SELECT * FROM recent").collect()[-1][0] == "SELECT 42"
+
+
+def _file_write_moves_disks(engine, spark):
+    import os
+
+    read = "SELECT free_space FROM system.disks"
+    before = engine.sql(read).first()[0]
+    with open(os.path.join(engine.catalog.warehouse_dir, "ballast.bin"), "wb") as f:
+        f.write(os.urandom(8 << 20))
+        f.flush()
+        os.fsync(f.fileno())
+    assert engine.sql(read).first()[0] != before
+
+
+_FRESHNESS_CASES = {
+    "insert": _insert_moves_parts_and_metrics,
+    "set": _set_moves_settings,
+    "create_function": _create_function_moves_functions,
+    "running_merge": _running_merge_moves_merges,
+    "statement": _statement_moves_query_log,
+    "file_write": _file_write_moves_disks,
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FRESHNESS_CASES))
+def test_system_view_follows_its_source(spark, tmp_warehouse, case):
+    """Each system view is rebuilt only when its source changed, so each
+    case makes one change and reads the view that must show it. Every
+    system view keeps its schema, nullability included."""
+    engine = Engine(spark, tmp_warehouse)
+    engine.sql("CREATE TABLE t (k UInt32) ENGINE = MergeTree ORDER BY (k)")
+    engine.sql("INSERT INTO t VALUES (1)")
+    _FRESHNESS_CASES[case](engine, spark)
+    for view, (struct, nullable) in _SYSTEM_VIEW_SCHEMAS.items():
+        schema = engine.sql(f"SELECT * FROM system.{view}").schema
+        assert schema.simpleString() == struct, view
+        assert {f.nullable for f in schema.fields} == {nullable}, view

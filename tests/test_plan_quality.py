@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from clickhousedatamocker_spark.queries import REGISTRY
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_window
 
 
 def plan_of(df) -> str:
@@ -374,3 +374,35 @@ def test_dsir_xengine_scoring_is_row_local(spark):
     plan = plan_of(scored)
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_monitoring_poll_is_two_local_jobs(spark, tmp_path):
+    """The reference's monitoring pair (query_metrics.sql + query_parts.sql,
+    polled once per second next to ingest) over a 96-part table: one Spark
+    job per query. The system views are single-partition local relations,
+    so neither query starts a Python worker (no ExistingRDD scan) and
+    neither ORDER BY nor GROUP BY plans an exchange."""
+    from clickhousedatamocker_spark.engine import Engine
+    from clickhousedatamocker_spark.harness import QUERY_METRICS_SQL, QUERY_PARTS_SQL
+    from clickhousedatamocker_spark.schema import test_local_spec
+    from clickhousedatamocker_spark.sources.generator import BatchGenerator
+
+    engine = Engine(spark, str(tmp_path / "warehouse"))
+    engine.create_table(test_local_spec())
+    gen = BatchGenerator(spark, seed=7, base_time="2026-01-01 12:00:00")
+    for i in range(4):
+        engine.insert("test_local", gen.batch_with_partition(1000, batch_no=i))
+    assert engine.flow_status("test_local").active_parts == 96
+
+    with job_window(spark) as window:
+        dfs = [
+            engine.sql(QUERY_METRICS_SQL),
+            engine.sql(QUERY_PARTS_SQL.format(database="default", table="test_local")),
+        ]
+        metrics, parts = (df.collect() for df in dfs)
+    assert window.jobs <= 2
+    assert len(metrics) == 10 and len(parts) == 20
+    for df in dfs:
+        plan = plan_of(df)
+        assert "Exchange" not in plan, plan
+        assert "ExistingRDD" not in plan, plan
