@@ -270,9 +270,16 @@ def _minhash_pairs(
     sig = _minhash_signatures(docs, backend, id_col, text_col, num_hashes, n)
     buckets = _band_buckets(sig, backend, id_col, num_hashes, bands)
     a, b = buckets.alias("a"), buckets.alias("b")
+    # sort-merge, not broadcast: the (band, bh) key is compound, so a
+    # broadcast builds a byte-keyed hash relation whose first page is a full
+    # Tungsten page (64 MB with get_spark's 8 GB driver) however few rows
+    # it holds, and that block stays in the driver's memory store until a GC
+    # happens to collect the plan. Both sides are the same relation, so the
+    # merge join shuffles it once (reused exchange) and frees its sort
+    # memory when each task ends.
     candidates = (
         a.join(
-            b,
+            b.hint("merge"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bh") == F.col("b.bh"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
