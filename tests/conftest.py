@@ -106,6 +106,62 @@ def job_window(spark):
         window.jobs = int(dag.nextJobId()) - first
 
 
+# -- the upstream reference snapshot ----------------------------------------
+#
+# PAPER.md §0 is written against a read-only snapshot of the upstream
+# ClickHouseDataMocker repo, mounted at REFERENCE where it is available. The
+# repo holds none of its files. One rule for every test that touches it: a
+# reference file that exists is read verbatim; where it is absent, a test
+# that only needs the object the file builds uses the package's own record
+# of it, and a test whose subject is the file's text is skipped on its path.
+
+REFERENCE = "/root/reference"
+REF_SQL = f"{REFERENCE}/sql"
+REF_CONF = f"{REFERENCE}/config/clickhouse.conf.example"
+
+# create_distributed.sql:4-6 as SURVEY.md quotes it (the single-node
+# cluster's Distributed alias, no sharding key)
+CREATE_DISTRIBUTED_SQL = (
+    "CREATE TABLE test_distributed AS test_local "
+    "ENGINE = Distributed('default', currentDatabase(), test_local)"
+)
+
+
+def needs_reference(*paths):
+    """skipif mark for a test whose subject is the text of these reference
+    files; the test runs wherever all of them exist."""
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"reference snapshot file absent: {', '.join(missing)}"
+    )
+
+
+def _read_if_exists(path):
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return f.read()
+
+
+def create_test_local(engine):
+    """Create ``test_local``: create_local.sql verbatim through ``engine.sql``
+    where the reference holds it, else from ``schema.test_local_spec()`` (the
+    package's record of the same schema, layout and settings)."""
+    ddl = _read_if_exists(f"{REF_SQL}/create_local.sql")
+    if ddl is not None:
+        engine.sql(ddl)
+    else:
+        from clickhousedatamocker_spark.schema import test_local_spec
+
+        engine.create_table(test_local_spec())
+
+
+def create_distributed_sql():
+    """create_distributed.sql verbatim where the reference holds it, else
+    the statement SURVEY.md quotes from it."""
+    return _read_if_exists(f"{REF_SQL}/create_distributed.sql") or CREATE_DISTRIBUTED_SQL
+
+
 @pytest.fixture()
 def tmp_warehouse(tmp_path):
     return str(tmp_path / "warehouse")

@@ -8,8 +8,12 @@ import pytest
 
 from clickhousedatamocker_spark.engine import Engine
 from clickhousedatamocker_spark.sources.generator import BatchGenerator
-
-REF = "/root/reference/sql"
+from tests.conftest import (
+    REF_SQL,
+    create_distributed_sql,
+    create_test_local,
+    needs_reference,
+)
 
 ALTER_VERBATIM = """
             ALTER TABLE test_local
@@ -19,11 +23,17 @@ ALTER_VERBATIM = """
 """
 
 
+@needs_reference(
+    f"{REF_SQL}/create_local.sql",
+    f"{REF_SQL}/create_distributed.sql",
+    f"{REF_SQL}/query_parts.sql",
+    f"{REF_SQL}/query_metrics.sql",
+)
 def test_reference_sql_lifecycle_verbatim(spark, tmp_warehouse):
     engine = Engine(spark, tmp_warehouse)
 
-    engine.sql(open(f"{REF}/create_local.sql").read())
-    engine.sql(open(f"{REF}/create_distributed.sql").read())
+    engine.sql(open(f"{REF_SQL}/create_local.sql").read())
+    engine.sql(open(f"{REF_SQL}/create_distributed.sql").read())
 
     local = engine.catalog.get("test_local")
     assert local.partition_column == "event_hour"
@@ -46,10 +56,10 @@ def test_reference_sql_lifecycle_verbatim(spark, tmp_warehouse):
     gen = BatchGenerator(spark, seed=5, base_time="2026-01-01 12:00:00")
     engine.insert("test_distributed", gen.batch_with_partition(5000, batch_no=0))
 
-    parts = engine.sql(open(f"{REF}/query_parts.sql").read()).collect()
+    parts = engine.sql(open(f"{REF_SQL}/query_parts.sql").read()).collect()
     assert len(parts) == 20  # LIMIT 20 over 24 hourly partitions
     assert all(r["parts_count"] == 1 for r in parts)
-    metrics = engine.sql(open(f"{REF}/query_metrics.sql").read()).collect()
+    metrics = engine.sql(open(f"{REF_SQL}/query_metrics.sql").read()).collect()
     assert [r["metric"] for r in metrics] == sorted(r["metric"] for r in metrics)
     assert len(metrics) == 10
 
@@ -58,10 +68,11 @@ def test_reference_sql_lifecycle_verbatim(spark, tmp_warehouse):
     assert not engine.catalog.exists("test_local")
 
 
+@needs_reference(f"{REF_SQL}/create_local.sql")
 def test_ddl_create_idempotent_and_types(spark, tmp_warehouse):
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
-    engine.sql(open(f"{REF}/create_local.sql").read())  # IF NOT EXISTS
+    engine.sql(open(f"{REF_SQL}/create_local.sql").read())
+    engine.sql(open(f"{REF_SQL}/create_local.sql").read())  # IF NOT EXISTS
     schema = engine.catalog.get("test_local").schema
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     assert types["id"] == "bigint"  # UInt64
@@ -79,8 +90,8 @@ def test_insert_format_statement_client_flow(spark, tmp_warehouse, tmp_path):
     from clickhousedatamocker_spark.sources.tsv import write_tsv
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
-    engine.sql(open(f"{REF}/create_distributed.sql").read())
+    create_test_local(engine)
+    engine.sql(create_distributed_sql())
 
     gen = BatchGenerator(spark, seed=11, base_time="2026-01-01 12:00:00")
     batch = gen.batch(3000)
@@ -121,7 +132,7 @@ def test_select_format_output_flow(spark, tmp_warehouse, tmp_path):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     engine.insert(
         "test_local",
         BatchGenerator(spark, seed=5, base_time="2026-01-01 12:00:00").batch_with_partition(
@@ -147,7 +158,7 @@ def test_ch_query_dialect_vocabulary(spark, tmp_warehouse):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     engine.insert(
         "test_local",
         BatchGenerator(spark, seed=9, base_time="2026-01-01 12:00:00").batch_with_partition(
@@ -250,7 +261,7 @@ def test_materialized_view_incremental_rollup(spark, tmp_warehouse):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     engine.sql(
         """
         CREATE MATERIALIZED VIEW mv_hourly ENGINE = SummingMergeTree AS
@@ -300,8 +311,8 @@ def test_system_tables_and_columns_introspection(spark, tmp_warehouse):
     """system.tables / system.columns run with CH spellings and reflect the
     catalog (engine kind, partition/sorting keys, column types/positions)."""
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
-    engine.sql(open(f"{REF}/create_distributed.sql").read())
+    create_test_local(engine)
+    engine.sql(create_distributed_sql())
 
     tbls = {r["name"]: r for r in engine.sql("SELECT * FROM system.tables").collect()}
     assert tbls["test_local"]["engine"] == "MergeTree"
@@ -323,7 +334,7 @@ def test_dml_and_admin_statement_forms(spark, tmp_warehouse):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     gen = BatchGenerator(spark, seed=21, base_time="2026-01-01 12:00:00")
     for b in range(2):
         engine.insert("test_local", gen.batch_with_partition(3000, batch_no=b))
@@ -365,7 +376,7 @@ def test_ctas_insert_select_arrayjoin(spark, tmp_warehouse):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     gen = BatchGenerator(spark, seed=31, base_time="2026-01-01 12:00:00")
     engine.insert("test_local", gen.batch_with_partition(4000, batch_no=0))
 
@@ -414,12 +425,13 @@ def test_json_extract_rewrites(spark, tmp_warehouse):
     assert row["present"] and not row["absent"]
 
 
+@needs_reference(f"{REF_SQL}/create_local.sql")
 def test_table_ttl_eviction(spark, tmp_warehouse):
     """MergeTree TTL: rows whose `event_time + INTERVAL 1 DAY` falls before
     now are evicted by OPTIMIZE (CH applies TTL during merges), as a
     partition-pruned mutation."""
     engine = Engine(spark, tmp_warehouse)
-    ddl = open(f"{REF}/create_local.sql").read()
+    ddl = open(f"{REF_SQL}/create_local.sql").read()
     assert "SETTINGS" in ddl
     ddl = ddl.replace("SETTINGS", "TTL event_time + INTERVAL 1 DAY SETTINGS", 1)
     engine.sql(ddl)
@@ -509,7 +521,7 @@ def test_select_into_outfile(spark, tmp_warehouse, tmp_path):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     engine.insert(
         "test_local",
         BatchGenerator(spark, seed=5, base_time="2026-01-01 12:00:00").batch_with_partition(
@@ -641,11 +653,12 @@ def test_bare_translate_raises_on_semantic_settings():
         translate_ch_sql("SELECT * FROM t SETTINGS final = 1")
 
 
+@needs_reference(f"{REF_SQL}/create_local.sql")
 def test_sample_by_clause(spark, tmp_warehouse):
     """SAMPLE BY in DDL + FROM t SAMPLE f: deterministic hash-threshold
     subset — same rows every run; errors without a SAMPLE BY key (as CH)."""
     engine = Engine(spark, tmp_warehouse)
-    ddl = open(f"{REF}/create_local.sql").read().replace(
+    ddl = open(f"{REF_SQL}/create_local.sql").read().replace(
         "SETTINGS", "SAMPLE BY id SETTINGS", 1
     )
     engine.sql(ddl)
@@ -683,7 +696,7 @@ def test_with_totals(spark, tmp_warehouse):
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     engine.insert(
         "test_local",
         BatchGenerator(spark, seed=41, base_time="2026-01-01 12:00:00").batch_with_partition(
@@ -736,6 +749,7 @@ def test_parameterized_types_and_bare_engine_forms():
         )
 
 
+@needs_reference(f"{REF_SQL}/create_local.sql", f"{REF_SQL}/create_distributed.sql")
 def test_show_create_table_roundtrips(spark, tmp_path):
     """SHOW CREATE TABLE renders CH-dialect DDL that our own parser accepts
     back into an equivalent spec (the strongest self-consistency check);
@@ -744,8 +758,8 @@ def test_show_create_table_roundtrips(spark, tmp_path):
     from clickhousedatamocker_spark.functions.compat import parse_ch_ddl
 
     engine = Engine(spark, str(tmp_path / "wh"))
-    engine.sql(open(f"{REF}/create_local.sql").read())
-    engine.sql(open(f"{REF}/create_distributed.sql").read())
+    engine.sql(open(f"{REF_SQL}/create_local.sql").read())
+    engine.sql(open(f"{REF_SQL}/create_distributed.sql").read())
 
     stmt = engine.sql("SHOW CREATE TABLE test_local").first()["statement"]
     d = parse_ch_ddl(stmt)
@@ -1585,7 +1599,7 @@ def test_optimize_partition_scoped(spark, tmp_warehouse):
     O(partition) where the unscoped form is a table rewrite; unknown
     partitions no-op."""
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     gen = BatchGenerator(spark, seed=11, base_time="2026-01-01 12:00:00")
@@ -1791,7 +1805,7 @@ def test_create_database_backup_restore(spark, tmp_warehouse, tmp_path):
         engine.sql("DROP DATABASE default")
     engine.sql("DROP DATABASE analytics")
 
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     from clickhousedatamocker_spark.sources.generator import BatchGenerator
 
     gen = BatchGenerator(spark, seed=13, base_time="2026-01-01 12:00:00")

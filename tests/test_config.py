@@ -4,10 +4,10 @@ HarnessConfig fields, connection/log keys (no server here) pass through to
 ``extra`` untouched."""
 
 from clickhousedatamocker_spark.config import HarnessConfig
+from tests.conftest import REF_CONF, needs_reference
 
-REF_CONF = "/root/reference/config/clickhouse.conf.example"
 
-
+@needs_reference(REF_CONF)
 def test_reference_conf_example_parses_verbatim():
     cfg = HarnessConfig.from_conf_file(REF_CONF)
     assert cfg.database == "default"

@@ -18,8 +18,7 @@ from pyspark.sql import types as T
 from clickhousedatamocker_spark.engine import Engine
 from clickhousedatamocker_spark.functions.compat import parse_ch_ddl, parse_ch_type
 from clickhousedatamocker_spark.sources.generator import BatchGenerator
-
-REF = "/root/reference/sql"
+from tests.conftest import create_distributed_sql, create_test_local
 
 
 # -- DDL parser hardening ----------------------------------------------------
@@ -84,7 +83,7 @@ def test_parse_distributed_engine_args():
     assert out["of"] == "local"
     assert out["distributed"] == {"cluster": "c2", "sharding_key": "user_id"}
     # the reference's form: no sharding key
-    out = parse_ch_ddl(open(f"{REF}/create_distributed.sql").read())
+    out = parse_ch_ddl(create_distributed_sql())
     assert out["distributed"] == {"cluster": "default", "sharding_key": None}
 
 
@@ -99,7 +98,7 @@ def test_alias_with_unknown_engine_tail_errors():
 @pytest.fixture
 def sharded_engine(spark, tmp_warehouse):
     e = Engine(spark, tmp_warehouse, clusters={"c2": 2})
-    e.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(e)
     e.sql(
         "CREATE TABLE test_distributed AS test_local "
         "ENGINE = Distributed('c2', currentDatabase(), test_local, user_id)"
@@ -130,7 +129,7 @@ def test_shard_routing_partitions_by_key(spark, sharded_engine):
 
 def test_multishard_without_key_rejected(spark, tmp_warehouse):
     e = Engine(spark, tmp_warehouse, clusters={"c2": 2})
-    e.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(e)
     e.sql(
         "CREATE TABLE test_distributed AS test_local "
         "ENGINE = Distributed('c2', currentDatabase(), test_local)"
@@ -173,7 +172,7 @@ def test_async_insert_backlog_and_flush(spark, sharded_engine):
 
 def test_async_insert_on_local_table_rejected(spark, tmp_warehouse):
     e = Engine(spark, tmp_warehouse)
-    e.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(e)
     batch = BatchGenerator(spark, seed=1, base_time="2026-01-01 12:00:00").batch(10)
     with pytest.raises(ValueError, match="local"):
         e.insert("test_local", batch, async_insert=True)

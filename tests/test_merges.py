@@ -10,14 +10,14 @@ import pytest
 from clickhousedatamocker_spark.engine import Engine
 from clickhousedatamocker_spark.plans.flow_control import TooManyPartsError
 from clickhousedatamocker_spark.sources.generator import BatchGenerator
+from tests.conftest import create_test_local
 
-REF = "/root/reference/sql"
 BASE = "2026-01-01 12:00:00"
 
 
 def _mk(spark, tmp_warehouse, n_batches, rows=400):
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     gen = BatchGenerator(spark, seed=3, base_time=BASE)
     for i in range(n_batches):
         engine.insert("test_local", gen.batch_with_partition(rows, batch_no=i))
@@ -58,7 +58,7 @@ def test_flow_control_equilibrium_with_and_without_merges(spark, tmp_warehouse):
     delay then throw, exactly the set_flow_control.sh observation."""
     # merges keep parts <= 3 per partition -> 72 total, under delay=100
     engine = Engine(spark, tmp_warehouse + "/merged")
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     engine.sql(
         "ALTER TABLE test_local MODIFY SETTING "
         "parts_to_delay_insert = 100, parts_to_throw_insert = 150"
@@ -74,7 +74,7 @@ def test_flow_control_equilibrium_with_and_without_merges(spark, tmp_warehouse):
 
     # same workload, merges off: 24 new parts/insert -> crosses 100 then 150
     engine2 = Engine(spark, tmp_warehouse + "/unmerged")
-    engine2.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine2)
     engine2.sql(
         "ALTER TABLE test_local MODIFY SETTING "
         "parts_to_delay_insert = 100, parts_to_throw_insert = 150"
@@ -117,7 +117,7 @@ def test_merge_applies_replacing_collapse_within_merged_parts(spark, tmp_warehou
 def test_background_merge_thread(spark, tmp_warehouse):
     """The daemon-pool form: merges happen while inserts keep flowing."""
     engine = Engine(spark, tmp_warehouse)
-    engine.sql(open(f"{REF}/create_local.sql").read())
+    create_test_local(engine)
     gen = BatchGenerator(spark, seed=7, base_time=BASE)
     sched = engine.start_background_merges(
         "test_local", interval_s=0.05, min_parts_to_merge=3
