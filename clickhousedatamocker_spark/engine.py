@@ -726,12 +726,12 @@ class Engine:
         (``<tag>_<i>_<name>``) — NEVER deleting anything at either end.
         Both repeat-DETACH (a detached copy already exists) and ATTACH onto
         a re-created partition merge file sets, like CH's suffixing of
-        detached part names. Returns files moved; removes the emptied
-        src_dir."""
+        detached part names. Returns the moved files' names in dst_dir;
+        removes the emptied src_dir."""
         import shutil
 
         os.makedirs(dst_dir, exist_ok=True)
-        moved = 0
+        moved = []
         for fname in sorted(os.listdir(src_dir)):
             src = os.path.join(src_dir, fname)
             dst = os.path.join(dst_dir, fname)
@@ -744,7 +744,7 @@ class Engine:
                 dst = os.path.join(dst_dir, f"{tag}_{i}_{fname}")
                 i += 1
             shutil.move(src, dst)
-            moved += 1
+            moved.append(os.path.basename(dst))
         os.rmdir(src_dir)
         return moved
 
@@ -774,9 +774,16 @@ class Engine:
         part_dir, detached_dir = self._partition_dir(handle, partition)
         if not os.path.isdir(detached_dir):
             raise FileNotFoundError(f"no detached partition {partition!r} for {table!r}")
-        self._move_files_merging(detached_dir, part_dir, "attached")
+        # register exactly the moved files, under the inventory lock so no
+        # concurrent insert's commit walk claims them in between
+        with self.parts.lock:
+            moved = self._move_files_merging(detached_dir, part_dir, "attached")
+            new_parts = self.parts.commit_parts(
+                handle.name,
+                handle.path,
+                [os.path.join(os.path.basename(part_dir), f) for f in moved if f.endswith(".parquet")],
+            )
         self._detached_version += 1
-        new_parts = self.parts.record_commit(handle.name, handle.path, since_ns=None)
         return len(new_parts)
 
     def update_where(self, table: str, assignments: dict[str, str], predicate: str) -> int:

@@ -19,7 +19,11 @@ shuffle-free Parquet append:
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -183,6 +187,20 @@ def _merge_collapse(df: DataFrame, handle: TableHandle, family: str) -> DataFram
     raise NotImplementedError(f"unsupported MergeTree family {family!r}")
 
 
+def _sorted(df: DataFrame, order: list[str]) -> DataFrame:
+    """Re-sort a part rewrite on the ORDER BY key (none for keyless tables)."""
+    return df.sortWithinPartitions(*order) if order else df
+
+
+def _remove_part(path: str) -> None:
+    """Delete a part file and the checksum sidecar the committer wrote next
+    to it."""
+    os.remove(path)
+    head, tail = os.path.split(path)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(head, f".{tail}.crc"))
+
+
 def _mutation_schema(handle: TableHandle):
     from pyspark.sql import types as T
 
@@ -254,8 +272,7 @@ class Writer:
                     df = df.repartition(buckets, F.col(part_col))
                 else:
                     df = df.repartition(F.col(part_col))
-        if handle.order_columns:
-            df = df.sortWithinPartitions(*handle.order_columns)
+        df = _sorted(df, handle.order_columns)
 
         # watermark taken before the write: commit discovery then walks only
         # partition dirs the write touched — O(#partitions + new files) per
@@ -283,6 +300,120 @@ class Writer:
             delay_s=decision.delay_s,
         )
 
+    def rewrite_parts(
+        self, spark, handle: TableHandle, partition: str, old: list[dict], transform, n_files: int = 1
+    ) -> list[dict] | None:
+        """The one part-rewrite primitive (merges, OPTIMIZE, mutations):
+        read exactly the ``old`` parts of one partition, write
+        ``transform(df)`` as ``n_files`` new parts and swap them in.
+
+        The rewrite runs unlocked in a staging dir unique to this call: its
+        leading dot hides it from Spark readers of the table (which would
+        otherwise take ``<dir>.<id>.tmp`` for a partition value and fail),
+        its ``.tmp`` suffix from an insert's commit walk. The swap is the
+        critical section, under the inventory lock: if any old part is no
+        longer active (a concurrent rewrite or DETACH took it), the output
+        is discarded and None returned. Otherwise the new files move in
+        BEFORE the old ones go (a crash in between leaves duplicated rows,
+        never lost ones), and one ``commit_parts`` retires the old names and
+        registers exactly the moved files — never an unrelated file, such as
+        an in-flight insert's. Returns the new part dicts.
+
+        Known limitation (documented): a concurrent SELECT that listed
+        files before the swap can hit a deleted part — CH solves this with
+        MVCC part snapshots; here, as with any file-source compaction,
+        re-run the read."""
+        table, names = handle.name, [p["name"] for p in old]
+        sub = f"{handle.partition_column}={partition}" if handle.partition_column else ""
+        part_dir = os.path.join(handle.path, sub).rstrip("/")
+
+        def still_active() -> bool:
+            return set(names) <= set(self.parts.active_names(table, handle.path, partition))
+
+        if not still_active():
+            return None
+        head, tail = os.path.split(part_dir)
+        staging = os.path.join(head, f".{tail}.{uuid.uuid4().hex}.tmp")
+        try:
+            try:
+                df = spark.read.schema(handle.schema).parquet(
+                    *[os.path.join(handle.path, n) for n in names]
+                )
+                transform(df).coalesce(n_files).write.mode("overwrite").parquet(staging)
+            except Exception:
+                if still_active():
+                    raise
+                return None  # an old file vanished mid-read: the rewrite lost the race
+            with self.parts.lock:
+                if not still_active():
+                    return None
+                moved = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+                for f in moved:
+                    shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
+                for n in names:
+                    _remove_part(os.path.join(handle.path, n))
+                new_parts = self.parts.commit_parts(
+                    table, handle.path, [os.path.join(sub, f) for f in moved], retire=names
+                )
+                n_active = self.parts.active_parts_count(table, handle.path)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        if self.metrics is not None:
+            self.metrics.set("PartsActive", n_active)
+            self.metrics.set("PartsCommitted", n_active)
+        return new_parts
+
+    def _rewrite_partitions(self, spark, handle: TableHandle, partitions, transform_for, n_files=None) -> int:
+        """Rewrite ALL active parts of each listed partition through
+        :meth:`rewrite_parts` (``transform_for(partition)`` builds the
+        transform; ``n_files`` None keeps the part count). A rewrite that
+        loses the race to a concurrent merge re-reads the partition's
+        current parts and runs again, so a mutation is never skipped.
+        Returns the old parts' manifest rows minus the new parts' rows."""
+        dropped = 0
+        for pv in partitions:
+            while True:
+                old = self.parts.active_by_partition(handle.name, handle.path).get(pv)
+                if not old:
+                    break
+                new = self.rewrite_parts(
+                    spark, handle, pv, old, transform_for(pv), n_files or len(old)
+                )
+                if new is not None:
+                    dropped += sum(p["rows"] for p in old) - sum(p["rows"] for p in new)
+                    break
+        return dropped
+
+    def _matches(self, spark, handle: TableHandle, predicate: str) -> dict[str, int]:
+        """Rows matching ``predicate`` per partition value, partitions with
+        none left out — one pruned scan (the pseudo-partition "all" when
+        unpartitioned)."""
+        part_col = handle.partition_column
+        hits = spark.read.schema(_mutation_schema(handle)).parquet(handle.path).filter(F.expr(predicate))
+        if not part_col:
+            n = hits.count()
+            return {"all": n} if n else {}
+        return {str(r[0]): r[1] for r in hits.groupBy(part_col).count().collect()}
+
+    def _mutation(self, handle: TableHandle, body, order=None):
+        """Transform factory for the row mutations: per partition, the
+        partition value (not stored in the files) is materialized so
+        predicates may reference it, ``body`` applies, and the value is
+        dropped again before the sorted write."""
+        part_col = handle.partition_column
+        order = handle.order_columns if order is None else order
+
+        def transform_for(pv):
+            def transform(df):
+                if part_col:
+                    df = df.withColumn(part_col, F.lit(pv).cast("int"))
+                df = body(df)
+                return _sorted(df.drop(part_col) if part_col else df, order)
+
+            return transform
+
+        return transform_for
+
     def mutate_delete(self, spark, handle: TableHandle, predicate: str) -> int:
         """ClickHouse ``ALTER TABLE … DELETE WHERE predicate`` semantics:
         rewrite only the parts whose partition might contain matching rows,
@@ -291,68 +422,14 @@ class Writer:
         scoped: untouched partitions' files are never read or rewritten.
         Returns the number of rows deleted.
         """
-        import os
-        import shutil
-
-        from pyspark.sql import functions as F  # noqa: F811
-
-        table = handle.name
-        self.parts.load(table, handle.path)
-        part_col = handle.partition_column
-
-        full = spark.read.schema(_mutation_schema(handle)).parquet(handle.path)
-        # partitions that contain at least one matching row (pruned scan)
-        if part_col:
-            hit_parts = [
-                r[part_col]
-                for r in full.filter(F.expr(predicate)).select(part_col).distinct().collect()
-            ]
-        else:
-            hit_parts = [None]
+        hit_parts = self._matches(spark, handle, predicate)
         if not hit_parts:
             return 0
-
-        deleted = 0
-        for pv in hit_parts:
-            part_dir = (
-                os.path.join(handle.path, f"{part_col}={pv}") if part_col else handle.path
-            )
-            old = [
-                p
-                for p in self.parts._manifest[table]
-                if p["active"] and (str(p["partition"]) == str(pv) or part_col is None)
-            ]
-            sub = spark.read.schema(handle.schema).parquet(part_dir)
-            if part_col:
-                # partition value isn't stored in the files; materialize it
-                # so predicates may reference it, drop it again pre-write
-                sub = sub.withColumn(part_col, F.lit(pv).cast("int"))
-            keep = sub.filter(~F.expr(predicate))
-            if part_col:
-                keep = keep.drop(part_col)
-            n_before = sub.count()
-            n_after = keep.count()
-            deleted += n_before - n_after
-            staging = part_dir + ".mutate.tmp"
-            w = keep
-            if handle.order_columns:
-                w = w.sortWithinPartitions(*handle.order_columns)
-            w.coalesce(max(1, len(old))).write.mode("overwrite").parquet(staging)
-            for p in old:
-                f = os.path.join(handle.path, p["name"])
-                if os.path.exists(f):
-                    os.remove(f)
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
-            shutil.rmtree(staging, ignore_errors=True)
-            self.parts.retire(table, handle.path, [p["name"] for p in old])
-        self.parts.record_commit(table, handle.path)
-        self.parts.save(table, handle.path)  # rewrite paths compact the log
+        deleted = self._rewrite_partitions(
+            spark, handle, hit_parts, self._mutation(handle, lambda df: df.filter(~F.expr(predicate)))
+        )
         if self.metrics is not None:
             self.metrics.incr("PartsMutations")
-            self.metrics.set("PartsActive", self.parts.active_parts_count(table, handle.path))
-            self.metrics.set("PartsCommitted", self.parts.active_parts_count(table, handle.path))
         return deleted
 
     def mutate_update(
@@ -364,78 +441,29 @@ class Writer:
         Returns the number of rows updated. The partition column itself is
         not assignable (CH shares this restriction — it would move rows
         between partitions)."""
-        import os
-        import shutil
-
-        from pyspark.sql import functions as F  # noqa: F811
-
         part_col = handle.partition_column
         if part_col and part_col in assignments:
             raise ValueError(f"cannot UPDATE the partition column {part_col!r}")
-        table = handle.name
-        self.parts.load(table, handle.path)
-
-        full = spark.read.schema(_mutation_schema(handle)).parquet(handle.path)
-        if part_col:
-            hit_parts = [
-                r[part_col]
-                for r in full.filter(F.expr(predicate)).select(part_col).distinct().collect()
-            ]
-        else:
-            hit_parts = [None]
+        hit_parts = self._matches(spark, handle, predicate)
         if not hit_parts:
             return 0
+        match = F.expr(predicate)
 
-        updated = 0
-        for pv in hit_parts:
-            part_dir = (
-                os.path.join(handle.path, f"{part_col}={pv}") if part_col else handle.path
-            )
-            old = [
-                p
-                for p in self.parts._manifest[table]
-                if p["active"] and (str(p["partition"]) == str(pv) or part_col is None)
-            ]
-            sub = spark.read.schema(handle.schema).parquet(part_dir)
-            if part_col:
-                sub = sub.withColumn(part_col, F.lit(pv).cast("int"))
-            match = F.expr(predicate)
-            updated += sub.filter(match).count()
-            new = sub.select(
+        def update(df):
+            types = dict(df.dtypes)
+            return df.select(
                 *[
-                    (
-                        F.when(match, F.expr(assignments[c])).otherwise(F.col(c)).cast(
-                            dict(sub.dtypes)[c]
-                        )
-                        if c in assignments
-                        else F.col(c)
-                    ).alias(c)
-                    for c in sub.columns
+                    F.when(match, F.expr(assignments[c])).otherwise(F.col(c)).cast(types[c]).alias(c)
+                    if c in assignments
+                    else F.col(c)
+                    for c in df.columns
                 ]
             )
-            if part_col:
-                new = new.drop(part_col)
-            staging = part_dir + ".mutate.tmp"
-            w = new
-            if handle.order_columns:
-                w = w.sortWithinPartitions(*handle.order_columns)
-            w.coalesce(max(1, len(old))).write.mode("overwrite").parquet(staging)
-            for p in old:
-                f = os.path.join(handle.path, p["name"])
-                if os.path.exists(f):
-                    os.remove(f)
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
-            shutil.rmtree(staging, ignore_errors=True)
-            self.parts.retire(table, handle.path, [p["name"] for p in old])
-        self.parts.record_commit(table, handle.path)
-        self.parts.save(table, handle.path)  # rewrite paths compact the log
+
+        self._rewrite_partitions(spark, handle, hit_parts, self._mutation(handle, update))
         if self.metrics is not None:
             self.metrics.incr("PartsMutations")
-            self.metrics.set("PartsActive", self.parts.active_parts_count(table, handle.path))
-            self.metrics.set("PartsCommitted", self.parts.active_parts_count(table, handle.path))
-        return updated
+        return sum(hit_parts.values())
 
     def mutate_rename_column(self, spark, handle: TableHandle, old_name: str, new_name: str) -> int:
         """Physically rewrite every active part with the column renamed.
@@ -445,60 +473,17 @@ class Writer:
         ALTER … UPDATE) because parts store the physical column name in
         their parquet footers — DOCUMENTED DEVIATION: correct semantics,
         O(table) cost. Returns rows rewritten."""
-        import os
-        import shutil
-
-        from pyspark.sql import functions as F  # noqa: F811
-
-        part_col = handle.partition_column
-        table = handle.name
-        self.parts.load(table, handle.path)
-        if part_col:
-            pvs = sorted(
-                {
-                    str(p["partition"])
-                    for p in self.parts._manifest[table]
-                    if p["active"]
-                }
-            )
-        else:
-            pvs = [None]
-        rewritten = 0
-        for pv in pvs:
-            part_dir = (
-                os.path.join(handle.path, f"{part_col}={pv}") if part_col else handle.path
-            )
-            if not os.path.isdir(part_dir):
-                continue
-            old = [
-                p
-                for p in self.parts._manifest[table]
-                if p["active"] and (str(p["partition"]) == str(pv) or part_col is None)
-            ]
-            sub = spark.read.schema(handle.schema).parquet(part_dir)
-            rewritten += sub.count()
-            w = sub.withColumnRenamed(old_name, new_name)
-            order = [new_name if c == old_name else c for c in handle.order_columns]
-            if order:
-                w = w.sortWithinPartitions(*order)
-            staging = part_dir + ".mutate.tmp"
-            w.coalesce(max(1, len(old))).write.mode("overwrite").parquet(staging)
-            for p in old:
-                f = os.path.join(handle.path, p["name"])
-                if os.path.exists(f):
-                    os.remove(f)
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
-            shutil.rmtree(staging, ignore_errors=True)
-            self.parts.retire(table, handle.path, [p["name"] for p in old])
-        self.parts.record_commit(table, handle.path)
-        self.parts.save(table, handle.path)
+        by_partition = self.parts.active_by_partition(handle.name, handle.path)
+        order = [new_name if c == old_name else c for c in handle.order_columns]
+        self._rewrite_partitions(
+            spark,
+            handle,
+            sorted(by_partition),
+            self._mutation(handle, lambda df: df.withColumnRenamed(old_name, new_name), order),
+        )
         if self.metrics is not None:
             self.metrics.incr("PartsMutations")
-            self.metrics.set("PartsActive", self.parts.active_parts_count(table, handle.path))
-            self.metrics.set("PartsCommitted", self.parts.active_parts_count(table, handle.path))
-        return rewritten
+        return sum(p["rows"] for plist in by_partition.values() for p in plist)
 
     def optimize(
         self, spark, handle: TableHandle, deduplicate: bool = False, partition: str | None = None
@@ -512,58 +497,25 @@ class Writer:
         CH's default column list). Partition-local like the merge itself:
         CH deduplicates within the merging parts, never across partitions.
         """
-        import os
-        import shutil
-
-        table = handle.name
-        self.parts.load(table, handle.path)
-        by_partition: dict[str, list[dict]] = {}
-        for p in self.parts._manifest[table]:
-            if p["active"]:
-                by_partition.setdefault(p["partition"], []).append(p)
+        by_partition = self.parts.active_by_partition(handle.name, handle.path)
         if partition is not None:
             # OPTIMIZE ... PARTITION 'p': compact ONE partition — O(its
             # parts), never a table rewrite; unknown values no-op like CH
             by_partition = {k: v for k, v in by_partition.items() if k == str(partition)}
-
         family = (handle.engine or {}).get("family", "MergeTree")
-        compacted = 0
-        for partition, plist in by_partition.items():
-            # plain MergeTree: single-part partitions need no merge; the
-            # collapsing families (and DEDUPLICATE) must still process them
-            # (duplicates can live INSIDE one part — CH's OPTIMIZE FINAL
-            # does the same)
-            if len(plist) < 2 and family == "MergeTree" and not deduplicate:
-                continue
-            # unpartitioned tables ("all" pseudo-partition): parts live at
-            # the table root, not under a key=value dir
-            part_dir = (
-                os.path.join(handle.path, f"{handle.partition_column}={partition}")
-                if handle.partition_column
-                else handle.path
-            )
-            staging = part_dir.rstrip("/") + ".compact.tmp"
-            merged = spark.read.schema(handle.schema).parquet(part_dir)
-            merged = _merge_collapse(merged, handle, family)
-            if deduplicate:
-                merged = merged.dropDuplicates()
-            if handle.order_columns:
-                merged = merged.sortWithinPartitions(*handle.order_columns)
-            merged.coalesce(1).write.mode("overwrite").parquet(staging)
-            old_files = [os.path.join(part_dir, os.path.basename(p["name"])) for p in plist]
-            new_files = [f for f in os.listdir(staging) if f.endswith(".parquet")]
-            for f in new_files:
-                shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
-            shutil.rmtree(staging, ignore_errors=True)
-            for f in old_files:
-                if os.path.exists(f):
-                    os.remove(f)
-            self.parts.retire(table, handle.path, [p["name"] for p in plist])
-            compacted += 1
-        # register the newly-written compacted files (anything on disk not yet known)
-        self.parts.record_commit(table, handle.path)
-        self.parts.save(table, handle.path)  # rewrite paths compact the log
-        if self.metrics is not None:
-            self.metrics.set("PartsActive", self.parts.active_parts_count(table, handle.path))
-            self.metrics.set("PartsCommitted", self.parts.active_parts_count(table, handle.path))
-        return compacted
+        # plain MergeTree: single-part partitions need no merge; the
+        # collapsing families (and DEDUPLICATE) must still process them
+        # (duplicates can live INSIDE one part — CH's OPTIMIZE FINAL does
+        # the same)
+        targets = [
+            pv
+            for pv, plist in by_partition.items()
+            if len(plist) >= 2 or family != "MergeTree" or deduplicate
+        ]
+
+        def transform(df):
+            df = _merge_collapse(df, handle, family)
+            return _sorted(df.dropDuplicates() if deduplicate else df, handle.order_columns)
+
+        self._rewrite_partitions(spark, handle, targets, lambda pv: transform, n_files=1)
+        return len(targets)

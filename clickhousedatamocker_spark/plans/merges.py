@@ -30,12 +30,10 @@ background pool (Spark job submission is thread-safe).
 
 from __future__ import annotations
 
-import os
-import shutil
 import threading
 import time
 
-from clickhousedatamocker_spark.plans.ingest import _merge_collapse
+from clickhousedatamocker_spark.plans.ingest import _merge_collapse, _sorted
 
 
 class MergeScheduler:
@@ -66,12 +64,7 @@ class MergeScheduler:
     def select(self, table: str, table_path: str) -> list[tuple[str, list[dict]]]:
         """CH-style merge selection: per partition with >= min_parts_to_merge
         active parts, the max_parts_per_merge smallest parts by bytes."""
-        with self.parts.lock:
-            self.parts.load(table, table_path)
-            by_partition: dict[str, list[dict]] = {}
-            for p in self.parts._manifest[table]:
-                if p["active"]:
-                    by_partition.setdefault(p["partition"], []).append(dict(p))
+        by_partition = self.parts.active_by_partition(table, table_path)
         picks = []
         for partition in sorted(by_partition):
             plist = by_partition[partition]
@@ -107,18 +100,10 @@ class MergeScheduler:
         return len(picks)
 
     def _merge(self, spark, handle, partition: str, plist: list[dict]) -> None:
-        """Rewrite the selected parts of one partition into a single part —
-        the same staging/move/retire mechanics as Writer.optimize, scoped to
-        a subset (a real merge never touches the partition's other parts)."""
-        part_dir = (
-            os.path.join(handle.path, f"{handle.partition_column}={partition}")
-            if handle.partition_column
-            else handle.path
-        )
-        files = [os.path.join(part_dir, os.path.basename(p["name"])) for p in plist]
-        files = [f for f in files if os.path.exists(f)]
-        if len(files) < 2:
-            return
+        """Rewrite the selected parts of one partition into a single part
+        through :meth:`Writer.rewrite_parts`, scoped to a subset (a real
+        merge never touches the partition's other parts). Picks that a
+        concurrent rewrite already retired merge nothing."""
         if self.metrics is not None:
             self.metrics.incr("Merge")
         key = (handle.name, partition)
@@ -132,38 +117,15 @@ class MergeScheduler:
             }
         try:
             family = (handle.engine or {}).get("family", "MergeTree")
-            merged = spark.read.schema(handle.schema).parquet(*files)
-            merged = _merge_collapse(merged, handle, family)
-            staging = part_dir.rstrip("/") + ".merge.tmp"
-            (
-                merged.sortWithinPartitions(*handle.order_columns)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(staging)
+            merged = self.writer.rewrite_parts(
+                spark,
+                handle,
+                partition,
+                plist,
+                lambda df: _sorted(_merge_collapse(df, handle, family), handle.order_columns),
             )
-            # The rewrite above ran unlocked (long Spark job; inserts only
-            # ADD files, so the staged read is stable). The swap + manifest
-            # update is the critical section: atomic w.r.t. a concurrent
-            # insert's record_commit. Known limitation (documented): a
-            # concurrent SELECT that listed files before the swap can hit
-            # a deleted part — CH solves this with MVCC part snapshots;
-            # here, as with any file-source compaction, re-run the read.
-            with self.parts.lock:
-                for f in os.listdir(staging):
-                    if f.endswith(".parquet"):
-                        shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
-                shutil.rmtree(staging, ignore_errors=True)
-                for f in files:
-                    os.remove(f)
-                table = handle.name
-                self.parts.retire(table, handle.path, [p["name"] for p in plist])
-                self.parts.record_commit(table, handle.path)
-                self.parts.save(table, handle.path)
-                if self.metrics is not None:
-                    n = self.parts.active_parts_count(table, handle.path)
-                    self.metrics.set("PartsActive", n)
-                    self.metrics.set("PartsCommitted", n)
-                    self.metrics.incr("MergedRows", sum(p["rows"] for p in plist))
+            if merged is not None and self.metrics is not None:
+                self.metrics.incr("MergedRows", sum(p["rows"] for p in plist))
         finally:
             with self.registry_lock:
                 self.registry.pop(key, None)

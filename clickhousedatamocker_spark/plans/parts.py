@@ -10,19 +10,19 @@ parts without losing observability — mirroring ``system.parts.active``.
 Per-insert cost is independent of total part count (the 100 TB growth
 discipline):
 
-- the commit log is APPEND-ONLY — an insert writes O(new parts) records,
-  never a full-manifest rewrite (the log is compacted when ``optimize``
-  rewrites the data files anyway);
+- the commit log is APPEND-ONLY — an insert, a part rewrite or an ATTACH
+  writes O(changed parts) records, never a full-manifest rewrite (only
+  FREEZE/BACKUP compact it, so the copied log is self-contained);
 - new-file discovery walks only partition directories whose mtime moved
   past the insert's start watermark — O(#partitions + new files), not
   O(all files); the known-file set diff is an in-memory hash lookup;
 - the flow-control input (``active_parts_count``) is an incrementally
   maintained counter, not a per-call scan.
 
-At 100 TB the same contract is a metastore/Delta-log job; the full-walk
-fallback (``since_ns=None``) keeps the view correct on externally-written
-tables. Row counts come from parquet footers (metadata-only reads, new
-files only).
+Only an insert discovers files by walking; every other path that adds
+files (part rewrites, ATTACH) registers exactly the files it moved in, so
+no path can claim another's in-flight files. Row counts come from parquet
+footers (metadata-only reads, new files only).
 """
 
 from __future__ import annotations
@@ -126,8 +126,8 @@ class PartsInventory:
 
     @_locked
     def save(self, table: str, table_path: str) -> None:
-        """Full log compaction — rewrite current state. Called from the
-        compaction paths (which rewrite data files anyway), never per-insert."""
+        """Full log compaction — rewrite current state. Called before
+        FREEZE/BACKUP copy the table, never per-insert or per-rewrite."""
         log = self._log_path(table_path)
         with open(log + ".tmp", "w") as f:
             for p in self._manifest.get(table, []):
@@ -139,59 +139,70 @@ class PartsInventory:
 
     # -- commits ----------------------------------------------------------
     @_locked
-    def record_commit(
-        self, table: str, table_path: str, since_ns: int | None = None
-    ) -> list[dict]:
+    def record_commit(self, table: str, table_path: str, since_ns: int) -> list[dict]:
         """Register every data file not yet in the known set as an active
         part. ``since_ns`` (a ``time.time_ns()`` watermark taken before the
-        write) scopes the directory walk to partitions the write touched;
-        ``None`` forces a full walk (mutation/compaction paths, externally
-        written tables)."""
+        write) scopes the directory walk to partitions the write touched."""
+        return self.commit_parts(table, table_path, list(_walk_parquet(table_path, since_ns)))
+
+    @_locked
+    def commit_parts(
+        self, table: str, table_path: str, names: list[str], retire: tuple | list = ()
+    ) -> list[dict]:
+        """Register exactly ``names`` (file paths relative to the table) as
+        active parts and retire the ``retire`` names, as one log append —
+        a part rewrite swaps its inputs for its output in one step. Names
+        already known are skipped. Returns the new part dicts."""
         self._ensure_loaded(table, table_path)
         known = self._known[table]
-        new_parts = []
         now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-        for partition, fname, full in _walk_parquet(table_path, since_ns):
-            rel = os.path.join(partition or "", fname)
+        new_parts = []
+        for rel in names:
             if rel in known:
                 continue
-            part = {
-                "partition": _partition_value(partition),
-                "name": rel,
-                "rows": _parquet_rows(full),
-                "bytes_on_disk": os.path.getsize(full),
-                "active": True,
-                "modification_time": now,
-            }
-            new_parts.append(part)
+            full = os.path.join(table_path, rel)
+            new_parts.append(
+                {
+                    "partition": _partition_value(os.path.dirname(rel)),
+                    "name": rel,
+                    "rows": _parquet_rows(full),
+                    "bytes_on_disk": os.path.getsize(full),
+                    "active": True,
+                    "modification_time": now,
+                }
+            )
             known.add(rel)
+        records = [{"op": "retire", "names": sorted(retire)}] if retire else []
+        self._mark_retired(table, retire)
         self._manifest[table].extend(new_parts)
         self._active_counts[table] += len(new_parts)
         self._bump(table)
-        self._append_log(table_path, [{"op": "add", **p} for p in new_parts])
+        self._append_log(table_path, records + [{"op": "add", **p} for p in new_parts])
         return new_parts
+
+    def _mark_retired(self, table: str, names) -> None:
+        names_set = set(names)
+        for part in self._manifest.get(table, []):
+            if part["name"] in names_set and part["active"]:
+                part["active"] = False
+                self._active_counts[table] = self._active_counts.get(table, 0) - 1
 
     @_locked
     def retire(
         self, table: str, table_path: str, names: list[str], forget: bool = False
     ) -> None:
-        """Mark parts inactive (post-compaction), keeping history like CH.
+        """Mark parts inactive, keeping history like CH (DROP/DETACH
+        PARTITION; part rewrites retire through :meth:`commit_parts`).
 
         ``forget`` also removes the names from the known-file set, so a
         file with the SAME name can re-register later — the DETACH/ATTACH
-        cycle (without it, record_commit would skip the re-attached files
-        as already known)."""
-        names_set = set(names)
-        retired = 0
-        for part in self._manifest.get(table, []):
-            if part["name"] in names_set and part["active"]:
-                part["active"] = False
-                retired += 1
+        cycle (without it, ATTACH would skip the re-attached files as
+        already known)."""
+        self._mark_retired(table, names)
         if forget:
-            self._known.get(table, set()).difference_update(names_set)
-        self._active_counts[table] = self._active_counts.get(table, 0) - retired
+            self._known.get(table, set()).difference_update(names)
         self._bump(table)
-        self._append_log(table_path, [{"op": "retire", "names": sorted(names_set)}])
+        self._append_log(table_path, [{"op": "retire", "names": sorted(set(names))}])
 
     @_locked
     def evict(self, table: str) -> None:
@@ -205,6 +216,16 @@ class PartsInventory:
         self._known.pop(table, None)
         self._active_counts.pop(table, None)
         self._bump(table)
+
+    @_locked
+    def active_by_partition(self, table: str, table_path: str) -> dict[str, list[dict]]:
+        """Active parts (copies of their dicts) grouped by partition value."""
+        self._ensure_loaded(table, table_path)
+        by_partition: dict[str, list[dict]] = {}
+        for p in self._manifest[table]:
+            if p["active"]:
+                by_partition.setdefault(p["partition"], []).append(dict(p))
+        return by_partition
 
     @_locked
     def active_names(self, table: str, table_path: str, partition: str | None = None) -> list[str]:
@@ -240,38 +261,39 @@ class PartsInventory:
                         p["rows"],
                         p["bytes_on_disk"],
                         p["active"],
-                        datetime.strptime(p["modification_time"], "%Y-%m-%d %H:%M:%S"),
+                        datetime.strptime(p["modification_time"], "%Y-%m-%d %H:%M:%S").replace(
+                            tzinfo=timezone.utc
+                        ),
                     )
                 )
         return local_view(spark, rows, SYSTEM_PARTS_SCHEMA)
 
 
-def _walk_parquet(table_path: str, since_ns: int | None = None):
-    """Yield (partition_dirname_or_None, filename, fullpath) for data files.
+def _walk_parquet(table_path: str, since_ns: int):
+    """Yield the table-relative names of data files.
 
-    With ``since_ns``, partition directories whose mtime predates the
-    watermark (minus slack) are skipped without listing their contents —
-    the walk is O(#partitions + files in touched partitions)."""
+    Partition directories whose mtime predates the watermark (minus slack)
+    are skipped without listing their contents — the walk is
+    O(#partitions + files in touched partitions)."""
     if not os.path.isdir(table_path):
         return
-    cutoff = None if since_ns is None else since_ns - _WM_SLACK_NS
-    root_touched = cutoff is None or os.stat(table_path).st_mtime_ns >= cutoff
+    cutoff = since_ns - _WM_SLACK_NS
+    root_touched = os.stat(table_path).st_mtime_ns >= cutoff
     for entry in sorted(os.listdir(table_path)):
         full = os.path.join(table_path, entry)
         if entry.endswith(".tmp"):
-            # staging areas of in-flight compactions/merges ("<dir>.merge.tmp",
-            # "<dir>.compact.tmp") contain '=' like a partition dir — walking
-            # one registers phantom parts whose files are about to move
-            # (seen as 90-vs-72 part counts under the concurrent merge pool)
+            # staging dirs of in-flight part rewrites (".<dir>.<id>.tmp")
+            # contain '=' like a partition dir — walking one would register
+            # phantom parts whose files are about to move
             continue
         if os.path.isdir(full) and "=" in entry:
-            if cutoff is not None and os.stat(full).st_mtime_ns < cutoff:
+            if os.stat(full).st_mtime_ns < cutoff:
                 continue
             for f in sorted(os.listdir(full)):
                 if f.endswith(".parquet"):
-                    yield entry, f, os.path.join(full, f)
+                    yield os.path.join(entry, f)
         elif entry.endswith(".parquet") and root_touched:
-            yield None, entry, full
+            yield entry
 
 
 def _partition_value(partition_dir: str | None) -> str:

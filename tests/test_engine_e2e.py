@@ -103,6 +103,7 @@ def test_mutation_delete_where(spark, tmp_warehouse):
     engine.create_table(test_local_spec())
     gen = BatchGenerator(spark, seed=11, base_time="2026-01-01 12:00:00")
     engine.insert("test_local", gen.batch_with_partition(20_000, batch_no=0))
+    handle = engine.catalog.get("test_local")
 
     before = engine.read_table("test_local")
     n_before = before.count()
@@ -110,9 +111,9 @@ def test_mutation_delete_where(spark, tmp_warehouse):
     assert 0 < n_match < n_before
 
     parts_before = {
-        (p["partition"], p["name"])
-        for p in engine.parts._manifest["test_local"]
-        if p["active"]
+        (pv, p["name"])
+        for pv, plist in engine.parts.active_by_partition("test_local", handle.path).items()
+        for p in plist
     }
 
     deleted = engine.delete_where("test_local", "status < 64")
@@ -128,15 +129,15 @@ def test_mutation_delete_where(spark, tmp_warehouse):
     # partition-scoped predicate: delete from one hour only rewrites that hour
     one_hour = after.select("event_hour").first()["event_hour"]
     parts_mid = {
-        (p["partition"], p["name"])
-        for p in engine.parts._manifest["test_local"]
-        if p["active"]
+        (pv, p["name"])
+        for pv, plist in engine.parts.active_by_partition("test_local", handle.path).items()
+        for p in plist
     }
     engine.delete_where("test_local", f"event_hour = {one_hour} AND status < 128")
     parts_after = {
-        (p["partition"], p["name"])
-        for p in engine.parts._manifest["test_local"]
-        if p["active"]
+        (pv, p["name"])
+        for pv, plist in engine.parts.active_by_partition("test_local", handle.path).items()
+        for p in plist
     }
     changed = {p for p in parts_mid ^ parts_after}
     assert all(str(part) == str(one_hour) for part, _ in changed), changed
@@ -246,12 +247,13 @@ def test_manifest_log_survives_reload(spark, tmp_warehouse):
     engine.optimize("test_local")
     handle = engine.catalog.get("test_local")
     want_active = engine.parts.active_parts_count("test_local", handle.path)
-    want_total = len(engine.parts._manifest["test_local"])
+    tables = {"test_local": handle.path}
+    want_total = engine.parts.to_df(spark, tables).count()
 
     fresh = PartsInventory()
     fresh.load("test_local", handle.path)
     assert fresh.active_parts_count("test_local", handle.path) == want_active == 24
-    assert len(fresh._manifest["test_local"]) == want_total
+    assert fresh.to_df(spark, tables).count() == want_total
 
 
 def test_engines_sharing_a_session_never_serve_each_others_views(spark, tmp_path):
@@ -306,9 +308,9 @@ _SYSTEM_VIEW_SCHEMAS = {
 
 
 def _insert_moves_parts_and_metrics(engine, spark):
-    """Also pins system_parts.modification_time under a session time zone
-    other than the process one: the view converts the manifest's naive
-    datetime as createDataFrame converts a Python row (process-local)."""
+    """Also pins system_parts.modification_time to the UTC instant the
+    manifest records, under a process time zone and a session time zone
+    that are both other than UTC and other than each other."""
     import datetime
     import json
     import os
@@ -320,23 +322,31 @@ def _insert_moves_parts_and_metrics(engine, spark):
         return parts.first()[0], rows.first()[0]
 
     parts0, rows0 = read()
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set(
-        "spark.sql.session.timeZone", "UTC" if time.strftime("%z") == "+0530" else "Asia/Kolkata"
-    )
+    old_tz, old_session_tz = os.environ.get("TZ"), spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         engine.sql("INSERT INTO t VALUES (2)")
         parts1, rows1 = read()
-        got = dict(engine.sql("SELECT name, modification_time FROM system.parts").collect())
-        with open(os.path.join(engine.catalog.table_path("t"), "_parts_manifest.jsonl")) as f:
-            stamps = {r["name"]: r["modification_time"] for r in map(json.loads, f) if "rows" in r}
-        rows = [
-            (name, datetime.datetime.strptime(s, "%Y-%m-%d %H:%M:%S"))
-            for name, s in sorted(stamps.items())
-        ]
-        expected = dict(spark.createDataFrame(rows, "name string, t timestamp").collect())
+        # collect() gives naive datetimes in the process time zone
+        got = {
+            name: ts.astimezone(datetime.timezone.utc)
+            for name, ts in engine.sql("SELECT name, modification_time FROM system.parts").collect()
+        }
     finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session_tz)
+    with open(os.path.join(engine.catalog.table_path("t"), "_parts_manifest.jsonl")) as f:
+        stamps = {r["name"]: r["modification_time"] for r in map(json.loads, f) if "rows" in r}
+    expected = {
+        name: datetime.datetime.strptime(s, "%Y-%m-%d %H:%M:%S").replace(tzinfo=datetime.timezone.utc)
+        for name, s in stamps.items()
+    }
     assert parts1 > parts0 and rows1 == rows0 + 1
     assert got == expected
 
