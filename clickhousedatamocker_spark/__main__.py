@@ -25,24 +25,10 @@ import sys
 
 
 def _split_statements(text: str) -> list[str]:
-    """Split on ``;`` outside single/double-quoted strings."""
-    out, depth_q, start = [], None, 0
-    i = 0
-    while i < len(text):
-        c = text[i]
-        if depth_q:
-            if c == depth_q:
-                depth_q = None
-            elif c == "\\":
-                i += 1
-        elif c in "'\"":
-            depth_q = c
-        elif c == ";":
-            out.append(text[start:i])
-            start = i + 1
-        i += 1
-    out.append(text[start:])
-    return [s.strip() for s in out if s.strip()]
+    """Split on ``;`` outside string literals, comments and parentheses."""
+    from clickhousedatamocker_spark.functions.compat import _split_top
+
+    return _split_top(text, ";")
 
 
 def main(argv: list[str] | None = None) -> int:

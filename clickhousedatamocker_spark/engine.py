@@ -56,6 +56,19 @@ _LIVE_VIEWS = {
     "system_disks": re.compile(r"\bsystem[._]disks\b", re.IGNORECASE),
 }
 
+_QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
+_ORDER_LIMIT_RE = re.compile(r"\b(ORDER\s+BY|LIMIT)\b", re.IGNORECASE)
+
+
+def _cut_order_limit(sql: str) -> tuple[str, str]:
+    """``(body, tail)``: ``sql`` cut before its first depth-0 ORDER BY or
+    LIMIT, which a wrapping rewrite hoists outside the wrapper."""
+    from clickhousedatamocker_spark.functions.compat import find_top
+
+    m = find_top(sql, _ORDER_LIMIT_RE)
+    cut = len(sql) if m is None else m.start()
+    return sql[:cut].rstrip(), sql[cut:].strip()
+
 
 @dataclass
 class FlowStatus:
@@ -80,7 +93,7 @@ class Engine:
         self.spark = spark
         self.catalog = Catalog(warehouse_dir, database)
         self.metrics = MetricsStore()
-        self.parts = PartsInventory(database)
+        self.parts = PartsInventory(database, metrics=self.metrics)
         self.flow = FlowController(metrics=self.metrics)
         self.writer = Writer(self.parts, self.flow, metrics=self.metrics)
         self._serial = next(_ENGINE_SERIALS)
@@ -1928,31 +1941,20 @@ class Engine:
           operand is a column or literal, never a relation."""
         import re as _re
 
-        from clickhousedatamocker_spark.functions.compat import _scan_balanced
+        from clickhousedatamocker_spark.functions.compat import _scan_balanced, scan
 
-        depth = []
-        d = 0
-        quote = None
-        for ch in query:
-            depth.append(d)
-            if quote is not None:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                d += 1
-            elif ch == ")":
-                d = max(0, d - 1)
+        depth = {i: d for i, _, d in scan(query)}
         sources: set = set()
         for m in _re.finditer(
             r"\b(FROM|JOIN)(?:\s+(\w+)|\s*(\())", query, _re.IGNORECASE
         ):
+            if m.start() not in depth:
+                continue  # inside a string literal or a comment
             if m.group(3):
-                if depth[m.start()] == 0:
+                if depth[m.start()] <= 0:
                     inner = query[m.end() : _scan_balanced(query, m.end()) - 1]
                     sources |= self._scan_sources(inner) or {"<subquery>"}
-            elif depth[m.start()] == 0:
+            elif depth[m.start()] <= 0:
                 sources.add(m.group(2))
             elif self._is_known_relation(m.group(2)):
                 sources.add(m.group(2))
@@ -2459,6 +2461,39 @@ class Engine:
             zone=zone,
         )
 
+    def _insert_fields(self, table: str, columns: list[str] | None) -> list:
+        """The fields an INSERT statement supplies, in order: the named
+        columns, or every column but the MATERIALIZED ones, which are
+        computed at insert (ClickHouse refuses to name them, and leaves them
+        out of the positional arity and of a FORMAT payload)."""
+        base = self.catalog.get(self.catalog.resolve(table))
+        mat = (base.settings or {}).get("column_materialized") or {}
+        if not columns:
+            return [f for f in base.schema.fields if f.name not in mat]
+        bad = [c for c in columns if c in mat]
+        if bad:
+            raise ValueError(f"cannot INSERT into MATERIALIZED column(s) {bad} (computed)")
+        by_name = {f.name: f for f in base.schema.fields}
+        return [by_name[c] for c in columns]
+
+    def _insert_rows(self, table: str, columns: list[str] | None, df: DataFrame) -> None:
+        """The one column contract of INSERT VALUES, FORMAT and SELECT:
+        ``df``'s columns are, by position, the statement's fields
+        (:meth:`_insert_fields`); every other stored column is NULL."""
+        fields = self._insert_fields(table, columns)
+        if len(df.columns) != len(fields):
+            raise ValueError(
+                f"INSERT arity {len(df.columns)} != column count {len(fields)}"
+            )
+        given = [f.name for f in fields]
+        df = df.toDF(*given).select(
+            *[
+                (F.col(f.name) if f.name in given else F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in self._insert_fields(table, None)
+            ]
+        )
+        self.insert(table, df)
+
     def sql(self, query: str, data: str | None = None) -> DataFrame:
         """See :meth:`_sql_impl`; this wrapper records the statement into
         the ``system_query_log`` view (CH system.query_log analog)."""
@@ -2484,6 +2519,7 @@ class Engine:
         the rows route through the admission-controlled insert path exactly
         like ``Engine.insert`` (flow control, sharding, metrics)."""
         from clickhousedatamocker_spark.functions.compat import (
+            find_top,
             parse_ch_ddl,
             parse_ch_insert,
             translate_ch_sql,
@@ -2526,37 +2562,8 @@ class Engine:
 
         ins = parse_ch_insert(query)
         if ins is not None and ins["op"] == "insert_values":
-            handle = self.catalog.get(ins["table"])
-            base = handle
-            while base.alias_of:
-                base = self.catalog.get(base.alias_of)
-            mat = (base.settings or {}).get("column_materialized") or {}
-            fields = [f for f in base.schema.fields if f.name not in mat]
-            if ins["columns"]:
-                bad = [c for c in ins["columns"] if c in mat]
-                if bad:
-                    raise ValueError(
-                        f"cannot INSERT into MATERIALIZED column(s) {bad} (computed)"
-                    )
-                by_name = {f.name: f for f in base.schema.fields}
-                fields = [by_name[c] for c in ins["columns"]]
             df = self.spark.sql(f"SELECT * FROM VALUES {ins['values']}")
-            if len(df.columns) != len(fields):
-                raise ValueError(
-                    f"VALUES arity {len(df.columns)} != column count {len(fields)}"
-                )
-            df = df.select(
-                *[
-                    F.col(c).cast(f.dataType).alias(f.name)
-                    for c, f in zip(df.columns, fields)
-                ]
-            )
-            if ins["columns"]:
-                for f in base.schema.fields:
-                    if f.name not in ins["columns"]:
-                        df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-                df = df.select(*[f.name for f in base.schema.fields])
-            self.insert(ins["table"], df)
+            self._insert_rows(ins["table"], ins["columns"], df)
             return self.spark.createDataFrame([], "result string")
         if ins is not None:
             from clickhousedatamocker_spark.sources.formats import read_format
@@ -2582,34 +2589,12 @@ class Engine:
                     "INSERT ... FORMAT needs the payload: Engine.sql(query, data=<path>) "
                     "(the clickhouse-client stdin equivalent)"
                 )
-            handle = self.catalog.get(ins["table"])
-            base = handle
-            while base.alias_of:
-                base = self.catalog.get(base.alias_of)
             from pyspark.sql import types as T
 
-            mat = (base.settings or {}).get("column_materialized") or {}
-            # payload columns exclude MATERIALIZED ones (computed at insert;
-            # CH's formats carry only ordinary columns)
-            schema = T.StructType([f for f in base.schema.fields if f.name not in mat])
-            if ins["columns"]:
-                bad = [c for c in ins["columns"] if c in mat]
-                if bad:
-                    raise ValueError(
-                        f"cannot INSERT into MATERIALIZED column(s) {bad} (computed)"
-                    )
-                by_name = {f.name: f for f in base.schema.fields}
-                schema = T.StructType([by_name[c] for c in ins["columns"]])
+            schema = T.StructType(self._insert_fields(ins["table"], ins["columns"]))
             try:
                 df = read_format(self.spark, data, ins["format"], schema)
-                if ins["columns"]:
-                    for f in base.schema.fields:
-                        if f.name not in ins["columns"] and f.name not in mat:
-                            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-                    df = df.select(
-                        *[f.name for f in base.schema.fields if f.name not in mat]
-                    )
-                self.insert(ins["table"], df)
+                self._insert_rows(ins["table"], ins["columns"], df)
             finally:
                 # inline payloads materialize into a temp file; the insert is
                 # eager (parts written inside self.insert), so it is garbage
@@ -2626,7 +2611,8 @@ class Engine:
         # Trailing per-query SETTINGS on a SELECT: route the result-changing
         # ones onto real machinery BEFORE translation (which only ever drops
         # tuning knobs, and raises on semantic ones it sees — see compat).
-        if _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        is_select = _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE) is not None
+        if is_select:
             from clickhousedatamocker_spark.functions.compat import extract_query_settings
 
             query, qsettings = extract_query_settings(query)
@@ -2654,7 +2640,7 @@ class Engine:
             query,
             _re.IGNORECASE,
         )
-        if mfmt is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        if mfmt is not None and is_select:
             from clickhousedatamocker_spark.sources.formats import write_format
 
             self.refresh_system_views(query)
@@ -2678,7 +2664,7 @@ class Engine:
             query,
             _re.IGNORECASE,
         )
-        if mfill is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        if mfill is not None and is_select:
             from clickhousedatamocker_spark.operators.fill import fill_gaps
 
             key = mfill.group(1)
@@ -2713,54 +2699,21 @@ class Engine:
         # Rewrite: SELECT * FROM (<query sans QUALIFY-tail>) WHERE cond,
         # with a trailing top-level ORDER BY / LIMIT hoisted after the
         # filter. Depth-0 quote-aware scan, so subquery text is untouched.
-        if _re.search(r"\bQUALIFY\b", query, _re.IGNORECASE) and _re.match(
-            r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE
-        ):
-            depth, quote, qpos = 0, None, None
-            for i, c in enumerate(query):
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif depth == 0 and _re.match(r"QUALIFY\b", query[i:], _re.IGNORECASE):
-                    qpos = i
-                    break
-            if qpos is not None:
-                head = query[:qpos].rstrip()
-                rest = query[qpos + len("QUALIFY"):].strip().rstrip(";")
-                depth, quote, cut = 0, None, len(rest)
-                for i, c in enumerate(rest):
-                    if quote:
-                        if c == quote:
-                            quote = None
-                    elif c in "'\"":
-                        quote = c
-                    elif c == "(":
-                        depth += 1
-                    elif c == ")":
-                        depth -= 1
-                    elif depth == 0 and _re.match(
-                        r"(ORDER\s+BY|LIMIT)\b", rest[i:], _re.IGNORECASE
-                    ):
-                        cut = i
-                        break
-                cond, tail = rest[:cut].rstrip(), rest[cut:].strip()
-                self.refresh_system_views(query)
-                # the condition is computed as a projected column so window
-                # functions INSIDE the QUALIFY expression stay legal (a
-                # plain WHERE may not contain one)
-                return self.spark.sql(
-                    translate_ch_sql(
-                        f"SELECT * EXCEPT (__qualify_c) FROM (SELECT *, "
-                        f"({cond}) AS __qualify_c FROM ({head}) __qualify) "
-                        f"WHERE __qualify_c {tail}"
-                    )
+        mq = find_top(query, _QUALIFY_RE) if is_select else None
+        if mq is not None:
+            head = query[: mq.start()].rstrip()
+            cond, tail = _cut_order_limit(query[mq.end() :].strip().rstrip(";"))
+            self.refresh_system_views(query)
+            # the condition is computed as a projected column so window
+            # functions INSIDE the QUALIFY expression stay legal (a
+            # plain WHERE may not contain one)
+            return self.spark.sql(
+                translate_ch_sql(
+                    f"SELECT * EXCEPT (__qualify_c) FROM (SELECT *, "
+                    f"({cond}) AS __qualify_c FROM ({head}) __qualify) "
+                    f"WHERE __qualify_c {tail}"
                 )
+            )
 
         # SELECT DISTINCT ON (k1[, k2...]) items FROM ... — CH's first-row-
         # per-key form. One row per key via row_number over the key order
@@ -2778,23 +2731,7 @@ class Engine:
                 mdon.group(2).strip(),
                 mdon.group(3),
             )
-            depth, quote, cut = 0, None, len(rest)
-            for i, c in enumerate(rest):
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif depth == 0 and _re.match(
-                    r"(ORDER\s+BY|LIMIT)\b", rest[i:], _re.IGNORECASE
-                ):
-                    cut = i
-                    break
-            inner, tail = rest[:cut].rstrip(), rest[cut:].strip()
+            inner, tail = _cut_order_limit(rest)
             self.refresh_system_views(query)
             return self.spark.sql(
                 translate_ch_sql(
@@ -2811,7 +2748,7 @@ class Engine:
             query,
             _re.IGNORECASE,
         )
-        if mwt is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        if mwt is not None and is_select:
             order, nties = mwt.group(2).strip(), int(mwt.group(3))
             inner = translate_ch_sql(mwt.group(1))
             self.refresh_system_views(query)
@@ -2836,7 +2773,7 @@ class Engine:
             query,
             _re.IGNORECASE,
         )
-        if mlby is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        if mlby is not None and is_select:
             order, by = mlby.group(2).strip(), mlby.group(6).strip()
             if mlby.group(4) is not None:  # LIMIT off, n BY
                 off, n = int(mlby.group(3)), int(mlby.group(4))
@@ -2881,7 +2818,7 @@ class Engine:
             query,
             _re.IGNORECASE,
         )
-        if musing is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        if musing is not None and is_select:
             ucols = [c.strip() for c in musing.group(6).split(",") if c.strip()]
             if len(ucols) != 2:
                 raise NotImplementedError(
@@ -2905,7 +2842,7 @@ class Engine:
             query,
             _re.IGNORECASE,
         )
-        if masof is not None and _re.match(r"\s*(SELECT|WITH)\b", query, _re.IGNORECASE):
+        if masof is not None and is_select:
             from clickhousedatamocker_spark.operators.asof import asof_join
 
             ltab, lali, is_left, rtab, rali = (
@@ -3022,18 +2959,7 @@ class Engine:
             elif ddl["op"] == "insert_select":
                 self.refresh_system_views(query)
                 df = self.spark.sql(translate_ch_sql(self._apply_read_rewrites(ddl["select"])))
-                base = self.catalog.get(self.catalog.resolve(ddl["name"]))
-                if ddl["columns"]:
-                    df = df.toDF(*ddl["columns"])
-                    for f in base.schema.fields:
-                        if f.name not in ddl["columns"]:
-                            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-                else:
-                    df = df.toDF(*[f.name for f in base.schema.fields])
-                df = df.select(
-                    *[F.col(f.name).cast(f.dataType) for f in base.schema.fields]
-                )
-                self.insert(ddl["name"], df)
+                self._insert_rows(ddl["name"], ddl["columns"], df)
                 return self.spark.createDataFrame([], "result string")
             elif ddl["op"] == "mutate_delete":
                 n = self.delete_where(ddl["name"], ddl["predicate"])

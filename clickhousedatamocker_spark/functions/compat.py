@@ -28,6 +28,7 @@ ALTER … DELETE/UPDATE WHERE, OPTIMIZE/TRUNCATE/SHOW/DESCRIBE/EXISTS
 
 from __future__ import annotations
 
+import bisect
 import re
 import socket as _socket
 import time as _time
@@ -37,6 +38,127 @@ from pyspark.sql import types as T
 
 _MODULE_START = _time.time()
 _SERVER_UUID = str(_uuid.uuid4())  # stable for the process, like CH's serverUUID
+
+
+# -- the SQL scanner ---------------------------------------------------------
+#
+# Every rewrite that must tell code from data asks this scanner, so they all
+# agree on one lexical rule. A string literal is '...' or "..." in which a
+# backslash escapes the next character (ClickHouse and Spark both read \' as
+# a quote inside the literal; a doubled '' closes one literal and opens the
+# next, which scans the same). A comment runs from -- to the end of the
+# line. Literals and comments hold no code: their characters are never
+# yielded, and their brackets never move the depth.
+
+_OPAQUE_RE = re.compile(r"'(?:[^'\\]|\\.)*'?|\"(?:[^\"\\]|\\.)*\"?|--[^\n]*", re.DOTALL)
+
+
+def _opaque_spans(sql: str) -> list[tuple[int, int]]:
+    """``[start, end)`` of every string literal and comment in ``sql``."""
+    return [m.span() for m in _OPAQUE_RE.finditer(sql)]
+
+
+def scan(sql: str, start: int = 0, depth: int = 0):
+    """Yield ``(i, sql[i], depth)`` for each character of ``sql[start:]``
+    outside string literals and comments. ``depth`` counts the ``(`` and
+    ``[`` open around the character, from the given ``depth`` at ``start``;
+    an opener and its closer both report the depth outside the pair.
+    ``start`` must not fall inside a literal or comment."""
+    n = len(sql)
+    while start < n:
+        m = _OPAQUE_RE.search(sql, start)
+        end = n if m is None else m.start()
+        for i in range(start, end):
+            c = sql[i]
+            if c in ")]":
+                depth -= 1
+                yield i, c, depth
+            else:
+                yield i, c, depth
+                if c in "([":
+                    depth += 1
+        if m is None:
+            return
+        start = m.end()
+
+
+def find_top(sql: str, pattern: "re.Pattern", start: int = 0) -> "re.Match | None":
+    """The first match of ``pattern`` that begins at a depth-0 code
+    position of ``sql[start:]``."""
+    if pattern.search(sql, start) is None:
+        return None
+    for i, _, d in scan(sql, start):
+        if d == 0:
+            m = pattern.match(sql, i)
+            if m is not None:
+                return m
+    return None
+
+
+def _in_spans(spans: list[tuple[int, int]], p: int) -> bool:
+    k = bisect.bisect_right(spans, (p, float("inf"))) - 1
+    return k >= 0 and p < spans[k][1]
+
+
+def _search_code(pattern: "re.Pattern", sql: str, pos: int = 0) -> "re.Match | None":
+    """The first match of ``pattern`` at or after ``pos`` that begins
+    outside every string literal and comment."""
+    spans = None
+    for m in pattern.finditer(sql, pos):
+        if spans is None:
+            spans = _opaque_spans(sql)
+        if not _in_spans(spans, m.start()):
+            return m
+    return None
+
+
+def _sub_outside_strings(pattern: "re.Pattern", repl, sql: str) -> str:
+    """pattern.sub, except matches that START inside a string literal or a
+    comment stay verbatim. Matches may still SPAN literals — the
+    dictGet/JSONExtract rewrites take quoted arguments, and their match
+    starts on the function name, outside any literal."""
+    spans = None
+
+    def guarded(m: "re.Match") -> str:
+        nonlocal spans
+        if spans is None:
+            spans = _opaque_spans(sql)
+        if _in_spans(spans, m.start()):
+            return m.group(0)
+        return repl(m) if callable(repl) else m.expand(repl)
+
+    return pattern.sub(guarded, sql)
+
+
+def _scan_balanced(sql: str, start: int) -> int:
+    """Return the index just past the ')' closing the '(' at start-1.
+    Raises on imbalance."""
+    for i, c, d in scan(sql, start, 1):
+        if d == 0 and c == ")":
+            return i + 1
+    raise ValueError("unbalanced parens")
+
+
+def _openers(sql: str, end: int) -> dict[int, int]:
+    """Map each closing ``)``/``]`` in ``sql[:end]`` to its opener — how a
+    backward walk over a postfix operand skips a balanced group."""
+    stack, out = [], {}
+    for i, c, _ in scan(sql[:end]):
+        if c in "([":
+            stack.append(i)
+        elif c in ")]" and stack:
+            out[i] = stack.pop()
+    return out
+
+
+def _split_top(s: str, sep: str = ",") -> list[str]:
+    """Split on ``sep`` at paren/bracket depth 0, outside string literals —
+    so parameterized types (``Decimal(10,2)``, ``Enum8('a'=1,'b'=2)``),
+    bracket literals (``[1,2]``), and quoted defaults never split a column
+    definition in half."""
+    cuts = [i for i, c, d in scan(s) if c == sep and d == 0]
+    out = [s[a + 1 : b] for a, b in zip([-1] + cuts, cuts + [len(s)])]
+    return [p for p in (p.strip() for p in out) if p]
 
 
 def _remote_table(db: str | None, table: str | None, db2: str | None = None) -> str:
@@ -3627,39 +3749,15 @@ _PARAMETRIC2: dict[str, object] = {
 # between two builds look registered but never match)
 
 
-def _scan_balanced(sql: str, start: int) -> int:
-    """Return the index just past the ')' closing the '(' at start-1
-    (quote-aware). Raises on imbalance."""
-    depth, i, quote = 1, start, None
-    while i < len(sql) and depth:
-        c = sql[i]
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        raise ValueError("unbalanced parens in two-group parametric call")
-    return i
-
-
 def _rewrite_parametric2(sql: str) -> str:
     """Rewrite name(params)(args) spellings (quote-aware, literal-safe).
     Names with an optional params group (topK) also accept the single-group
     form. One splice per pass; fixpoint-bounded like _rewrite_parametric."""
     pos = 0
     for _ in range(128):
-        m = _PARAMETRIC2_RE.search(sql, pos)
+        m = _search_code(_PARAMETRIC2_RE, sql, pos)
         if not m:
             return sql
-        if any(a <= m.start() < b for a, b in _literal_spans(sql)):
-            pos = m.end()
-            continue
         end1 = _scan_balanced(sql, m.end())
         g1 = sql[m.end() : end1 - 1]
         j = end1
@@ -5517,7 +5615,7 @@ def _rewrite_parametric(sql: str) -> str:
     up on the next pass. Bounded: every pass removes one CH spelling."""
     pos = 0
     for _ in range(256):
-        m = _PARAMETRIC_RE.search(sql, pos)
+        m = _search_code(_PARAMETRIC_RE, sql, pos)
         if not m:
             return sql
         if m.group(1).lower() == "range":
@@ -5527,22 +5625,7 @@ def _rewrite_parametric(sql: str) -> str:
             if prev and prev[-1].upper() in ("FROM", "JOIN", ","):
                 pos = m.end()
                 continue
-        depth, i = 1, m.end()
-        quote = None
-        while i < len(sql) and depth:
-            c = sql[i]
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            raise ValueError(f"unbalanced parens after {m.group(1)}(")
+        i = _scan_balanced(sql, m.end())
         args = _split_top(sql[m.end() : i - 1])
         repl = _PARAMETRIC_LOWER[m.group(1).lower()](args)
         if repl is None:
@@ -5558,51 +5641,31 @@ def _rewrite_parametric(sql: str) -> str:
 
 
 def _sub_ident(sql: str, name: str, repl: str) -> str:
-    """Word-boundary substitution of a bare identifier, skipping single-quoted
-    string literals, qualified references (``t.name``), and alias positions
+    """Word-boundary substitution of a bare identifier, skipping string
+    literals and comments, qualified references (``t.name``), and alias positions
     (``AS name`` — an output-column alias is a name, not an expression)."""
-    pat = re.compile(rf"\b{re.escape(name)}\b")
-    segs = re.split(r"('(?:[^'\\]|\\.)*')", sql)
 
-    def sub_one(seg: str) -> str:
-        def f(m: re.Match) -> str:
-            before = seg[: m.start()]
-            if before.rstrip().endswith("."):
-                return m.group(0)
-            tail = before.rstrip().rsplit(None, 1)
-            if tail and tail[-1].upper() == "AS":
-                return m.group(0)
-            return repl
+    def f(m: re.Match) -> str:
+        before = sql[: m.start()].rstrip()
+        if before.endswith("."):
+            return m.group(0)
+        tail = before.rsplit(None, 1)
+        if tail and tail[-1].upper() == "AS":
+            return m.group(0)
+        return repl
 
-        return pat.sub(f, seg)
+    return _sub_outside_strings(re.compile(rf"\b{re.escape(name)}\b"), f, sql)
 
-    return "".join(s if i % 2 else sub_one(s) for i, s in enumerate(segs))
+
+_AS_RE = re.compile(r"\bAS\b", re.IGNORECASE)
 
 
 def _rsplit_top_as(item: str) -> tuple[str, str | None]:
     """Split ``expr AS alias`` at the LAST top-level ``AS`` whose right side
     is a bare identifier; returns (item, None) when there is no such AS."""
-    depth, quote = 0, None
-    positions = []
-    i = 0
-    while i < len(item):
-        c = item[i]
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and item[i : i + 2].upper() == "AS":
-            prev_ok = i == 0 or not (item[i - 1].isalnum() or item[i - 1] == "_")
-            nxt = i + 2
-            next_ok = nxt >= len(item) or not (item[nxt].isalnum() or item[nxt] == "_")
-            if prev_ok and next_ok:
-                positions.append(i)
-        i += 1
+    positions = [
+        i for i, c, d in scan(item) if d == 0 and c in "Aa" and _AS_RE.match(item, i)
+    ]
     for p in reversed(positions):
         left, right = item[:p].strip(), item[p + 2 :].strip()
         if left and re.fullmatch(r"\w+", right):
@@ -5612,7 +5675,7 @@ def _rsplit_top_as(item: str) -> tuple[str, str | None]:
 
 _ARRAY_JOIN_RE = re.compile(r"\b(LEFT\s+)?ARRAY\s+JOIN\s+", re.IGNORECASE)
 _AJ_STOP = re.compile(
-    r"(WHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|UNION|INNER|LEFT|RIGHT|FULL|"
+    r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|UNION|INNER|LEFT|RIGHT|FULL|"
     r"CROSS|JOIN|FORMAT|INTO)\b",
     re.IGNORECASE,
 )
@@ -5631,53 +5694,17 @@ def _rewrite_array_join(sql: str) -> str:
       element, so references elsewhere in the statement are rewritten to a
       generated element alias (strings / qualified / alias positions kept).
     """
-    def find_outside_strings(s: str) -> re.Match | None:
-        pos = 0
-        while True:
-            m = _ARRAY_JOIN_RE.search(s, pos)
-            if m is None:
-                return None
-            quote = None
-            for c in s[: m.start()]:
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-            if quote is None:
-                return m
-            pos = m.end()
-
     counter = 0
     while True:
-        m = find_outside_strings(sql)
+        m = _search_code(_ARRAY_JOIN_RE, sql)
         if m is None:
             return sql
-        depth, quote, i, stop = 0, None, m.end(), len(sql)
-        while i < len(sql):
-            c = sql[i]
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    stop = i
-                    break
-                depth -= 1
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                if _AJ_STOP.match(sql, i):
-                    stop = i
-                    break
-                while i < len(sql) and (sql[i].isalnum() or sql[i] == "_"):
-                    i += 1
-                continue
-            i += 1
-        else:
-            stop = len(sql)
+        # the clause ends at a depth-0 keyword or at the ')' closing an
+        # enclosing subquery
+        stop = next(
+            (i for i, _, d in scan(sql, m.end()) if d < 0 or d == 0 and _AJ_STOP.match(sql, i)),
+            len(sql),
+        )
         outer = "OUTER " if m.group(1) else ""
         exprs, aliases, subs = [], [], {}
         for item in _split_top(sql[m.end() : stop]):
@@ -5712,6 +5739,9 @@ def _rewrite_array_join(sql: str) -> str:
         counter += 1
 
 
+_SELECT_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
+
+
 def _rewrite_scalar_with(sql: str) -> str:
     """ClickHouse's scalar WITH form — ``WITH <expr> AS <name>[, ...]
     SELECT ...`` — inlines ``(expr)`` at every expression use of ``name``.
@@ -5721,28 +5751,10 @@ def _rewrite_scalar_with(sql: str) -> str:
     m = re.match(r"^\s*WITH\b", sql, re.IGNORECASE)
     if m is None:
         return sql
-    depth, quote, i, sel = 0, None, m.end(), -1
-    while i < len(sql):
-        c = sql[i]
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            if re.match(r"SELECT\b", sql[i:], re.IGNORECASE):
-                sel = i
-                break
-            while i < len(sql) and (sql[i].isalnum() or sql[i] == "_"):
-                i += 1
-            continue
-        i += 1
-    if sel < 0:
+    msel = find_top(sql, _SELECT_RE, m.end())
+    if msel is None:
         return sql
+    sel = msel.start()
     subs: list[tuple[str, str]] = []
     for item in _split_top(sql[m.end() : sel]):
         expr, name = _rsplit_top_as(item)
@@ -5787,36 +5799,13 @@ def _rewrite_brackets(sql: str) -> str:
     indexing bracket again). String literals are never touched.
     """
     for _ in range(256):
-        # find the first [ outside string literals
-        quote, pos = None, -1
-        for i, c in enumerate(sql):
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "[":
-                pos = i
-                break
+        pos = next((i for i, c, _ in scan(sql) if c == "["), -1)
         if pos < 0:
             return sql
-        # find the matching ]
-        depth, quote, j = 1, None, pos + 1
-        while j < len(sql) and depth:
-            c = sql[j]
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-            j += 1
-        if depth:
+        close = next((i for i, c, d in scan(sql, pos + 1, 1) if d == 0 and c == "]"), -1)
+        if close < 0:
             raise ValueError("unbalanced '[' in SQL")
-        inner, close = sql[pos + 1 : j - 1], j - 1
+        inner = sql[pos + 1 : close]
         k = pos - 1
         while k >= 0 and sql[k].isspace():
             k -= 1
@@ -5832,21 +5821,13 @@ def _rewrite_brackets(sql: str) -> str:
                 prefix_is_value = False
         if prefix_is_value:
             # indexing: walk back over the postfix expression
-            s = k + 1
+            s, opener = k + 1, _openers(sql, pos)
             while s > 0:
                 c = sql[s - 1]
                 if c.isalnum() or c in "_.":
                     s -= 1
-                elif c in ")]":
-                    opener = "(" if c == ")" else "["
-                    d, s2 = 1, s - 1
-                    while s2 > 0 and d:
-                        s2 -= 1
-                        if sql[s2] == c:
-                            d += 1
-                        elif sql[s2] == opener:
-                            d -= 1
-                    s = s2
+                elif s - 1 in opener:
+                    s = opener[s - 1]
                 else:
                     break
             sql = (
@@ -5859,47 +5840,6 @@ def _rewrite_brackets(sql: str) -> str:
     raise NotImplementedError("bracket rewrite did not converge in 256 passes")
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    """[start, end) spans of single-quoted string literals (backslash
-    escapes honored)."""
-    spans, i, n = [], 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "\\":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    j += 1
-                    break
-                j += 1
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def _sub_outside_strings(pattern: "re.Pattern", repl, sql: str) -> str:
-    """pattern.sub, except matches that START inside a string literal are
-    data and stay verbatim. Matches may still SPAN literals — the
-    dictGet/JSONExtract rewrites take quoted arguments, and their match
-    starts on the function name, outside any literal."""
-    spans = _literal_spans(sql)
-
-    def guarded(m: "re.Match") -> str:
-        p = m.start()
-        for a, b in spans:
-            if a <= p < b:
-                return m.group(0)
-            if a > p:
-                break
-        return repl(m) if callable(repl) else m.expand(repl)
-
-    return pattern.sub(guarded, sql)
-
-
 _TUPLE_DOT_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*(\d+)\b")
 
 
@@ -5908,11 +5848,7 @@ def _rewrite_tuple_dots(sql: str) -> str:
     an identifier can never start a float literal, so ident.digit is
     unambiguous). String literals are data and stay verbatim — URLs and
     version strings ('v1.5') must never be rewritten."""
-    segs = re.split(r"('(?:[^'\\]|\\.)*')", sql)
-    return "".join(
-        s if i % 2 else _TUPLE_DOT_RE.sub(r"\1.col\2", s)
-        for i, s in enumerate(segs)
-    )
+    return _sub_outside_strings(_TUPLE_DOT_RE, r"\1.col\2", sql)
 
 
 _CAST_OP_RE = re.compile(r"::\s*([A-Za-z_]\w*(?:\([^()]*\))?)")
@@ -5924,39 +5860,22 @@ def _rewrite_cast_operator(sql: str) -> str:
     by scanning backwards: a quoted literal, a number, a (possibly
     qualified) identifier, or a balanced ``(...)``/``[...]``/call group."""
     for _ in range(64):
-        spans = _literal_spans(sql)
-        m = None
-        for cand in _CAST_OP_RE.finditer(sql):
-            if not any(a <= cand.start() < b for a, b in spans):
-                m = cand
-                break
+        m = _search_code(_CAST_OP_RE, sql)
         if m is None:
             return sql
-        end = m.start()
-        i = end
+        i = m.start()
         # skip trailing whitespace before ::
         while i > 0 and sql[i - 1].isspace():
             i -= 1
         if i > 0 and sql[i - 1] in ")]":
             # balanced group (call, parens, bracket) + an optional leading name
-            close, open_ = sql[i - 1], "(" if sql[i - 1] == ")" else "["
-            depth, j = 0, i
-            while j > 0:
-                j -= 1
-                if sql[j] == close:
-                    depth += 1
-                elif sql[j] == open_:
-                    depth -= 1
-                    if depth == 0:
-                        break
+            j = _openers(sql, i).get(i - 1, 0)
             while j > 0 and (sql[j - 1].isalnum() or sql[j - 1] in "_."):
                 j -= 1
             start = j
-        elif i > 0 and sql[i - 1] == "'":
-            j = i - 2
-            while j >= 0 and sql[j] != "'":
-                j -= 1
-            start = j
+        elif i > 0 and sql[i - 1] in "'\"":
+            # a string literal: its span ends at the operand's end
+            start = next(a for a, b in _opaque_spans(sql[:i]) if b == i)
         else:
             j = i
             while j > 0 and (sql[j - 1].isalnum() or sql[j - 1] in "_."):
@@ -5978,22 +5897,16 @@ def _rewrite_brace_maps(sql: str) -> str:
     for _ in range(64):
         # first '}' outside strings, then the nearest '{' before it —
         # that's the innermost brace pair
-        quote, close = None, -1
-        opens: list[int] = []
-        for i, c in enumerate(sql):
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "{":
-                opens.append(i)
+        pos = -1
+        for close, c, _ in scan(sql):
+            if c == "{":
+                pos = close
             elif c == "}":
-                close = i
                 break
-        if close < 0 or not opens:
+        else:
             return sql
-        pos = max(p for p in opens if p < close)
+        if pos < 0:
+            return sql
         j = close + 1
         inner = sql[pos + 1 : j - 1].strip()
         first = inner.lstrip()[:1]
@@ -6001,10 +5914,10 @@ def _rewrite_brace_maps(sql: str) -> str:
             return sql  # parameter placeholder or not a map literal
         pairs = []
         for item in _split_top(inner):
-            k, sep, v = item.partition(":")
-            if not sep:
+            cut = next((i for i, c, d in scan(item) if d == 0 and c == ":"), -1)
+            if cut < 0:
                 return sql
-            pairs.extend([k.strip(), v.strip()])
+            pairs.extend([item[:cut].strip(), item[cut + 1 :].strip()])
         sql = f"{sql[:pos]}map({', '.join(pairs)}){sql[j:]}"
     return sql
 
@@ -6046,12 +5959,7 @@ def expand_sql_macros(sql: str, macros: dict[str, dict]) -> str:
     )
     lower = {n.lower(): (n, spec) for n, spec in macros.items()}
     for _ in range(64):
-        spans = _literal_spans(sql)
-        m = None
-        for cand in name_re.finditer(sql):
-            if not any(a <= cand.start() < b for a, b in spans):
-                m = cand
-                break
+        m = _search_code(name_re, sql)
         if m is None:
             return sql
         _, spec = lower[m.group(1).lower()]
@@ -6180,34 +6088,6 @@ _CH_TYPES.update(
 )
 
 
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/bracket depth 0, outside string literals —
-    so parameterized types (``Decimal(10,2)``, ``Enum8('a'=1,'b'=2)``),
-    bracket literals (``[1,2]``), and quoted defaults never split a column
-    definition in half."""
-    out, depth, quote, start = [], 0, None, 0
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if quote:
-            if c == quote:
-                quote = None
-            elif c == "\\":
-                i += 1
-        elif c in "'\"":
-            quote = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == sep and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
-        i += 1
-    out.append(s[start:])
-    return [p for p in (p.strip() for p in out) if p]
-
-
 def parse_ch_type(tstr: str) -> tuple[T.DataType, bool]:
     """ClickHouse type string → (Spark DataType, nullable). Handles the
     wrapper/parameterized forms: Nullable, LowCardinality, Array,
@@ -6329,7 +6209,8 @@ def parse_ch_agg_type(args: str) -> tuple[str, T.DataType]:
 
 
 def _strip(sql: str) -> str:
-    sql = re.sub(r"--[^\n]*", "", sql)  # line comments (create_local.sql:1-2)
+    # line comments (create_local.sql:1-2) go; literals stay verbatim
+    sql = _OPAQUE_RE.sub(lambda m: "" if m.group().startswith("--") else m.group(), sql)
     return sql.strip().rstrip(";").strip()
 
 
@@ -7318,14 +7199,8 @@ def predicate_identifiers(pred: str) -> set[str]:
     keywords — used to decide whether a WHERE touches only projection
     columns. Conservative: any function call marks its name too, so an
     unknown function fails the subset check and routing is skipped."""
-    out: set[str] = set()
-    for i, seg in enumerate(re.split(r"('(?:[^'\\]|\\.)*')", pred)):
-        if i % 2:
-            continue
-        for w in re.findall(r"[A-Za-z_]\w*", seg):
-            if w.upper() not in _SQL_WORD_WHITELIST:
-                out.add(w)
-    return out
+    code = _OPAQUE_RE.sub(" ", pred)
+    return {w for w in re.findall(r"[A-Za-z_]\w*", code) if w.upper() not in _SQL_WORD_WHITELIST}
 
 
 

@@ -98,30 +98,6 @@ def _pos_ascii_hash_duckdb(expr: str) -> str:
     )
 
 
-def _gram_buckets_xengine(text_col: str | Column, num_buckets: int) -> Column:
-    """Cross-engine twin of :func:`_gram_buckets`: positional-ascii word
-    hashes (DuckDB-recomputable, O(1) per word) Horner-combined for
-    bigrams, mod ``num_buckets``. Single-space tokenization (string_split
-    parity). Same zero-shuffle projection shape as the production path."""
-    from clickhousedatamocker_spark.operators.dedup import _XA, _XP
-
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    words = F.filter(F.split(c, " "), lambda w: w != F.lit(""))
-    wh = F.transform(words, lambda w: _pos_ascii_hash(w))
-    unis = F.transform(wh, lambda h: F.pmod(h, F.lit(num_buckets)))
-    bis = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.slice(wh, 1, F.size(wh) - 1),
-            lambda h, i: F.pmod(
-                (h * F.lit(_XA) + F.element_at(wh, i + 2)) % F.lit(_XP),
-                F.lit(num_buckets),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return F.concat(unis, bis)
-
-
 def _with_gram_buckets(
     df: DataFrame,
     text_col: str,

@@ -136,15 +136,6 @@ def sq_decode(
     return df.drop("__sq_s")
 
 
-def _decode_col(code: Column, model: dict) -> Column:
-    """Decode expression over the raw binary code. NOTE: prefer
-    materializing ``decode(code, 'ISO-8859-1')`` as a real column and
-    calling :func:`_decode_str_col` — inlined here, the charset decode
-    re-runs once per DIMENSION (O(d²) bytes per row, the round-6
-    lambda-inlining class)."""
-    return _decode_str_col(F.decode(code, "ISO-8859-1"), model)
-
-
 def _decode_str_col(s: Column, model: dict) -> Column:
     lo, step = _scale_cols(model)
     d = len(model["lo"])

@@ -326,22 +326,6 @@ def common_token_fraction(df, df_table, text_col: str = "text", top_k: int = 30)
     return df.withColumn("common_token_fraction", frac)
 
 
-def ngram_hashes(col: str | Column, n: int = 8) -> Column:
-    """Array of xxhash64 hashes of token n-gram windows (US-separator
-    joined so token boundaries can't alias: 'ab c' != 'a bc'). Documents
-    shorter than n tokens yield an empty array — the sequence() guard
-    matters because sequence(0, negative) DESCENDS in Spark.
-
-    NOTE: the slice lambda references ``tk`` — nested directly in a
-    projection the optimizer inlines, the text re-splits once PER GRAM
-    (O(tokens²) chars/doc; measured 2.7x at sf0.1). Hot paths
-    (:func:`cross_doc_dup_stats`, :func:`remove_duplicated_spans`) go
-    through :func:`_with_tokens` + :func:`_ngram_hashes_of_tokens`, which
-    materialize the token array in its own projection first."""
-    tk = tokens(col)
-    return _ngram_hashes_of_tokens(tk, n)
-
-
 def _ngram_hashes_of_tokens(tk: Column, n: int) -> Column:
     return F.when(
         F.size(tk) >= n,

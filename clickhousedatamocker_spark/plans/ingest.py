@@ -289,8 +289,6 @@ class Writer:
         if self.metrics is not None:
             self.metrics.incr("InsertedRows", rows)
             self.metrics.incr("InsertedBytes", nbytes)
-            self.metrics.set("PartsActive", self.parts.active_parts_count(table, handle.path))
-            self.metrics.set("PartsCommitted", self.parts.active_parts_count(table, handle.path))
         return InsertResult(
             rows=rows,
             bytes_on_disk=nbytes,
@@ -352,16 +350,11 @@ class Writer:
                     shutil.move(os.path.join(staging, f), os.path.join(part_dir, f))
                 for n in names:
                     _remove_part(os.path.join(handle.path, n))
-                new_parts = self.parts.commit_parts(
+                return self.parts.commit_parts(
                     table, handle.path, [os.path.join(sub, f) for f in moved], retire=names
                 )
-                n_active = self.parts.active_parts_count(table, handle.path)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        if self.metrics is not None:
-            self.metrics.set("PartsActive", n_active)
-            self.metrics.set("PartsCommitted", n_active)
-        return new_parts
 
     def _rewrite_partitions(self, spark, handle: TableHandle, partitions, transform_for, n_files=None) -> int:
         """Rewrite ALL active parts of each listed partition through

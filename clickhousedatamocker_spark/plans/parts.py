@@ -60,8 +60,11 @@ def _locked(fn):
 
 
 class PartsInventory:
-    def __init__(self, database: str = "default"):
+    def __init__(self, database: str = "default", metrics=None):
         self.database = database
+        # the MetricsStore whose PartsActive/PartsCommitted gauges follow
+        # every commit and retire (None: no gauges)
+        self.metrics = metrics
         # Serializes manifest mutation between the insert path and the
         # background MergeScheduler thread (plans/merges.py): reentrant so
         # a locked caller can compose load/retire/record/save atomically.
@@ -79,7 +82,12 @@ class PartsInventory:
         return self._versions.get(table, 0)
 
     def _bump(self, table: str) -> None:
+        """Record a change to ``table``'s active parts: readers' caches go
+        stale and the part gauges take the new count."""
         self._versions[table] = self._versions.get(table, 0) + 1
+        if self.metrics is not None and table in self._active_counts:
+            self.metrics.set("PartsActive", self._active_counts[table])
+            self.metrics.set("PartsCommitted", self._active_counts[table])
 
     # -- commit log -------------------------------------------------------
     def _log_path(self, table_path: str) -> str:

@@ -184,6 +184,11 @@ def test_materialized_and_alias_columns(spark, tmp_warehouse):
         e.sql("INSERT INTO mc (a, b) VALUES (1, 999)")
     # expressions usable in WHERE through the dialect
     assert e.sql("SELECT count(*) AS n FROM mc WHERE c > 104").first()["n"] == 1
+    # INSERT SELECT keeps the same column contract as VALUES
+    with pytest.raises(ValueError, match="MATERIALIZED"):
+        e.sql("INSERT INTO mc (a, b) SELECT 1, 999")
+    e.sql("INSERT INTO mc SELECT 7")
+    assert e.sql("SELECT b, c FROM mc WHERE a = 7").first() == (14, 107)
 
 
 def test_exchange_validates_both_tables_first(spark, tmp_warehouse):

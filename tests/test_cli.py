@@ -16,6 +16,17 @@ def test_split_statements_quote_safe():
     assert _split_statements("SELECT ';' AS s; SELECT 1") == ["SELECT ';' AS s", "SELECT 1"]
     assert _split_statements('SELECT ";" ; x') == ['SELECT ";"', "x"]
     assert _split_statements("  ") == []
+    # an escaped quote does not close the literal; -- inside a literal is
+    # data, and a -- comment hides its ';' and quotes
+    assert _split_statements(r"SELECT 'it\'s; x' AS s; SELECT 2") == [
+        r"SELECT 'it\'s; x' AS s",
+        "SELECT 2",
+    ]
+    assert _split_statements("SELECT 'a--b;c' AS s; SELECT 3") == ["SELECT 'a--b;c' AS s", "SELECT 3"]
+    assert _split_statements("SELECT 1 -- don't; split\n; SELECT 4") == [
+        "SELECT 1 -- don't; split",
+        "SELECT 4",
+    ]
 
 
 def _run(wh, *args, input_text=None):

@@ -415,3 +415,28 @@ def test_table_read_skips_a_staged_rewrite(spark, tmp_warehouse, monkeypatch):
     assert engine.optimize("test_local", partition="2026010107") == 1
     assert counts == [3 * 400]
     _assert_parts_match_disk(engine, handle)
+
+
+@pytest.mark.parametrize("statement", ["DROP", "DETACH", "ATTACH"])
+def test_partition_ddl_keeps_the_part_gauges_current(spark, tmp_warehouse, statement):
+    """DROP, DETACH and ATTACH PARTITION change the active parts, so the
+    PartsActive / PartsCommitted gauges follow them as they follow inserts
+    and rewrites."""
+    engine = Engine(spark, tmp_warehouse)
+    create_test_local(engine)
+    gen = BatchGenerator(spark, seed=3, base_time=BASE)
+    hours = ("2026010107", "2026010108")
+    for i in range(3):
+        batch = gen.batch_with_partition(400, batch_no=i)
+        engine.insert("test_local", batch.filter(F.col("event_hour").isin(*map(int, hours))))
+    handle = engine.catalog.get("test_local")
+    if statement == "ATTACH":
+        engine.sql(f"ALTER TABLE test_local DETACH PARTITION '{hours[1]}'")
+        engine.insert("test_local", gen.batch_with_partition(400, batch_no=3).filter(
+            F.col("event_hour") == int(hours[0])
+        ))
+    engine.sql(f"ALTER TABLE test_local {statement} PARTITION '{hours[1]}'")
+    active = len(_active(engine, handle))
+    assert active == {"DROP": 3, "DETACH": 3, "ATTACH": 7}[statement]
+    assert engine.metrics.get("PartsActive") == active
+    assert engine.metrics.get("PartsCommitted") == active

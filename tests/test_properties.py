@@ -88,7 +88,8 @@ def test_parametric_rewriter_properties():
     from clickhousedatamocker_spark.functions.compat import translate_ch_sql as tr
 
     names = st.sampled_from(["x", "y", "col1", "nums"])
-    lits = st.sampled_from(["'(a,b'", "'))('", "1", "2.5", "'plain'"])
+    pool = ["'(a,b'", "'))('", "'plain'", *_TRICKY_LITS]
+    lits = st.sampled_from(["1", "2.5", *pool])
 
     def exprs(depth):
         if depth == 0:
@@ -103,28 +104,13 @@ def test_parametric_rewriter_properties():
             st.builds(lambda f, a: f"arrayFilter(x -> {f} > 0, {a})", sub, names),
         )
 
-    def balanced(s: str) -> bool:
-        depth, quote = 0, None
-        for ch in s:
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    return False
-        return depth == 0 and quote is None
-
     @given(exprs(3))
     @settings(max_examples=200, deadline=None)
     def check(e):
         out = tr(f"SELECT {e} FROM t")
-        assert balanced(out), out
-        low = out.lower()
+        code = _code(out, pool, e)
+        assert _balanced(code), out
+        low = code.lower()
         for spelled in ("arraymap(", "arrayfilter(", "multiif("):
             assert spelled not in low, out
         assert tr(out) == out  # idempotent fixpoint
@@ -139,22 +125,32 @@ def test_parametric_rewriter_properties():
 _IDENT = st.from_regex(r"c_[a-z0-9_]{0,5}", fullmatch=True)
 
 
-def _balanced(s: str) -> bool:
+# string literals whose payload looks like code to a rewrite that mistakes
+# what a literal is: an escaped quote, a comment opener, closers, a
+# statement separator and an alias keyword
+_TRICKY_LITS = [r"'it\'s)'", "'a--b'", "'x]; y'", "' AS z'"]
+
+
+def _code(out: str, pool, given: str = "") -> str:
+    """``out`` with each literal of ``pool`` blanked, after checking that
+    every literal of ``given`` (the rewrite's input) reached ``out``
+    verbatim, as often as the input holds it."""
+    for lit in sorted(pool, key=len, reverse=True):
+        assert out.count(lit) == given.count(lit), (lit, out)
+        out = out.replace(lit, " ")
+    return out
+
+
+def _balanced(code: str) -> bool:
+    """Literal-free text: no quote left, parentheses balanced."""
     depth = 0
-    quote = None
-    for c in s:
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0 and quote is None
+    for c in code:
+        if c in "'\"":
+            return False
+        depth += {"(": 1, ")": -1}.get(c, 0)
+        if depth < 0:
+            return False
+    return depth == 0
 
 
 @settings(max_examples=60, deadline=None)
@@ -172,7 +168,7 @@ def test_array_join_rewrite_laws(arrs, left, aliased):
     # laws: the CH spelling is gone, parens stay balanced, LEFT -> OUTER,
     # the rewrite is a fixpoint, and string literals never change
     assert "ARRAY JOIN" not in out.upper().replace("LATERAL VIEW", "")
-    assert _balanced(out)
+    assert _balanced(_code(out, []))
     assert ("OUTER" in out) == left
     assert _rewrite_array_join(out) == out
     lit = "SELECT 'keep ARRAY JOIN here' AS s FROM t"
@@ -183,19 +179,25 @@ def test_array_join_rewrite_laws(arrs, left, aliased):
 @given(
     st.lists(_IDENT, min_size=1, max_size=3, unique=True),
     st.integers(min_value=0, max_value=99),
+    st.sampled_from(_TRICKY_LITS),
 )
-def test_scalar_with_rewrite_laws(names, k):
+def test_scalar_with_rewrite_laws(names, k, lit):
     from clickhousedatamocker_spark.functions.compat import _rewrite_scalar_with
 
     clause = ", ".join(f"{k} + {i} AS {n}" for i, n in enumerate(names))
-    sql = f"WITH {clause} SELECT {' + '.join(names)} AS total FROM t WHERE {names[0]} > 0"
+    sql = (
+        f"WITH {clause}, {lit} AS lit_v SELECT {' + '.join(names)} AS total, "
+        f"lit_v AS s FROM t WHERE {names[0]} > 0"
+    )
     out = _rewrite_scalar_with(sql)
     # laws: no scalar-WITH prefix survives, every alias inlined as a
-    # parenthesized expression, balanced, fixpoint, CTE form untouched
+    # parenthesized expression (the literal verbatim), balanced, fixpoint,
+    # CTE form untouched
     assert not out.upper().lstrip().startswith("WITH")
     for i, n in enumerate(names):
         assert f"({k} + {i})" in out
-    assert _balanced(out)
+    assert f"({lit}) AS s" in out
+    assert _balanced(_code(out, [lit], lit))
     assert _rewrite_scalar_with(out) == out
     cte = f"WITH {names[0]} AS (SELECT 1 AS x) SELECT x FROM {names[0]}"
     assert _rewrite_scalar_with(cte) == cte
@@ -212,7 +214,8 @@ def test_bracket_rewriter_properties():
     from clickhousedatamocker_spark.functions.compat import translate_ch_sql as tr
 
     names = st.sampled_from(["x", "y", "col1", "t.arr"])
-    lits = st.sampled_from(["1", "2.5", "'[1,2]'", "'a,b]'", "'plain'"])
+    pool = ["'[1,2]'", "'a,b]'", "'plain'", "','", *_TRICKY_LITS]
+    lits = st.sampled_from(["1", "2.5", *pool])
 
     def exprs(depth):
         if depth == 0:
@@ -229,33 +232,15 @@ def test_bracket_rewriter_properties():
             st.builds(lambda c, a, b: f"CASE WHEN {c} > 0 THEN [{a}] ELSE [{b}] END", sub, sub, sub),
         )
 
-    def bracket_free_and_balanced(s: str) -> bool:
-        depth, quote = 0, None
-        for ch in s:
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "[":
-                return False
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    return False
-        return depth == 0 and quote is None
-
     @given(exprs(3))
     @settings(max_examples=200, deadline=None)
     def check(e):
         out = tr(f"SELECT {e} AS v FROM t")
-        assert bracket_free_and_balanced(out), out
+        # string-literal payloads survive byte-for-byte; the code around
+        # them is bracket-free and balanced
+        code = _code(out, pool, e)
+        assert "[" not in code and _balanced(code), out
         assert tr(out) == out, out  # full-translator fixpoint
-        # string-literal payloads survive byte-for-byte
-        if "'[1,2]'" in e:
-            assert "'[1,2]'" in out, out
 
     check()
 
@@ -322,8 +307,11 @@ def test_brace_map_rewriter_properties():
 
     from clickhousedatamocker_spark.functions.compat import translate_ch_sql as tr
 
-    keys = st.sampled_from(["'a'", "'k2'", "1", "'with {brace}'"])
-    vals0 = st.sampled_from(["1", "2.5", "'v'", "x", "'{not: a map}'"])
+    key_lits = ["'a'", "'k2'", "'with {brace}'", r"'k\'}'", "'a:b'"]
+    val_lits = ["'v'", "'{not: a map}'", *_TRICKY_LITS]
+    pool = key_lits + val_lits
+    keys = st.sampled_from(["1", *key_lits])
+    vals0 = st.sampled_from(["1", "2.5", "x", *val_lits])
 
     def maps(depth):
         v = vals0 if depth == 0 else st.one_of(vals0, maps(depth - 1))
@@ -331,32 +319,13 @@ def test_brace_map_rewriter_properties():
             lambda k1, v1, k2, v2: f"{{{k1}: {v1}, {k2}: {v2}}}", keys, v, keys, v
         )
 
-    def brace_free_balanced(s: str) -> bool:
-        depth, quote = 0, None
-        for ch in s:
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch in "{}":
-                return False
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    return False
-        return depth == 0 and quote is None
-
     @given(maps(2))
     @settings(max_examples=150, deadline=None)
     def check(e):
         out = tr(f"SELECT {e} AS v")
-        assert brace_free_balanced(out), out
+        code = _code(out, pool, e)
+        assert "{" not in code and "}" not in code and _balanced(code), out
         assert tr(out) == out, out
-        if "'{not: a map}'" in e:
-            assert "'{not: a map}'" in out, out
 
     check()
 
