@@ -58,6 +58,8 @@ _LIVE_VIEWS = {
 
 _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
 _ORDER_LIMIT_RE = re.compile(r"\b(ORDER\s+BY|LIMIT)\b", re.IGNORECASE)
+_DISTINCT_ON_RE = re.compile(r"\s*SELECT\s+DISTINCT\s+ON\s*\(([^)]+)\)\s*", re.IGNORECASE)
+_FROM_RE = re.compile(r"\s+FROM\s+", re.IGNORECASE)
 
 
 def _cut_order_limit(sql: str) -> tuple[str, str]:
@@ -2720,17 +2722,14 @@ class Engine:
         # (the survivor is arbitrary — exactly CH's contract); a top-level
         # trailing ORDER BY / LIMIT applies AFTER the dedup, so it is
         # hoisted outside the wrapper (depth-0 scan, subqueries untouched).
-        mdon = _re.match(
-            r"\s*SELECT\s+DISTINCT\s+ON\s*\(([^)]+)\)\s*(.+?)\s+FROM\s+(.+?);?\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if mdon is not None:
-            keys, items, rest = (
-                mdon.group(1).strip(),
-                mdon.group(2).strip(),
-                mdon.group(3),
-            )
+        from clickhousedatamocker_spark.functions.compat import find_top
+
+        mdon = _DISTINCT_ON_RE.match(query)
+        mfrom = mdon and find_top(query, _FROM_RE, mdon.end())
+        if mfrom:
+            keys = mdon.group(1).strip()
+            items = query[mdon.end() : mfrom.start()].strip()
+            rest = query[mfrom.end() :].rstrip().removesuffix(";")
             inner, tail = _cut_order_limit(rest)
             self.refresh_system_views(query)
             return self.spark.sql(

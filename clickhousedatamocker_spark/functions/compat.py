@@ -243,7 +243,7 @@ def extract_query_settings(query: str) -> tuple[str, dict[str, str]]:
     translation so result-changing settings can be routed onto real
     machinery; tuning-only clauses may also just flow through translation,
     which drops them."""
-    m = _QUERY_SETTINGS_RE.search(query)
+    m = _search_code(_QUERY_SETTINGS_RE, query)
     if m is None:
         return query, {}
     return query[: m.start()] + m.group(2), parse_query_settings(m.group(1))

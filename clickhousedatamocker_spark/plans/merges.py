@@ -33,7 +33,7 @@ from __future__ import annotations
 import threading
 import time
 
-from clickhousedatamocker_spark.plans.ingest import _merge_collapse, _sorted
+from clickhousedatamocker_spark.plans.ingest import _merge_collapse
 
 
 class MergeScheduler:
@@ -122,7 +122,7 @@ class MergeScheduler:
                 handle,
                 partition,
                 plist,
-                lambda df: _sorted(_merge_collapse(df, handle, family), handle.order_columns),
+                lambda df: _merge_collapse(df, handle, family),
             )
             if merged is not None and self.metrics is not None:
                 self.metrics.incr("MergedRows", sum(p["rows"] for p in plist))

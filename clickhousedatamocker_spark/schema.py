@@ -125,7 +125,8 @@ def test_local_spec() -> TableSpec:
             "parts_to_delay_insert": 150,
             "parts_to_throw_insert": 300,
             # toYYYYMMDDhh over the generator's 1-day spread → 24 distinct
-            # partition values per batch; sizes the ingest shuffle (ingest.py)
+            # partition values per batch; caps the insert exchange, which is
+            # min(partition_buckets, defaultParallelism) wide (ingest.py)
             "partition_buckets": 24,
         },
     )

@@ -58,10 +58,23 @@ class BatchGenerator:
 
         ``batch_no`` offsets the index space so successive batches don't
         repeat rows (the reference reseeds `random` per process instead).
+
+        Every batch of one size, ``batch_no`` 0 included, builds the same
+        plan and the same generated Java source, so an insert loop compiles
+        its generation stage once. A value that changes per batch must
+        therefore never be an inlined literal: Catalyst writes long, int and
+        timestamp literals into the source text (``100000L``), so each batch
+        would miss the code cache, compile two new classes and run them
+        interpreted until the JIT catches up. The offset is a decimal
+        literal, which generated code reads by reference, and the sum reads
+        ``id``, so constant folding cannot turn it back into a long literal;
+        the decimal round trip is exact for every long. The wall-clock
+        ``base_time=None`` is still an inlined timestamp literal, so that
+        mode compiles the stage per batch.
         """
         df = self.spark.range(0, n, 1, num_partitions) if num_partitions else self.spark.range(n)
-        if batch_no:
-            df = df.withColumn("id", F.col("id") + F.lit(batch_no * n))
+        offset = F.lit(batch_no * n).cast("decimal(38,0)")
+        df = df.withColumn("id", (F.col("id").cast("decimal(38,0)") + offset).cast("long"))
         return self.from_index(df)
 
     def from_index(self, df: DataFrame, base_time: str | None = None) -> DataFrame:
@@ -114,10 +127,15 @@ class BatchGenerator:
         return df.withColumn(PARTITION_COLUMN, to_yyyymmddhh(F.col("event_time")))
 
 
-def gen_oracle_sql(n: int, seed: int = 42, base_time: str = _DEFAULT_BASE_TIME) -> str:
+def gen_oracle_sql(
+    n: int, seed: int = 42, base_time: str = _DEFAULT_BASE_TIME, batch_no: int = 0
+) -> str:
     """DuckDB SQL computing the exact same batch (the correctness oracle for
-    the generator). Must stay formula-identical to :meth:`BatchGenerator.batch`.
+    the generator). Must stay formula-identical to :meth:`BatchGenerator.batch`,
+    including its ``batch_no`` offset of the index space.
     """
+    start = batch_no * n
+    index = f"range({start}, {start + n})" if start else f"range({n})"
     letters = (_LETTERS * 2).replace("'", "''")
     types_sql = ", ".join(f"'{t}'" for t in EVENT_TYPES)
 
@@ -137,7 +155,7 @@ SELECT
   '{{}}' AS metadata,
   TIMESTAMP '{base_time}' AS created_at,
   TIMESTAMP '{base_time}' AS updated_at
-FROM range({n}) t(i)
+FROM {index} t(i)
 """.strip()
 
 

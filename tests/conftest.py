@@ -96,10 +96,11 @@ def job_window(spark):
 
     The count is the window of the DAG scheduler's next job id, as
     ``perfbench/tracing.py`` takes it, so it sees jobs from every thread and
-    needs no listener. ``window.jobs`` is set when the block exits."""
+    needs no listener. ``window.jobs`` is set when the block exits, and
+    ``window.first`` is the id of the first job in the block."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    window = types.SimpleNamespace(jobs=None)
     first = int(dag.nextJobId())
+    window = types.SimpleNamespace(jobs=None, first=first)
     try:
         yield window
     finally:

@@ -57,9 +57,15 @@ def test_determinism_under_seed_and_partitioning(spark):
 
 def test_matches_duckdb_oracle(spark):
     bt = "2026-01-01 12:00:00"
-    rows = BatchGenerator(spark, seed=42, base_time=bt).batch(500).orderBy("id").collect()
-    orows = duckdb.connect().execute(gen_oracle_sql(500, seed=42, base_time=bt) + " ORDER BY id").fetchall()
-    assert [tuple(r) for r in rows] == [tuple(o) for o in orows]
+    gen = BatchGenerator(spark, seed=42, base_time=bt)
+    con = duckdb.connect()
+    for batch_no in (0, 1, 7):
+        df = gen.batch(500, batch_no=batch_no)
+        assert dict(df.dtypes)["id"] == "bigint"
+        rows = df.orderBy("id").collect()
+        sql = gen_oracle_sql(500, seed=42, base_time=bt, batch_no=batch_no)
+        orows = con.execute(sql + " ORDER BY id").fetchall()
+        assert [tuple(r) for r in rows] == [tuple(o) for o in orows], batch_no
 
 
 def test_batch_no_offsets_rows(spark):

@@ -17,6 +17,7 @@ from clickhousedatamocker_spark.functions import compat
 from clickhousedatamocker_spark.functions.compat import (
     _rsplit_top_as,
     _split_top,
+    extract_query_settings,
     scan,
     translate_ch_sql,
 )
@@ -76,6 +77,22 @@ def test_statements_with_escaped_quotes_and_dashes_in_literals(spark, tmp_wareho
         r"AND v <> 'it\'s ORDER BY' ORDER BY k"
     )
     assert [tuple(r) for r in qualify.collect()] == [(1, "a--b"), (2, "x--y"), (3, "don't LIMIT 1")]
+
+
+def test_query_settings_inside_a_literal_stay_in_the_query():
+    sql = "SELECT v FROM t WHERE v = 'x SETTINGS final=1'"
+    assert extract_query_settings(sql) == (sql, {})
+    assert extract_query_settings(sql + " SETTINGS final=1") == (sql, {"final": "1"})
+
+
+def test_distinct_on_splits_at_the_top_level_from(spark, tmp_warehouse):
+    e = Engine(spark, tmp_warehouse)
+    e.sql("CREATE TABLE t (k UInt64, v String) ENGINE = MergeTree() ORDER BY k")
+    e.sql("INSERT INTO t VALUES (1, 'a'), (1, 'b'), (2, 'c')")
+    rows = e.sql(
+        "SELECT DISTINCT ON (k) k, 'x FROM y' AS s, (SELECT max(v) FROM t) AS m FROM t ORDER BY k"
+    ).collect()
+    assert [tuple(r) for r in rows] == [(1, "x FROM y", "c"), (2, "x FROM y", "c")]
 
 
 # a hand-rolled quote tracker: ``elif c in "'\""`` or ``elif c in ("'", '"')``
