@@ -39,6 +39,7 @@ from clickhousedatamocker_spark.operators.similarity import (
     exact_rerank,
     topk_per_query,
 )
+from clickhousedatamocker_spark.schema import array_lit
 
 
 def bq_train(emb: DataFrame, vec_col: str = "embedding") -> dict:
@@ -71,7 +72,7 @@ def _encode_col(vec: Column, model: dict) -> Column:
     """array<bigint> of packed sign words: bit i of word w is set iff
     v[64w + i] > center[64w + i]. Each word is one ≤64-step JVM fold; the
     center ships as ONE array literal (the lsh_bucket literal discipline)."""
-    center = F.lit([float(c) for c in model["center"]])
+    center = array_lit(model["center"])
     d = len(model["center"])
     n_words = (d + 63) // 64
     words = []

@@ -42,6 +42,7 @@ from clickhousedatamocker_spark.operators.importance import (
     _LITERAL_MODEL_MAX,
     _with_gram_buckets,
 )
+from clickhousedatamocker_spark.schema import array_lit
 
 
 def _check_feature(feature: str) -> None:
@@ -129,7 +130,7 @@ def _margin_col(
     _check_feature(feature)
     num_buckets = len(weights)
     if num_buckets <= _LITERAL_MODEL_MAX:
-        wl = F.lit([float(w) for w in weights])
+        wl = array_lit(weights)
         with_b = _with_gram_buckets(docs, text_col, num_buckets, "__qb", use_xengine_hash)
         s = F.aggregate(
             F.col("__qb"),
@@ -315,7 +316,7 @@ def _with_residual(
     ``_LITERAL_MODEL_MAX`` (a fresh broadcast per epoch — weights change —
     which the caller releases after its gradient collect)."""
     if num_buckets <= _LITERAL_MODEL_MAX:
-        wl = F.lit([float(w) for w in weights])
+        wl = array_lit(weights)
         s = F.aggregate(
             F.col("__qb"),
             F.lit(0.0),
@@ -567,7 +568,7 @@ def classifier_predict_class(
 
         for i, lbl in enumerate(labels):
             w, b = models[lbl]
-            s = _lookup_sum(F.lit([float(x) for x in w]))
+            s = _lookup_sum(array_lit(w))
             sig = s / n if feature == "mean" else s
             # index-based internal names: label VALUES may contain dots or
             # spaces, which F.col parses as struct access
@@ -711,7 +712,7 @@ def exact_margins(
     Σ w[b]·cnt as DECIMAL(38,6) (exact, order-independent), z = bias +
     double(mdec) — ONE IEEE add, identical across engines. ``labels``
     carries (__id, __y); docs with no feature rows get mdec = 0."""
-    wl = F.lit([float(w) for w in weights])
+    wl = array_lit(weights)
     mar = (
         ex.filter(F.col("b") >= 0)
         .groupBy("__id")

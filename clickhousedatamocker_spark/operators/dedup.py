@@ -28,6 +28,8 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhousedatamocker_spark.schema import local_view
+
 
 def tokens(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -805,11 +807,12 @@ def connected_components(
                     lo, hi = (ra, rb) if ra < rb else (rb, ra)
                     parent[hi] = lo
             out = [(n, find(n)) for n in parent]
-            spark = pairs.sparkSession
             schema = pairs.select(
                 F.col(id_a).alias("node"), F.col(id_a).alias("component")
             ).schema
-            return spark.createDataFrame(out, schema)
+            # an Arrow local relation: the caller's join reads it without
+            # a Python worker
+            return local_view(pairs.sparkSession, out, schema)
         # big graph: fall through — the probe's partial evaluation is the
         # price of one limit-scan; the distributed path below recomputes
         # pairs once into the cached edge list exactly as before

@@ -12,15 +12,18 @@ Scale shape:
   corpus.
 - **Scoring is row-local**: per document, sum ``log p_target(b) -
   log p_background(b)`` over its gram buckets. Small models inline as ONE
-  array literal (all-JVM, codegen'd); large models ship once as a numpy
-  broadcast into an Arrow ``mapInPandas`` — the same literal/Arrow
-  auto-selection as the ANN codebook, so plan size stays O(1) in
-  ``num_buckets`` either way. Zero shuffle in both paths.
-- **Selection** takes the top fraction by (score DESC, id ASC) — a
+  array literal (``schema.array_lit``: one ``Literal`` node, built in 8
+  py4j calls instead of several per bucket), read by an interpreted
+  higher-order fold (``aggregate`` is not whole-stage codegen'd); large
+  models ship once as a numpy broadcast into an Arrow ``mapInPandas`` —
+  the same literal/Arrow auto-selection as the ANN codebook. Zero shuffle
+  in both paths.
+- **Selection** keeps the top fraction by (score DESC, id ASC) — a
   deterministic variant of DSIR's Gumbel resampling (ranking by score is
-  the zero-temperature limit). One global sort-limit; at 100 TB swap in a
-  per-partition threshold from a sampled quantile if the exact top-k sort
-  ever dominates.
+  the zero-temperature limit) — as a threshold FILTER: the k-th (score,
+  id) comes from a quantile-bracketed probe over a persisted 16-byte/row
+  projection (:func:`topk_threshold_filter`), so the selected slice keeps
+  the corpus's partitioning; no global sort-limit.
 
 Hashing and smoothing are fixed (xxhash64, add-one over bucket totals) so
 Spark and the pure-Python reference agree bit-for-bit on the same text.
@@ -32,10 +35,15 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from clickhousedatamocker_spark.schema import array_lit
 
 # above this bucket count the score lookup switches from one array literal
-# to an Arrow broadcast (same rationale as similarity._LITERAL_CODEBOOK_MAX:
-# literal arrays grow the expression tree linearly)
+# to an Arrow broadcast. The literal is one Literal node built in 8 py4j
+# calls whatever its length (schema.array_lit), so neither the expression
+# tree nor the build grows with the model; the bound is the literal's copy
+# serialized into every task
 _LITERAL_MODEL_MAX = 16_384
 
 
@@ -190,7 +198,7 @@ def dsir_score(
         math.log(t) - math.log(b) for t, b in zip(target_model, background_model)
     ]
     if num_buckets <= _LITERAL_MODEL_MAX:
-        lr = F.lit(logratio)
+        lr = array_lit(logratio)
         return (
             _with_gram_buckets(docs, text_col, num_buckets, "__dsir_b", use_xengine_hash)
             .withColumn(
@@ -208,7 +216,6 @@ def dsir_score(
     # does the bounded lookup-sum against the broadcast logratio vector
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     with_b = _with_gram_buckets(docs, text_col, num_buckets, "__b", use_xengine_hash)
     out_schema = T.StructType(docs.schema.fields + [T.StructField(out_col, T.DoubleType())])
@@ -374,6 +381,9 @@ def _kth_id_among_ties(ties: DataFrame, j: int, n_ties: int, eps: float, n: int)
     so no probe exceeds ~eps*n rows — possible only for numeric ids
     (every current call site); non-numeric ids fall back to the cheaper-
     end probe, which is exact but unbounded on pathological plateaus.
+    ``approxQuantile`` returns a double; an integral id is compared against
+    that pivot rounded to an integer (2^63 clamped to the long range), since
+    a double pivot would compare rounded ids once they pass 2^53.
     """
     budget = max(4096, int(eps * n) + 1)
     j_rev = n_ties - j + 1  # rank from the top end
@@ -382,6 +392,8 @@ def _kth_id_among_ties(ties: DataFrame, j: int, n_ties: int, eps: float, n: int)
             pivot = ties.approxQuantile("__i", [j / n_ties], eps)[0]
         except Exception:  # non-numeric id: documented fallback below
             pivot = None
+        if pivot is not None and isinstance(ties.schema["__i"].dataType, T.IntegralType):
+            pivot = min(round(pivot), 2**63 - 1)
         if pivot is not None:
             c = ties.agg(
                 F.sum((F.col("__i") < pivot).cast("long")).alias("lt"),

@@ -59,6 +59,7 @@ from clickhousedatamocker_spark.operators.similarity import (
     with_nearest_cid,
     with_probe_cids,
 )
+from clickhousedatamocker_spark.schema import array_lit
 
 
 def l2_normalize(vec: Column) -> Column:
@@ -348,19 +349,17 @@ def pq_topk_xengine(
         [0.5 * sum(x * x for x in codebooks[s][c]) for c in range(ksub)]
         for s in range(m)
     ]
-    # codebooks + half-norms as SINGLE nested-array literals consumed via
-    # lambda folds: a per-(subspace, centroid, dim) unrolled spelling puts
+    # codebooks + half-norms as ONE nested-array literal each
+    # (schema.array_lit: the values cross as one byte[] and fill the JVM
+    # block one innermost row at a time, O(m*ksub) py4j calls rather than
+    # several per float), consumed via lambda folds: a per-(subspace,
+    # centroid, dim) unrolled spelling puts
     # m*ksub*dsub expression nodes in the tree, and Catalyst pays
     # super-linear ANALYSIS cost on every fresh call (measured 4.3 s
     # planning-dominated vs 1.7 s for this shape at the default 8x8x8,
     # identical results)
-    b_lit = F.array(
-        *[
-            F.array(*[F.lit([float(x) for x in codebooks[s][c]]) for c in range(ksub)])
-            for s in range(m)
-        ]
-    )
-    h_lit = F.array(*[F.lit([float(h) for h in halfs[s]]) for s in range(m)])
+    b_lit = array_lit(codebooks)
+    h_lit = array_lit(halfs)
 
     def normed(col: Column) -> Column:
         nrm = F.sqrt(dot(col, col))

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clickhousedatamocker_spark.operators.similarity import as_double
+from clickhousedatamocker_spark.schema import array_lit
 
 # inline the component matrix as plan literals up to this many floats
 # (k * d); above it, broadcast numpy + one Arrow pass (plan size O(1))
@@ -137,7 +138,7 @@ def pca_project(
     if k * d <= _LITERAL_PCA_MAX:
         from clickhousedatamocker_spark.operators.similarity import materialize_col
 
-        mean_l = F.lit([float(x) for x in mean])
+        mean_l = array_lit(mean)
         # Generate barrier on the centered vector: the k per-component
         # folds each reference it, and CollapseProject would otherwise
         # inline (and re-run) the zip_with subtraction once per fold —
@@ -151,7 +152,7 @@ def pca_project(
                 F.aggregate(
                     F.zip_with(
                         F.col("__pca_c"),
-                        F.lit([float(x) for x in row]),
+                        array_lit(row),
                         lambda a, b: a * b,
                     ),
                     F.lit(0.0),

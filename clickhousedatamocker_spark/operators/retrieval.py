@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clickhousedatamocker_spark.operators.text_analysis import tokens
+from clickhousedatamocker_spark.schema import array_lit
 
 
 def _postings_and_counts(
@@ -427,7 +428,7 @@ def cosine_rank(
 
     from clickhousedatamocker_spark.operators.similarity import as_double, cosine
 
-    qv = F.lit([float(x) for x in query_vec])
+    qv = array_lit(query_vec)
     scored = (
         embeddings.select(
             F.col(id_col).alias(out_id),

@@ -38,6 +38,8 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from clickhousedatamocker_spark.schema import array_lit
+
 
 def as_double(vec: str | Column) -> Column:
     c = F.col(vec) if isinstance(vec, str) else vec
@@ -162,13 +164,14 @@ def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-bit bucket id of a vector under the hyperplane set.
 
-    Each plane ships as ONE array literal (``F.lit(list)``), not ``dim``
-    scalar literals — a 64x smaller expression tree, which is what keeps
-    Catalyst analysis + codegen fast when the codebook/plane set rebuilds
-    per call."""
+    Each plane ships as ONE array literal (``schema.array_lit``: a single
+    ``Literal`` node handed to the JVM in a fixed number of py4j calls),
+    not ``dim`` scalar literals — a 64x smaller expression tree, which is
+    what keeps Catalyst analysis + codegen fast when the codebook/plane
+    set rebuilds per call."""
     bucket = F.lit(0).cast("long")
     for i, w in enumerate(planes):
-        proj = dot(vec, F.lit([float(x) for x in w]))
+        proj = dot(vec, array_lit(w))
         bucket = bucket.bitwiseOR(F.when(proj >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long")))
     return bucket
 
@@ -214,14 +217,11 @@ def _centroid_array(centroids: list[list]) -> Column:
     SMALL-k path only (k <= _LITERAL_CODEBOOK_MAX): plan size grows with
     k, so large codebooks go through the Arrow broadcast path instead
     (with_probe_cids / with_nearest_cid auto-select). Each centroid vector
-    is ONE array literal — see lsh_bucket. An integer codebook (the
-    quantized cross-engine one) stays array<bigint>."""
-    if _is_int_book(centroids):
-        vec = lambda c: F.lit([int(x) for x in c]).cast("array<bigint>")  # noqa: E731
-    else:
-        vec = lambda c: F.lit([float(x) for x in c])  # noqa: E731
+    is ONE array literal (``schema.array_lit``) — see lsh_bucket. An
+    integer codebook (the quantized cross-engine one) stays array<bigint>."""
+    elem = "bigint" if _is_int_book(centroids) else "double"
     return F.array(
-        *[F.struct(F.lit(i).alias("cid"), vec(c).alias("cv")) for i, c in enumerate(centroids)]
+        *[F.struct(F.lit(i).alias("cid"), array_lit(c, elem).alias("cv")) for i, c in enumerate(centroids)]
     )
 
 
@@ -669,7 +669,7 @@ def _int_dot(a: Column, b: Column) -> Column:
 def lsh_bucket_int(qvec: Column, planes: list[list[int]]) -> Column:
     bucket = F.lit(0).cast("long")
     for i, w in enumerate(planes):
-        proj = _int_dot(qvec, F.lit([int(x) for x in w]).cast("array<bigint>"))
+        proj = _int_dot(qvec, array_lit(w, "bigint"))
         bucket = bucket.bitwiseOR(
             F.when(proj >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         )

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clickhousedatamocker_spark.operators.similarity import as_double
+from clickhousedatamocker_spark.schema import array_lit
 
 
 def sq_train(emb: DataFrame, vec_col: str = "embedding") -> dict:
@@ -55,10 +56,10 @@ def sq_train(emb: DataFrame, vec_col: str = "embedding") -> dict:
 
 
 def _scale_cols(model: dict) -> tuple[Column, Column]:
-    lo = F.lit([float(x) for x in model["lo"]])
+    lo = array_lit(model["lo"])
     # degenerate dimensions (hi == lo) quantize to byte 0 and decode to lo:
     # guard the step so the division can't hit 0 under ANSI mode
-    step = F.lit(
+    step = array_lit(
         [
             (float(h) - float(l)) / 255.0 if h > l else 1.0
             for l, h in zip(model["lo"], model["hi"])

@@ -8,6 +8,8 @@ generator spec, the TSV parser schema, and DDL emission.
 
 from __future__ import annotations
 
+import functools
+import types
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -83,6 +85,67 @@ def local_view(spark, rows: list[tuple], schema: T.StructType | str):
             arrays.append(pa.array(col, afield.type))
     table = pa.Table.from_arrays(arrays, schema=arrow_schema)
     return spark.createDataFrame(table, schema).coalesce(1)
+
+
+@functools.cache
+def _jvm_literal_entry_points(gateway):
+    """The static JVM members ``array_lit`` calls, resolved once per gateway:
+    a fresh lookup walks the package path one reflection command per
+    segment (25 commands, against 8 for the build itself)."""
+    jvm = gateway.jvm
+    nio = jvm.java.nio
+    return types.SimpleNamespace(
+        wrap=nio.ByteBuffer.wrap,
+        little_endian=nio.ByteOrder.LITTLE_ENDIAN,
+        primitive={"double": jvm.double, "long": jvm.long},
+        data_type=jvm.org.apache.spark.sql.types.DataType.fromJson,
+        literal=jvm.org.apache.spark.sql.catalyst.expressions.Literal.create,
+        column=jvm.org.apache.spark.sql.classic.ExpressionUtils.column,
+    )
+
+
+def array_lit(values, elem: str = "double"):
+    """A rectangular vector, matrix or 3-D block of numbers (a list or numpy
+    array) as ONE Catalyst array literal column of ``elem`` ("double" or
+    "bigint") elements.
+
+    ``F.lit(list)`` is ``array(*[lit(x) for x in list])``: several py4j
+    round trips per element. Here the values cross as one little-endian
+    ``byte[]`` and are copied into the JVM array one innermost row per
+    call, so the build costs O(rows) round trips (a vector of any length:
+    8). The column is non-nullable with ``containsNull=false`` at every
+    level, as ``F.lit(list)`` of non-null numbers types it; NaN, ±inf and
+    -0.0 are kept bit for bit. A ragged block or a bigint out of range
+    raises."""
+    import numpy as np
+    from pyspark.sql import Column
+    from pyspark.sql.utils import get_active_spark_context
+
+    np_type, spark_type, prim, view = {
+        "double": ("<f8", T.DoubleType(), "double", "asDoubleBuffer"),
+        "bigint": ("<i8", T.LongType(), "long", "asLongBuffer"),
+    }[elem]
+    a = np.asarray(values, dtype=np_type)
+    if a.ndim == 0:
+        raise ValueError("array_lit: need a vector, matrix or block, got a scalar")
+    dtype = spark_type
+    for _ in range(a.ndim):
+        dtype = T.ArrayType(dtype, containsNull=False)
+    gateway = get_active_spark_context()._gateway
+    jvm = _jvm_literal_entry_points(gateway)
+    buf = getattr(jvm.wrap(a.tobytes()).order(jvm.little_endian), view)()
+    arr = gateway.new_array(jvm.primitive[prim], *a.shape)
+
+    def fill(block, shape):
+        if len(shape) == 1:
+            buf.get(block)  # the buffer holds numpy's C order
+        else:
+            for i in range(shape[0]):
+                fill(block[i], shape[1:])
+
+    fill(arr, a.shape)
+    lit = jvm.literal(arr, jvm.data_type(dtype.json()))
+    return Column(jvm.column(lit))
 
 
 @dataclass

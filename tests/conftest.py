@@ -107,6 +107,26 @@ def job_window(spark):
         window.jobs = int(dag.nextJobId()) - first
 
 
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Count the py4j gateway commands the driver sends inside the ``with``
+    block: every JVM method call, field read, class lookup and object
+    release is one. ``window.calls`` counts up while the block runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    window = types.SimpleNamespace(calls=0)
+
+    def counted(*args, **kwargs):
+        window.calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield window
+    finally:
+        del client.send_command  # the class's own method again
+
+
 # -- the upstream reference snapshot ----------------------------------------
 #
 # PAPER.md §0 is written against a read-only snapshot of the upstream

@@ -170,15 +170,18 @@ def test_topk_threshold_filter_equals_sort_limit(spark):
     assert got == _topk_expected(rows, 7)
 
 
-def test_topk_threshold_filter_tie_plateau(spark):
+@pytest.mark.parametrize("offset", [0, 2**60, -(2**60)], ids=["0", "2^60", "-2^60"])
+def test_topk_threshold_filter_tie_plateau(spark, offset):
     """A giant equal-score plateau with the cut inside it exercises the
     id-bracketing path (_kth_id_among_ties with min side > its budget) —
-    the tie-break must stay exact and never touch a negated id."""
+    the tie-break must stay exact and never touch a negated id. Offset ids
+    lie past 2^53, where the quantile pivot's double cannot tell
+    neighbouring ids apart."""
     n, k = 10_000, 5_000
-    df = spark.range(n).select(F.col("id"), F.lit(1.0).alias("score"))
+    df = spark.range(n).select((F.col("id") + F.lit(offset)).alias("id"), F.lit(1.0).alias("score"))
     out = imp.topk_threshold_filter(df, "score", "id", k, n_rows=n)
     got = sorted(r["id"] for r in out.collect())
-    assert got == list(range(k))
+    assert got == [offset + i for i in range(k)]
 
 
 def test_topk_threshold_filter_preserves_partitioning(spark):

@@ -214,16 +214,19 @@ def test_range_join_is_equi_not_bnlj(spark):
 
 def test_connected_components_bounded_plan(spark):
     """Lineage must be truncated per round: after convergence the result
-    plan is a projection over a materialized RDD, not 12 nested joins."""
+    plan of the distributed path is a projection over a materialized RDD,
+    not 12 nested joins. The small-graph path (union-find on the driver)
+    returns an Arrow local relation, which holds no join either."""
     from clickhousedatamocker_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame([(i, i + 1) for i in range(12)], ["id_a", "id_b"])
-    comp = connected_components(pairs, max_iter=15)
-    rows = {r["node"]: r["component"] for r in comp.collect()}
-    assert rows == {i: 0 for i in range(13)}
-    plan = optimized_of(comp)
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan
-    assert "Join" not in plan, "per-round joins still embedded in the final plan"
+    for driver_threshold, leaf in [(0, ("ExistingRDD", "LogicalRDD")), (100_000, ("LocalRelation",))]:
+        comp = connected_components(pairs, max_iter=15, driver_threshold=driver_threshold)
+        rows = {r["node"]: r["component"] for r in comp.collect()}
+        assert rows == {i: 0 for i in range(13)}
+        plan = optimized_of(comp)
+        assert any(name in plan for name in leaf), plan
+        assert "Join" not in plan, "per-round joins still embedded in the final plan"
 
 
 def test_q6_pushdown_and_single_exchange(spark):
